@@ -54,21 +54,34 @@ object GpsQueries {
     * (lag/cumsum over event_id) oracle instead. When k events share a
     * second, their k GSV pairs all merge into that second's fix, so
     * n_sats_seen counts 8 per EVENT (sum of per-second event counts),
-    * not 8 per fix — at sf0.1 one device-hour has such a collision. */
+    * not 8 per fix — at sf0.1 one device-hour has such a collision.
+    *
+    * The device-hour summary gets its own exchange on (device, hour),
+    * though the assembly's device partitioning would already satisfy the
+    * groupBy. Without it the final ORDER BY's range exchange sits on the
+    * un-materialized assembly stage, and its RangePartitioner samples that
+    * input in a job of its own: the sort, windows and merge aggregates
+    * would all run twice per execution. With it, AQE materializes the
+    * fixes once and the sampler reads a small shuffle. Only the columns
+    * the summary reads ride it (the satellite arrays as their sizes). */
   private val nmeaFixPipeline = Q(
     (s, d) => {
       val fixes = FixAssembly.pipeline(NmeaSynth.readLog(s, d))
       FixAssembly.qualityFilter(fixes, minSats = 5, maxHdop = 8.0)
-        .groupBy(col("device"),
+        .select(col("device"),
           date_format(date_trunc("hour", col("fix_time")), "yyyy-MM-dd HH:00")
-            .as("hour"))
+            .as("hour"),
+          col("lat"), col("lon"), col("speed_knots"), col("hdop"),
+          size(col("sats_in_view")).as("n_sats"))
+        .repartition(col("device"), col("hour"))
+        .groupBy(col("device"), col("hour"))
         .agg(
           count(lit(1)).as("n_fixes"),
           round(avg(col("lat")), 6).as("avg_lat"),
           round(avg(col("lon")), 6).as("avg_lon"),
           r4(max(col("speed_knots"))).as("max_knots"),
           r4(avg(col("hdop"))).as("avg_hdop"),
-          sum(size(col("sats_in_view"))).as("n_sats_seen"))
+          sum(col("n_sats")).as("n_sats_seen"))
         .orderBy("device", "hour")
     },
     Some("""WITH f AS (

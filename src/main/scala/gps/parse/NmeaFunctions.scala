@@ -37,12 +37,14 @@ object NmeaFunctions {
     when(line.contains("*"),
       conv(substring_index(line, "*", -1), 16, 10).cast("int"))
 
-  /** True iff the line carries a checksum and it matches the XOR fold.
-    * `lenient = true` reproduces the reference (no validation, :168). */
+  /** True iff the line carries a checksum and it matches the XOR fold;
+    * false, never null, for a null line or one without a checksum.
+    * `lenient = true` reproduces the reference (no validation, :168).
+    * The declared checksum is evaluated once: it is null exactly when the
+    * comparison is, since the fold of a non-null line is never null. */
   def checksumValid(line: Column, lenient: Boolean = false): Column =
     if (lenient) lit(true)
-    else declaredChecksum(line).isNotNull &&
-      declaredChecksum(line) === checksum(payload(line))
+    else coalesce(declaredChecksum(line) === checksum(payload(line)), lit(false))
 
   /** Comma-split fields of the checksum-stripped payload; f(0) is the
     * sentence tag (the reference splits the raw line, :171 etc., leaving

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: print the executed (physical) plan of named queries —
   * the `.explain("formatted")` iteration loop for exchange/sort/codegen
   * auditing, without attaching a debugger or enabling the UI.
@@ -12,10 +10,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = DevSession.builder()
+      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
     engine.Core.pinOracleSession(spark)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

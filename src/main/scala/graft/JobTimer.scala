@@ -1,18 +1,16 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Dev harness: run one query and print per-job wall time + stage
-  * counts, to localize where a plan-bound query spends its seconds.
+/** Dev harness: run one query and print per-job wall time, and per
+  * stage its tasks, task CPU and shuffle bytes, to localize where a
+  * plan-bound query spends its seconds.
   *
   * {{{ sbt "runMain graft.JobTimer /root/testdata/sf0.1 search_prf" }}}
   */
 object JobTimer {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = DevSession.builder().getOrCreate()
     engine.Core.pinOracleSession(spark)
     spark.sparkContext.setLogLevel("ERROR")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
@@ -38,6 +36,13 @@ object JobTimer {
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         tasks.addAndGet(s.stageInfo.numTasks)
+        val i = s.stageInfo
+        val m = i.taskMetrics
+        println(f"  STAGE ${i.stageId}%3d  ${i.numTasks}%3d tasks" +
+          f"  cpu ${m.executorCpuTime / 1e9}%6.2f s" +
+          f"  shuffle read ${m.shuffleReadMetrics.totalBytesRead}%10d B" +
+          f"  write ${m.shuffleWriteMetrics.bytesWritten}%10d B" +
+          s"  ${i.name.takeWhile(_ != '\n')}")
       }
     })
     // warm-up for JIT/codegen parity with Bench

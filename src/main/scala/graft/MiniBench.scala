@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: time individual queries by name (2 runs each, drained
   * and GC'd in between, after an agg_hash warm-up) without paying for
   * the full 200+-query [[Bench]] sweep.
@@ -12,13 +10,7 @@ object MiniBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    // dev-harness core override (SPARK_GRAFT_CPUS, like Bench): the
-    // scale-adaptivity checks (e.g. recall-report lane fan-out at 8
-    // cores) need targeted low-core timings without a full sweep
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = DevSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     engine.Core.pinOracleSession(spark)
     // builder-iteration conf injection: SPARK_GRAFT_CONF="k=v;k2=v2"

@@ -1,13 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway: print the formatted plan of a named query. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = DevSession.builder().getOrCreate()
     engine.Core.pinOracleSession(spark)
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(args(1))(spark, args(0))

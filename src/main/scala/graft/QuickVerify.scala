@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: dump a SUBSET of queries (by name) plus their oracle SQL
   * for `tools/selfcheck.py`, without running all 60 like [[Verify]].
   * Writes one parquet dir and one `<name>.sql` per query; build
@@ -12,10 +10,8 @@ import org.apache.spark.sql.SparkSession
 object QuickVerify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = DevSession.builder()
+      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     engine.Core.pinOracleSession(spark)
     // oracle comparisons run at the pinned 16-cell operating points —

@@ -41,9 +41,7 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val scale = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = DevSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     engine.Core.pinOracleSession(spark)
     val base = "/root/testdata/sf0.1"

@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Forced-skew probe (r15 verdict item 1): the committed scale probes
   * all run on the driver's uniform/isotropic testdata, which hides the
@@ -25,9 +25,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    as the counterfactual the cap prevents.
   *
   * Evidence = per-op task BALANCE on the skewed run: max task time
-  * over the ideal (total task time / 32 cores). A bounded reducer keeps
-  * max ≈ ideal whatever the total work is; a straggler shows as
-  * max >> ideal. Balance — not max-task-vs-uniform — is the gate
+  * over the ideal (total task time / the session's cores). A bounded
+  * reducer keeps max ≈ ideal whatever the total work is; a straggler
+  * shows as max >> ideal. Balance — not max-task-vs-uniform — is the gate
   * because a hot cell legitimately ADDS work (the 12k-member cell
   * carries ~144M pair verifies that semantically must happen); the
   * salted/sub-blocked plans' job is to SPREAD that work, and spreading
@@ -44,7 +44,7 @@ object SkewProbe {
   val FlagRatio = 2.5
 
   /** Below this max-task time a run cannot meaningfully straggle —
-    * scheduling jitter dominates sub-second tasks at local[32]. */
+    * scheduling jitter dominates sub-second tasks. */
   val MinStragglerMs = 500L
 
   private class MaxTaskListener extends org.apache.spark.scheduler.SparkListener {
@@ -62,9 +62,8 @@ object SkewProbe {
 
   def main(args: Array[String]): Unit = {
     val scale = 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cores = DevSession.cores
+    val spark = DevSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     engine.Core.pinOracleSession(spark)
     val base = "/root/testdata/sf0.1"
@@ -127,10 +126,10 @@ object SkewProbe {
     val listener = new MaxTaskListener
     spark.sparkContext.addSparkListener(listener)
     case class Res(sec: Double, maxMs: Long, sumMs: Long, rows: Long) {
-      /** max task over the ideal (total task time spread over 32
-        * cores) — ≈1 is perfectly balanced, >> 1 is a straggler. */
+      /** max task over the ideal (total task time spread over the
+        * session's cores) — ≈1 is perfectly balanced, >> 1 is a straggler. */
       def balance: Double =
-        if (sumMs > 0) maxMs.toDouble / (sumMs.toDouble / 32.0) else 0.0
+        if (sumMs > 0) maxMs.toDouble / (sumMs.toDouble / cores) else 0.0
     }
     def measure(q: String, dir: String,
         confs: Map[String, String] = Map.empty): Res = {
@@ -225,7 +224,7 @@ object SkewProbe {
       java.nio.file.Paths.get("/root/repo/skewprobe.json"), json)
     println(s"SKEW wrote /root/repo/skewprobe.json")
     flagged.foreach(q => println(s"SKEW FLAG $q: skewed-run straggler " +
-      s"(max task > ${FlagRatio}x the 32-core ideal)"))
+      s"(max task > ${FlagRatio}x the $cores-core ideal)"))
     spark.stop()
     if (flagged.nonEmpty) sys.exit(1)
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev harness: run one streaming query with a progress listener and
@@ -14,10 +13,8 @@ object StreamProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = DevSession.builder()
+      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     engine.Core.pinOracleSession(spark)
     spark.streams.addListener(new StreamingQueryListener {

@@ -38,11 +38,8 @@ object TriggerProbe {
   val FlagRatio = 2.0
 
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = DevSession.builder()
+      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     engine.Core.pinOracleSession(spark)
     val base = "/root/testdata/sf0.1"

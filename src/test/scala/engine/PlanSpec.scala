@@ -54,6 +54,59 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     scans.map(_.partitionFilters.map(_.toString).mkString(", ")).mkString("\n")
   }
 
+  /** Costly operators that `q`'s range exchanges run twice, one entry per
+    * range exchange that has any. Before a range shuffle, Spark's
+    * RangePartitioner runs a sampling job over the exchange's input to pick
+    * its bounds. That job reads the shuffle files of the next exchange
+    * below, but re-runs everything between the two exchanges. A Window,
+    * ObjectHashAggregate, SortAggregate, join or Generate in that segment
+    * is a second evaluation of real work. A broadcast hash join is left
+    * out: its build side is a broadcast built once, so a re-run costs one
+    * probe per row. Walks the prepared plan, before any execution, so
+    * AQE's stages are not materialized yet. */
+  private def rangeSamplerReruns(q: String): Seq[Seq[String]] = {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec,
+      SortAggregateExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange,
+      ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+      BroadcastHashJoinExec}
+    import org.apache.spark.sql.execution.window.WindowExecBase
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children
+    }).flatMap(nodes)
+    def segment(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: Exchange | _: QueryStageExec | _: ReusedExchangeExec => Nil
+      case other => other +: other.children.flatMap(segment)
+    }
+    val exec = graft.SparkEntry.queries(q)(spark, sf)
+      .queryExecution.executedPlan
+    nodes(exec).collect {
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+        segment(e.child).filter {
+          case _: BroadcastHashJoinExec => false
+          case _: WindowExecBase | _: ObjectHashAggregateExec |
+              _: SortAggregateExec | _: BaseJoinExec | _: GenerateExec => true
+          case _ => false
+        }.map(_.nodeName)
+    }.filter(_.nonEmpty)
+  }
+
+  test("nmea_fix_pipeline: the ORDER BY's range sampler does not re-run " +
+      "fix assembly") {
+    val reruns = rangeSamplerReruns("nmea_fix_pipeline")
+    assert(reruns.isEmpty, "range exchange re-runs: " +
+      reruns.map(_.mkString(", ")).mkString("; "))
+  }
+
   test("join_inner_hash broadcasts the small dimension") {
     assert(plan("join_inner_hash").contains("BroadcastHashJoin"))
   }

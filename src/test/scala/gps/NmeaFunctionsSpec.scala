@@ -145,6 +145,63 @@ class NmeaFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ts(1).toInstant.toString.startsWith("1970-01-01"))
   }
 
+  test("checksumValid agrees with the two-evaluation formula on generated " +
+      "lines (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    // the formula that evaluated the declared checksum twice
+    def twice(line: org.apache.spark.sql.Column) =
+      NF.declaredChecksum(line).isNotNull &&
+        NF.declaredChecksum(line) === NF.checksum(NF.payload(line))
+    val bodyChar = Gen.frequency(8 -> Gen.numChar, 3 -> Gen.const(','),
+      2 -> Gen.const('.'), 2 -> Gen.alphaUpperChar, 1 -> Gen.alphaLowerChar,
+      1 -> Gen.const('*'), 1 -> Gen.oneOf(" -$!~"))
+    val line: Gen[Option[String]] = for {
+      stype <- Gen.oneOf("GPGGA", "GPGSA", "GPGSV", "GPRMC", "GPVTG", "GPZDA")
+      rest <- Gen.listOf(bodyChar).map(_.mkString)
+      body = s"$stype,$rest"
+      ck = body.getBytes("UTF-8").foldLeft(0)(_ ^ _) & 0xff
+      hex = f"$ck%02X"
+      suffix <- Gen.oneOf(
+        Gen.const(s"*$hex"),                            // correct
+        Gen.const(s"*${hex.toLowerCase}"),              // lowercase
+        Gen.choose(1, 255).map(x => f"*${ck ^ x}%02X"), // corrupt
+        Gen.const(""),                                  // missing
+        Gen.const("*"),                                 // empty
+        Gen.const(s"*${hex.take(1)}"),                  // truncated
+        Gen.listOfN(2, Gen.oneOf("GZgz!- .,")).map("*" + _.mkString), // non-hex
+        Gen.hexStr.map(h => s"*${h.take(6)}"))          // any short hex
+      full = s"$$$body$suffix"
+      cut <- Gen.frequency(6 -> Gen.const(full.length),
+        1 -> Gen.choose(0, full.length))                // truncated line
+      l <- Gen.frequency(20 -> Gen.const(Some(full.take(cut))),
+        1 -> Gen.const(None))
+    } yield l
+    // A sign after '*', or hex past Int.MaxValue, makes the declared
+    // checksum's int cast throw, under both formulas, so a batch agrees
+    // when both return the same rows or both throw the same error class.
+    def outcome(df: org.apache.spark.sql.DataFrame,
+        c: org.apache.spark.sql.Column) =
+      scala.util.Try(df.select(c).collect().map(_.get(0)).toSeq).toEither
+        .left.map(e => e.getClass.getName)
+    var seen = Set.empty[Any]
+    var thrown = 0
+    val prop = Prop.forAllNoShrink(Gen.listOfN(16, line)) { lines =>
+      val df = spark.sparkContext.parallelize(lines, 2).toDF("line")
+      val (a, b) = (outcome(df, twice($"line")),
+        outcome(df, NF.checksumValid($"line")))
+      b.foreach(seen ++= _)
+      if (b.isLeft) thrown += 1
+      a == b
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(40)
+      .withInitialSeed(Seed(20261017L)), prop)
+    assert(res.passed, res.status.toString)
+    // both outcomes occur, never null, and most batches compare rows
+    assert(seen == Set(true, false), s"checksumValid outcomes: $seen")
+    assert(thrown < 20, s"$thrown of 40 batches threw")
+  }
+
   test("deg2dec worked example: 4807.038,N → 48.1173 (code, not the wrong :333 comment)") {
     val df = Seq(("4807.038", "N"), ("4807.038", "S")).toDF("c", "h")
     val r = df.select(NF.deg2dec($"c", $"h")).as[Double].collect()
