@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import engine.Core.{t, r4}
 import engine.Q
 import gps.parse.{NmeaFunctions, NmeaSynth}
-import gps.stream.{FixAssembler, ParsedSentence}
+import gps.stream.FixAssembler
 
 /** Structured Streaming surface (SURVEY.md §2 B5, B38–B43).
   *
@@ -90,7 +90,7 @@ object StreamQueries {
     *    Disabling it can only drop INFERRED predicates (IsNotNull,
     *    transitive join filters) — an optimization, never semantics;
     *    every consumer of these runs stays oracle-gated.
-    *  - adaptive execution OFF (r19): AQE materializes every exchange
+    *  - adaptive execution OFF: AQE materializes every exchange
     *    as its own serialized query stage (a Spark job each, with a
     *    driver re-optimize between) — the right trade on TB shuffles,
     *    pure overhead on batch-sized trigger frames whose partition
@@ -350,7 +350,7 @@ object StreamQueries {
       // the last data batch); eviction semantics are pinned by
       // StreamingSpec's two-batch MemoryStream test, not by this run.
       // statePartitions: this op was the LAST stateful stream on the
-      // session-default 32 stores (r21 sized every other one) — two
+      // session-default 32 stores (every other one is sized) — two
       // stateful operators here (the watermark dedup + the agg) paid
       // 64 store commits per trigger. Same deployment-conf treatment as
       // the merge: per-trigger commit count is the cost driver, key
@@ -378,10 +378,15 @@ object StreamQueries {
     * by the assembler's event-time timeout. The single `__wm__` heartbeat
     * line (1h past the last event) advances the final watermark so every
     * device's last open fix flushes via timeout — the heartbeat's own fix
-    * is behind the final watermark and is never emitted. */
+    * is behind the final watermark and is never emitted.
+    *
+    * The fold reads a 17-column, array-free row per sentence and keys by
+    * the `device` column, so the parse computes only what a fix keeps.
+    * Parse and fold are the bulk of this op's task CPU; its parse is
+    * deliberately kept out of whole-stage codegen (see
+    * NmeaFunctions.parseSentences). */
   private val streamStatefulMerge = Q(
     (s, d) => {
-      import s.implicits._
       val lines = NmeaSynth.readLog(s, d)
       val hbTs = col("mx") + expr("INTERVAL 1 HOUR")
       val heartbeat = t(s, d, "events")
@@ -401,12 +406,11 @@ object StreamQueries {
         s"mergev3_${d.replaceAll("[^a-zA-Z0-9]", "_")}",
         orderedBy = Some("line_no"), maxFilesPerTrigger =
           Some(s.conf.get("spark.graft.merge.filesPerTrigger", "16").toInt))
-      val parsed = NmeaFunctions.parseSentences(src).as[ParsedSentence]
-      val fixes = FixAssembler.assemble(parsed)
+      val fixes = FixAssembler.assemble(NmeaFunctions.parseSentences(src))
       // ~150 devices ⇒ 8 state partitions: assembly parallelism is
       // capped by device count anyway (~19 devices/store at 8), and
       // every halving of the store count halves per-trigger WAL+commit
-      // IO across the multi-trigger run — measured on the r21 box:
+      // IO across the multi-trigger run — measured on an earlier box:
       // 16 stores ≈ 12.6-13.8 s, 8 ≈ 6.4 s, 4 ≈ 6.4 s (flat past 8),
       // so 8 keeps the parallelism headroom at the IO floor. A real
       // deployment sizes this in the job conf (the override below).
@@ -542,7 +546,7 @@ object StreamQueries {
         // by a total sequence is associative, so any split folds to the
         // same state (StreamSourceSpec pins the 11-files = 3-round split
         // against this default); each extra trigger costs a full state
-        // read+rewrite+commit cycle (r12 verdict item 5)
+        // read+rewrite+commit cycle
         s"upsert_${san}", orderedBy = Some("event_id"),
         maxFilesPerTrigger =
           Some(s.conf.get("spark.graft.upsert.mft", "32").toInt))
@@ -936,9 +940,9 @@ object StreamQueries {
     out.result().iterator
   }
 
-  /** B5f: STREAMING as-of enrich — join_asof's streaming twin (r14
-    * verdict item 7), the price-as-of-trade / config-as-of-event merge
-    * every real pipeline runs daily: an event stream is enriched with
+  /** B5f: STREAMING as-of enrich — join_asof's streaming twin, the
+    * price-as-of-trade / config-as-of-event merge every real pipeline
+    * runs daily: an event stream is enriched with
     * the LATEST-at-or-before dimension version, generalizing the
     * reference's `$CurrentUTC` carry-forward (class.nmea.parser.php:22,
     * :227-243 — each sentence stamped with the last time seen) from one

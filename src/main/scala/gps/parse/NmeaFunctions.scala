@@ -4,10 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Column-expression NMEA parsing library — every transform of the
-  * reference parser (/root/reference/class.nmea.parser.php) re-expressed as
-  * pure Catalyst column math, so the whole parse stays inside whole-stage
-  * codegen (no UDFs on the hot path; ≥1e5 lines/s/core target,
-  * BASELINE.md).
+  * reference parser (class.nmea.parser.php) re-expressed as pure Catalyst
+  * column math: no UDFs on the hot path, and every generated method small
+  * enough to JIT-compile (≥1e5 lines/s/core target, BASELINE.md).
   *
   * Corrections over the reference (SURVEY.md §1.5): checksums are
   * validated (XOR fold — the reference never checks, :168) and stripped
@@ -32,10 +31,17 @@ object NmeaFunctions {
     * dominated the whole pipeline at bench scale). */
   def checksum(payloadCol: Column): Column = NmeaChecksum(payloadCol)
 
-  /** Declared checksum suffix (hex after '*'), as an int; null if absent. */
-  def declaredChecksum(line: Column): Column =
-    when(line.contains("*"),
-      conv(substring_index(line, "*", -1), 16, 10).cast("int"))
+  /** Declared checksum suffix (hex after '*'), as an int; null if absent,
+    * and null, not an error, if it does not fit an int: `conv` reads a
+    * signed suffix (`*-7`) as 2^64 - 7, `*80000000` is past Int.MaxValue,
+    * and under ANSI `conv` itself throws past 16 hex digits, so a suffix
+    * that long is not converted (a real one has two). Such a line fails
+    * [[checksumValid]] and is dropped, instead of failing the query. */
+  def declaredChecksum(line: Column): Column = {
+    val hex = substring_index(line, "*", -1)
+    when(line.contains("*") && length(hex) <= 16,
+      conv(hex, 16, 10).try_cast("int"))
+  }
 
   /** True iff the line carries a checksum and it matches the XOR fold;
     * false, never null, for a null line or one without a checksum.
@@ -179,6 +185,18 @@ object NmeaFunctions {
     * Input must have columns `line` (raw sentence) plus any passthrough
     * columns (device, line_no). Single projection — no per-type
     * union/shuffle — so it vectorizes over a text scan at scale.
+    *
+    * The wide projection stays OUT of whole-stage codegen, on purpose: its
+    * `filter` higher-order functions (GSA's `sats`, GSV's `sats_in_view`)
+    * are CodegenFallback, so Spark runs it as a plain projection whose
+    * generated code is split into small methods (under 1 KB each) that
+    * HotSpot JIT-compiles. A HOF-free form of the same projection fuses
+    * into one `processNext` of about 28 KB. HotSpot never compiles a
+    * method over 8000 bytes (`DontCompileHugeMethods`), so that form runs
+    * interpreted, which costs about what the HOFs save. A consumer
+    * that prunes columns must keep one HOF column live, as
+    * FixAssembler.assemble does with `size(sats_in_view)`. PlanSpec pins
+    * every whole-stage-codegen method of the parse paths at ≤ 8000 bytes.
     */
   def parseSentences(df: DataFrame, lenient: Boolean = false): DataFrame = {
     val passthrough = df.columns.filter(_ != "line").map(col).toSeq

@@ -1,45 +1,33 @@
 package gps.stream
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, size, when}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import gps.model.SatView
+import gps.model.GpsFix.SentenceTypes
 
-/** One parsed NMEA sentence — the typed row produced by
-  * NmeaFunctions.parseSentences (column order irrelevant; names bind). */
+/** One parsed NMEA sentence, narrowed to the fields a [[StreamFix]] is built
+  * from: [[FixAssembler.assemble]] selects these from the output of
+  * NmeaFunctions.parseSentences (names bind, column order is free), with
+  * the GSV satellite list reduced to its count. No field is an array, so
+  * neither this row's encoder nor the state's needs MapObjects. */
 case class ParsedSentence(
     device: String,
     line_no: Long,
     stype: String,
     utc: Option[String],
     date: Option[String],
+    fix_time: Option[java.sql.Timestamp],
     lat: Option[Double],
     lon: Option[Double],
-    ns: Option[String],
-    ew: Option[String],
     quality: Option[Int],
     numsat: Option[Int],
     hdop: Option[Double],
     vdop: Option[Double],
-    pdop: Option[Double],
     alt: Option[Double],
-    geoidal: Option[Double],
-    dgps_age: Option[Double],
-    dgps_station: Option[String],
-    status: Option[String],
-    select_mode: Option[String],
-    fix_mode: Option[Int],
-    sats: Option[Seq[Int]],
-    gsv_messages: Option[Int],
-    gsv_msgnum: Option[Int],
-    satview: Option[Int],
-    sats_in_view: Option[Seq[SatView]],
     speed_knots: Option[Double],
     speed_kmph: Option[Double],
     track_deg: Option[Double],
-    track_mag_deg: Option[Double],
-    magvar: Option[Double],
-    magvar_ew: Option[String],
-    fix_time: Option[java.sql.Timestamp])
+    n_sats_view: Option[Int])
 
 /** An emitted (closed) GPS fix. */
 case class StreamFix(
@@ -65,16 +53,23 @@ case class StreamFix(
   * reference's `$CurrentUTC` cursor + `$Nmea[$CurrentUTC]` open row
   * (class.nmea.parser.php:22,25), except bounded: closed fixes are emitted
   * downstream instead of accumulating forever (the reference never evicts —
-  * SURVEY.md §4.2). `types` is the sentence-type flag set of the open fix
-  * (:173 etc.), mirroring the batch assembly's `types_seen`. */
+  * SURVEY.md §4.2). `current.n_sats_view` holds the satellites counted so
+  * far; `types` is the open fix's sentence-type flag set (:173 etc.) as a
+  * bitmask over [[gps.model.GpsFix.SentenceTypes]]. */
 case class FixBuffer(current: Option[ParsedSentence], maxLineNo: Long,
-    types: Seq[String])
+    types: Int)
 
 /** Streaming GPS-fix assembly — the flagship stateful operator (SURVEY.md
-  * B42). `flatMapGroupsWithState` keyed by device; sentences are folded in
-  * arrival (`line_no`) order; a timestamped sentence whose utc differs from
-  * the open fix closes it (emit), mirroring ParseLine's behavior one-to-one
-  * while scaling across devices/executors.
+  * B42). `flatMapGroupsWithState` keyed by the `device` column; sentences
+  * are folded in arrival (`line_no`) order; a timestamped sentence whose
+  * utc differs from the open fix closes it (emit), mirroring ParseLine's
+  * behavior one-to-one while scaling across devices/executors.
+  *
+  * The typed boundary is kept flat. The fold reads only the 17 columns of
+  * [[ParsedSentence]], so Catalyst prunes every other parse column (GSA's
+  * `sats`, the GSV slot details, magvar, ...) out of the parse projection;
+  * grouping by the column needs no per-row deserialization to find the
+  * key; and no input, state or output encoder has an array field.
   */
 object FixAssembler {
 
@@ -82,97 +77,63 @@ object FixAssembler {
   private def goodEnough(p: ParsedSentence): Boolean =
     p.date.isDefined && p.utc.isDefined && p.lat.isDefined && p.lon.isDefined
 
+  private def typeBit(stype: String): Int = 1 << SentenceTypes.indexOf(stype)
+
   /** Mutable working copy of the open fix for one trigger's fold — the
     * last-writer-wins field merge of `$Nmea[$CurrentUTC][field] = value`
-    * (class.nmea.parser.php:173-187 etc.). An earlier immutable
-    * formulation allocated a fresh 33-field ParsedSentence (plus a
-    * FixBuffer and a types copy) per SENTENCE — ~600k short-lived objects
-    * per bench run, whose GC pressure was the main run-to-run variance of
-    * the flagship under a loaded heap. Folding into vars allocates only
-    * per fix OPEN/CLOSE (~6x less): last writer wins, GSV satellite lists
-    * accumulate, `utc` pinned at open. `types` prepends (order-free:
-    * types_seen is distinct+sorted at emit). */
-  private final class OpenFix(p: ParsedSentence, var types: List[String]) {
+    * (class.nmea.parser.php:173-187 etc.). Folding into vars allocates
+    * only per fix open/close, not per sentence: last writer wins, GSV
+    * satellite counts add up (:261 intended semantics: every satellite of
+    * the group is kept), `utc` is pinned at open. */
+  private final class OpenFix(p: ParsedSentence, var types: Int) {
     val utc = p.utc // fix key — constant within the open fix
     var line_no = p.line_no; var stype = p.stype
-    var date = p.date; var lat = p.lat; var lon = p.lon
-    var ns = p.ns; var ew = p.ew; var quality = p.quality
+    var date = p.date; var fix_time = p.fix_time
+    var lat = p.lat; var lon = p.lon; var quality = p.quality
     var numsat = p.numsat; var hdop = p.hdop; var vdop = p.vdop
-    var pdop = p.pdop; var alt = p.alt; var geoidal = p.geoidal
-    var dgps_age = p.dgps_age; var dgps_station = p.dgps_station
-    var status = p.status; var select_mode = p.select_mode
-    var fix_mode = p.fix_mode; var sats = p.sats
-    var gsv_messages = p.gsv_messages; var gsv_msgnum = p.gsv_msgnum
-    var satview = p.satview; var sats_in_view = p.sats_in_view
-    var speed_knots = p.speed_knots; var speed_kmph = p.speed_kmph
-    var track_deg = p.track_deg; var track_mag_deg = p.track_mag_deg
-    var magvar = p.magvar; var magvar_ew = p.magvar_ew
-    var fix_time = p.fix_time
+    var alt = p.alt; var speed_knots = p.speed_knots
+    var speed_kmph = p.speed_kmph; var track_deg = p.track_deg
+    var n_sats_view = p.n_sats_view.getOrElse(0)
 
     def add(s: ParsedSentence): Unit = {
       line_no = s.line_no; stype = s.stype
       if (s.date.isDefined) date = s.date
+      if (s.fix_time.isDefined) fix_time = s.fix_time
       if (s.lat.isDefined) lat = s.lat
       if (s.lon.isDefined) lon = s.lon
-      if (s.ns.isDefined) ns = s.ns
-      if (s.ew.isDefined) ew = s.ew
       if (s.quality.isDefined) quality = s.quality
       if (s.numsat.isDefined) numsat = s.numsat
       if (s.hdop.isDefined) hdop = s.hdop
       if (s.vdop.isDefined) vdop = s.vdop
-      if (s.pdop.isDefined) pdop = s.pdop
       if (s.alt.isDefined) alt = s.alt
-      if (s.geoidal.isDefined) geoidal = s.geoidal
-      if (s.dgps_age.isDefined) dgps_age = s.dgps_age
-      if (s.dgps_station.isDefined) dgps_station = s.dgps_station
-      if (s.status.isDefined) status = s.status
-      if (s.select_mode.isDefined) select_mode = s.select_mode
-      if (s.fix_mode.isDefined) fix_mode = s.fix_mode
-      if (s.sats.isDefined) sats = s.sats
-      if (s.gsv_messages.isDefined) gsv_messages = s.gsv_messages
-      if (s.gsv_msgnum.isDefined) gsv_msgnum = s.gsv_msgnum
-      if (s.satview.isDefined) satview = s.satview
-      // GSV groups accumulate (:261 intended semantics), others overwrite
-      sats_in_view = (sats_in_view, s.sats_in_view) match {
-        case (Some(a), Some(c)) => Some(a ++ c)
-        case (a, c) => c.orElse(a)
-      }
       if (s.speed_knots.isDefined) speed_knots = s.speed_knots
       if (s.speed_kmph.isDefined) speed_kmph = s.speed_kmph
       if (s.track_deg.isDefined) track_deg = s.track_deg
-      if (s.track_mag_deg.isDefined) track_mag_deg = s.track_mag_deg
-      if (s.magvar.isDefined) magvar = s.magvar
-      if (s.magvar_ew.isDefined) magvar_ew = s.magvar_ew
-      if (s.fix_time.isDefined) fix_time = s.fix_time
-      types ::= s.stype
+      n_sats_view += s.n_sats_view.getOrElse(0)
+      types |= typeBit(s.stype)
     }
 
     def toSentence(device: String): ParsedSentence = ParsedSentence(
       device = device, line_no = line_no, stype = stype, utc = utc,
-      date = date, lat = lat, lon = lon, ns = ns, ew = ew,
+      date = date, fix_time = fix_time, lat = lat, lon = lon,
       quality = quality, numsat = numsat, hdop = hdop, vdop = vdop,
-      pdop = pdop, alt = alt, geoidal = geoidal, dgps_age = dgps_age,
-      dgps_station = dgps_station, status = status,
-      select_mode = select_mode, fix_mode = fix_mode, sats = sats,
-      gsv_messages = gsv_messages, gsv_msgnum = gsv_msgnum,
-      satview = satview, sats_in_view = sats_in_view,
-      speed_knots = speed_knots, speed_kmph = speed_kmph,
-      track_deg = track_deg, track_mag_deg = track_mag_deg,
-      magvar = magvar, magvar_ew = magvar_ew, fix_time = fix_time)
+      alt = alt, speed_knots = speed_knots, speed_kmph = speed_kmph,
+      track_deg = track_deg, n_sats_view = Some(n_sats_view))
   }
 
-  private[stream] def toFix(p: ParsedSentence, types: Seq[String]): StreamFix =
+  private def toFix(p: ParsedSentence, types: Int): StreamFix =
     StreamFix(
       device = p.device, utc = p.utc.getOrElse(""), date = p.date,
       fix_time = p.fix_time, lat = p.lat, lon = p.lon, quality = p.quality,
       numsat = p.numsat, hdop = p.hdop, vdop = p.vdop, alt = p.alt,
       speed_knots = p.speed_knots, speed_kmph = p.speed_kmph,
       track_deg = p.track_deg,
-      n_sats_view = p.sats_in_view.map(_.size).getOrElse(0),
+      n_sats_view = p.n_sats_view.getOrElse(0),
       complete = goodEnough(p),
-      // sorted distinct flag set — same encoding as the batch assembly's
+      // SentenceTypes is sorted, so this is the batch assembly's
       // array_join(array_sort(collect_set(stype)), ",")
-      types_seen = types.distinct.sorted.mkString(","))
+      types_seen = SentenceTypes.indices.filter(i => (types >> i & 1) == 1)
+        .map(SentenceTypes).mkString(","))
 
   /** Watermark delay AND per-fix eviction cushion. A fix whose device has
     * been silent for this long past the fix's own event time is closed and
@@ -194,10 +155,10 @@ object FixAssembler {
       state: GroupState[FixBuffer]): Iterator[StreamFix] = {
     if (evict && state.hasTimedOut) {
       // Silent device: close and emit the open fix, drop the state.
-      // Known tradeoff (r3 advisor): removal also discards maxLineNo, the
-      // replay high-water mark — a duplicate line replayed AFTER eviction
-      // but still inside the watermark window re-assembles as a fresh fix
-      // and can double-emit. Accepted: eviction fires one full cushion
+      // Known tradeoff: removal also discards maxLineNo, the replay
+      // high-water mark — a duplicate line replayed AFTER eviction but
+      // still inside the watermark window re-assembles as a fresh fix and
+      // can double-emit. Accepted: eviction fires one full cushion
       // (10 min) past the fix's own event time, so such a replay must be
       // >10 min late yet non-late by watermark — impossible here, since
       // the cushion equals the watermark delay; keeping tombstones would
@@ -209,10 +170,9 @@ object FixAssembler {
       return out.iterator
     }
     val sorted = it.toSeq.sortBy(_.line_no)
-    val prior = state.getOption.getOrElse(FixBuffer(None, -1L, Nil))
+    val prior = state.getOption.getOrElse(FixBuffer(None, -1L, 0))
     var maxLineNo = prior.maxLineNo
-    var open: OpenFix =
-      prior.current.map(new OpenFix(_, prior.types.toList)).orNull
+    var open: OpenFix = prior.current.map(new OpenFix(_, prior.types)).orNull
     val out = Seq.newBuilder[StreamFix]
     sorted.foreach { s =>
       // replayed/duplicate lines at or before the high-water mark are
@@ -226,7 +186,7 @@ object FixAssembler {
             val p = open.toSentence(device)
             if (goodEnough(p)) out += toFix(p, open.types)
           }
-          open = new OpenFix(s, s.stype :: Nil)
+          open = new OpenFix(s, typeBit(s.stype))
         } else if (open != null) {
           open.add(s)
         }
@@ -236,7 +196,7 @@ object FixAssembler {
       }
     }
     val buf =
-      if (open == null) FixBuffer(None, maxLineNo, Nil)
+      if (open == null) FixBuffer(None, maxLineNo, 0)
       else FixBuffer(Some(open.toSentence(device)), maxLineNo, open.types)
     state.update(buf)
     if (evict) {
@@ -244,19 +204,24 @@ object FixAssembler {
       // event time anchors the timeout; a fix that has no RMC yet inherits
       // the current watermark as its anchor (it still evicts one cushion
       // after the stream moves on). Both anchors are >= the current
-      // watermark, which setTimeoutTimestamp requires.
-      val anchor = buf.current.flatMap(_.fix_time).map(_.getTime)
-        .getOrElse(state.getCurrentWatermarkMs())
-      state.setTimeoutTimestamp(math.max(anchor,
-        state.getCurrentWatermarkMs()) + CushionMs)
+      // watermark, which setTimeoutTimestamp requires. Before the first
+      // watermark there is no anchor for a fix without an RMC: it stays
+      // unarmed until its device's next sentence. Anchoring it on the
+      // initial zero watermark would evict it at the first advance and
+      // split the fix at the first trigger boundary. Such a fix cannot be
+      // emitted without an RMC, so the unarmed state never holds output.
+      val wm = state.getCurrentWatermarkMs()
+      buf.current.flatMap(_.fix_time).map(_.getTime)
+        .orElse(Some(wm).filter(_ > 0))
+        .foreach(a => state.setTimeoutTimestamp(math.max(a, wm) + CushionMs))
     }
     out.result().iterator
   }
 
-  /** Streaming assembly over parsed sentences, with event-time state
-    * eviction (watermark on `fix_time`, carried by RMC sentences). On a
-    * batch Dataset the watermark node is erased by the analyzer, so the
-    * batch path runs the identical fold without timeouts.
+  /** Assembly over the output of NmeaFunctions.parseSentences, streaming
+    * or batch. A stream gets event-time state eviction (watermark on
+    * `fix_time`, carried by RMC sentences); a batch frame runs the
+    * identical fold without timeouts.
     *
     * Eviction IS the watermark contract: a sentence arriving more than
     * [[WatermarkDelay]] of event time after its fix opened may find the
@@ -264,21 +229,27 @@ object FixAssembler {
     * then differs from batch for that fix. That horizon is the necessary
     * price of bounded state (the alternative is the reference's
     * grow-forever map); real fixes span ~1 second, so the 10-minute
-    * cushion is ~600x the observed intra-fix spread. */
-  def assemble(parsed: Dataset[ParsedSentence]): Dataset[StreamFix] = {
+    * cushion is ~600x the observed intra-fix spread.
+    *
+    * `size(sats_in_view)` keeps the parse's GSV `filter` higher-order
+    * function live, which keeps the parse projection out of whole-stage
+    * codegen; see NmeaFunctions.parseSentences for why that matters. */
+  def assemble(parsed: DataFrame): Dataset[StreamFix] = {
     import parsed.sparkSession.implicits._
-    if (parsed.isStreaming)
-      parsed.withWatermark("fix_time", WatermarkDelay)
-        .groupByKey(_.device)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(processGroup(evict = true))
-    else
-      parsed.groupByKey(_.device)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(processGroup(evict = false))
+    val narrow = parsed.select(
+      Seq("device", "line_no", "stype", "utc", "date", "fix_time", "lat",
+        "lon", "quality", "numsat", "hdop", "vdop", "alt", "speed_knots",
+        "speed_kmph", "track_deg").map(col) :+
+        // null, not size's legacy -1, for the non-GSV sentences
+        when(col("sats_in_view").isNotNull, size(col("sats_in_view")))
+          .as("n_sats_view"): _*)
+    val (input, timeout) =
+      if (parsed.isStreaming)
+        (narrow.withWatermark("fix_time", WatermarkDelay),
+          GroupStateTimeout.EventTimeTimeout)
+      else (narrow, GroupStateTimeout.NoTimeout)
+    input.groupBy(col("device")).as[String, ParsedSentence]
+      .flatMapGroupsWithState(OutputMode.Append, timeout)(
+        processGroup(evict = parsed.isStreaming))
   }
-
-  /** Batch entry point with identical semantics (for stream≡batch tests). */
-  def assembleBatch(parsed: Dataset[ParsedSentence]): Dataset[StreamFix] =
-    assemble(parsed)
 }

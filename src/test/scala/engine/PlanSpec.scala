@@ -21,9 +21,8 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     graft.SparkEntry.queries(q)(spark, sf)
       .queryExecution.executedPlan.toString
 
-  /** Structural pruning pin (r19 verdict item 1): find the parquet scan
-    * whose storage location ends in `postings` and return its partition
-    * filters rendered to text. The old form grepped `executedPlan.toString`,
+  /** Structural pruning pin: find the parquet scan whose storage location
+    * ends in `postings` and return its partition filters rendered to text. The old form grepped `executedPlan.toString`,
     * whose Location path truncates at spark.sql.maxMetadataStringLength —
     * one extra digit in the tmpfs index version counter pushed "postings"
     * past the cut and the grep's anchor line vanished. Walking the plan
@@ -105,6 +104,47 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val reruns = rangeSamplerReruns("nmea_fix_pipeline")
     assert(reruns.isEmpty, "range exchange re-runs: " +
       reruns.map(_.mkString(", ")).mkString("; "))
+  }
+
+  /** The stream fold over a batch frame of the synthesized log. */
+  private def streamFold() = gps.stream.FixAssembler.assemble(
+    gps.parse.NmeaFunctions.parseSentences(
+      gps.parse.NmeaSynth.readLog(spark, sf)))
+
+  test("gps parse paths: every whole-stage-codegen method is small enough " +
+      "for HotSpot to JIT-compile") {
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    // HotSpot skips methods over 8000 bytes of bytecode
+    // (DontCompileHugeMethods); generated code that large runs interpreted.
+    // With AQE on, codegen stages are only inserted at execution, so the
+    // plans are built with it off.
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      Seq("nmea_fix_pipeline" -> graft.SparkEntry.queries("nmea_fix_pipeline")
+          (spark, sf), "stream fold" -> streamFold().toDF())
+        .foreach { case (name, df) =>
+          val sizes = codegenStringSeq(df.queryExecution.executedPlan)
+            .map(_._3.maxMethodCodeSize)
+          assert(sizes.nonEmpty, s"$name: no whole-stage-codegen subtree")
+          assert(sizes.max <= 8000,
+            s"$name: generated method sizes ${sizes.mkString(", ")}")
+        }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("stream fold: keyed by column, and the parse computes only what a " +
+      "fix keeps") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.AppendColumns
+    val opt = streamFold().queryExecution.optimizedPlan
+    assert(opt.collect { case a: AppendColumns => a }.isEmpty,
+      "the fold deserializes rows to find the grouping key")
+    val computed = opt.flatMap(_.expressions)
+      .flatMap(_.collect { case a: Alias => a.name })
+    assert(computed.contains("n_sats_view"), computed.toString)
+    assert(!computed.contains("sats"), "the parse still computes GSA sats")
   }
 
   test("join_inner_hash broadcasts the small dimension") {
@@ -246,7 +286,7 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // the duplicated-line vocabulary is UNBOUNDED on a real web corpus
     // (boilerplate is pervasive — C4 §2.2 exists because of it), so it
     // must ride a join keyed on the line hash, never a driver-
-    // materialized collect_set broadcast literal (r14 verdict item 1)
+    // materialized collect_set broadcast literal
     assert(!exec.toString.contains("collect_set"),
       "dup-line set must be joined, not collected")
     // the df-count and survivor anti-join exchanges are h-keyed and must
@@ -637,7 +677,7 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("search_boolean / search_prf / search_facets: no exchange ships " +
       "document text") {
-    // the r15 retrieval completions inherit the lexical family's
+    // the retrieval completions inherit the lexical family's
     // posture: corpus text stays inside the scan stage, only posting
     // keys and match rows ride exchanges
     for (q <- Seq("search_boolean", "search_prf", "search_facets")) {
@@ -672,12 +712,12 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // ranks, <= 64-row sketch/bucket walks) — but only because each
     // input frame is model-artifact scale. This pin enumerates the allowed sites by source scan so a
     // NEW unpartitioned window over a corpus-scale input fails the
-    // build instead of hiding in the warning noise (r12 verdict item 7).
+    // build instead of hiding in the warning noise.
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     // detect over COMMENT-STRIPPED full file text with a whitespace-
     // tolerant regex, not a single-line substring: a site written as
-    // `Window\n  .orderBy(...)` must still count (r13 advisor — the
+    // `Window\n  .orderBy(...)` must still count (the
     // evasion the old line match allowed is exactly the failure mode
     // this pin exists to catch)
     val siteRe = """Window\s*\.\s*orderBy\s*\(""".r
@@ -693,7 +733,7 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
         siteRe.findAllIn(txt).map(_ => p.getFileName.toString)
       }.groupBy(identity).view.mapValues(_.size).toMap
     // CurateQueries' 4th site WAS tokenize_decode's symbol-vocabulary
-    // rank — r22 folded it and tokenize_bpe_apply's identical build
+    // rank — now folded with tokenize_bpe_apply's identical build
     // into the shared session-keyed bpeVocab (one site, same bounded
     // symbol-inventory frame: distinct BPE symbols, a model artifact
     // at any corpus size).
@@ -702,7 +742,7 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // IncrementalDedup's site is the same walk over the FOLDED bin
     // counts (quantile_sketch_incremental) — the identical <= 64-row
     // frame after the store fold.
-    // CurateQueries' 4th site (r17) is corpus_length_histogram's
+    // CurateQueries' 4th site is corpus_length_histogram's
     // cumulative-share walk over the log2-bucket inventory — ≤ 64 rows
     // by construction (bucket = bit length of the token count).
     assert(sites == Map("CurateQueries.scala" -> 4, "RelQueries.scala" -> 3,
@@ -746,7 +786,7 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // The 16-bin nibble histogram must stay 16 codegen'd
     // length(translate(...)) diffs over the regexp'd nibble string —
     // the HOF form (nibble array rebuilt per bin inside a lambda) cost
-    // O(16·nb²) interpreted char scans per doc (156.5 s at sf0.1, r16).
+    // O(16·nb²) interpreted char scans per doc (156.5 s at sf0.1).
     val p = plan("multimodal_align")
     assert(p.contains("translate("),
       "histogram lost its translate() form — if a lambda-based " +
@@ -771,7 +811,7 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // in-place testdata regeneration), and the SET of keyed frames is
     // pinned below: adding a keyed frame is an explicit, reviewed act,
     // never a drive-by (the reuse must stay one level below a declared
-    // query's own serve — see the r21 verdict's boundary discussion).
+    // query's own serve).
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
@@ -812,7 +852,7 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       // kNN edge table + IVF ranked slice (consumer fan-out)
       "knng_edges_c", "ivfrank_np",
       // ranked top-k / pair-table / funnel-input slices — ONE level
-      // below the declared serves (the r21 boundary): the declared
+      // below the declared serves: the declared
       // single-op queries verifiably do not read these
       "bm25top", "costop", "anngt", "evalexact", "evalscreen",
       "urlkept", "deconids")

@@ -177,9 +177,8 @@ class NmeaFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       l <- Gen.frequency(20 -> Gen.const(Some(full.take(cut))),
         1 -> Gen.const(None))
     } yield l
-    // A sign after '*', or hex past Int.MaxValue, makes the declared
-    // checksum's int cast throw, under both formulas, so a batch agrees
-    // when both return the same rows or both throw the same error class.
+    // A batch agrees when both formulas return the same rows, or both
+    // throw the same error class.
     def outcome(df: org.apache.spark.sql.DataFrame,
         c: org.apache.spark.sql.Column) =
       scala.util.Try(df.select(c).collect().map(_.get(0)).toSeq).toEither
@@ -197,9 +196,24 @@ class NmeaFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(40)
       .withInitialSeed(Seed(20261017L)), prop)
     assert(res.passed, res.status.toString)
-    // both outcomes occur, never null, and most batches compare rows
+    // both outcomes occur, never null, and no batch throws
     assert(seen == Set(true, false), s"checksumValid outcomes: $seen")
-    assert(thrown < 20, s"$thrown of 40 batches threw")
+    assert(thrown == 0, s"$thrown of 40 batches threw")
+  }
+
+  test("a declared checksum with a sign or past Int.MaxValue drops the " +
+      "line, not the query") {
+    val body = GGA.drop(1).takeWhile(_ != '*')
+    // conv reads `-7` as 2^64 - 7; 80000000 is Int.MaxValue + 1; 20 hex
+    // digits overflow conv itself
+    val bad = Seq("-7", "80000000", "F" * 20).map(x => s"$$$body*$x")
+    val lines = (GGA +: bad).toDF("line")
+    assert(lines.select(NF.checksumValid($"line")).as[Boolean].collect()
+      .toSeq == Seq(true, false, false, false))
+    val parsed = NF.parseSentences((GGA +: bad).zipWithIndex
+      .map { case (l, i) => ("d1", i.toLong, l) }
+      .toDF("device", "line_no", "line"))
+    assert(parsed.select("line_no").as[Long].collect().toSeq == Seq(0L))
   }
 
   test("deg2dec worked example: 4807.038,N → 48.1173 (code, not the wrong :333 comment)") {
