@@ -5,6 +5,7 @@ import engine.Core.{t, r4}
 import engine.Q
 import gps.parse.{NmeaFunctions, NmeaSynth}
 import gps.assemble.FixAssembly
+import gps.stream.FixAssembler
 
 /** The GPS/NMEA operator surface — the reference's actual domain
   * (class.nmea.parser.php), driven end-to-end over NMEA text synthesized
@@ -37,10 +38,11 @@ object GpsQueries {
 
   /** B42 batch-equivalent + flagship: the full NMEA fix pipeline —
     * synthesize sentences from events, parse (checksum-gated), assemble
-    * fixes (carry-forward + last-writer-wins merge), apply GoodEnough and
-    * the reference's *intended* quality filter (:13,:40-77), summarize
-    * trips per device-hour. The oracle reproduces every decode∘encode
-    * rounding step in pure arithmetic over events.
+    * fixes with FixAssembler's per-device fold (carry-forward +
+    * last-writer-wins merge, GoodEnough), apply the reference's *intended*
+    * quality filter (:13,:40-77), summarize trips per device-hour. The
+    * oracle reproduces every decode∘encode rounding step in pure
+    * arithmetic over events.
     *
     * ORACLE DATA ASSUMPTION: the oracle groups by
     * (user_id, date_trunc('second', ts)) *globally*, while the engine
@@ -56,24 +58,21 @@ object GpsQueries {
     * n_sats_seen counts 8 per EVENT (sum of per-second event counts),
     * not 8 per fix — at sf0.1 one device-hour has such a collision.
     *
-    * The device-hour summary gets its own exchange on (device, hour),
-    * though the assembly's device partitioning would already satisfy the
-    * groupBy. Without it the final ORDER BY's range exchange sits on the
-    * un-materialized assembly stage, and its RangePartitioner samples that
-    * input in a job of its own: the sort, windows and merge aggregates
-    * would all run twice per execution. With it, AQE materializes the
-    * fixes once and the sampler reads a small shuffle. Only the columns
-    * the summary reads ride it (the satellite arrays as their sizes). */
+    * The fold reports no output partitioning, so the device-hour summary
+    * shuffles its partial aggregates on (device, hour), and the final
+    * ORDER BY's RangePartitioner samples that small shuffle. Had the
+    * range exchange sat on the fold's stage, its sampling job would
+    * re-run the sort and the fold; PlanSpec checks that it does not. */
   private val nmeaFixPipeline = Q(
     (s, d) => {
-      val fixes = FixAssembly.pipeline(NmeaSynth.readLog(s, d))
+      val fixes = FixAssembler.assemble(
+        NmeaFunctions.parseSentences(NmeaSynth.readLog(s, d))).toDF()
       FixAssembly.qualityFilter(fixes, minSats = 5, maxHdop = 8.0)
         .select(col("device"),
           date_format(date_trunc("hour", col("fix_time")), "yyyy-MM-dd HH:00")
             .as("hour"),
           col("lat"), col("lon"), col("speed_knots"), col("hdop"),
-          size(col("sats_in_view")).as("n_sats"))
-        .repartition(col("device"), col("hour"))
+          col("n_sats_view").as("n_sats"))
         .groupBy(col("device"), col("hour"))
         .agg(
           count(lit(1)).as("n_fixes"),

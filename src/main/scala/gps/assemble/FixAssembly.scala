@@ -1,92 +1,26 @@
 package gps.assemble
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import gps.parse.NmeaFunctions
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import gps.stream.FixAssembler
 
 /** Batch GPS-fix assembly — the reference's stateful merge
-  * (`$Nmea[$CurrentUTC][field] = value`, class.nmea.parser.php:173-187 etc.)
-  * re-expressed as two scalable dataflow steps:
+  * (`$Nmea[$CurrentUTC][field] = value`, class.nmea.parser.php:173-187
+  * etc.), run by [[gps.stream.FixAssembler]]'s per-device fold over a
+  * batch frame, plus the quality gate the reference declares but never
+  * applies.
   *
-  *  1. `$CurrentUTC` carry-forward (:22: GSA/GSV/VTG carry no timestamp and
-  *     attach to the most recent fix) → `last(utc, ignoreNulls)` over a
-  *     window partitioned by device, ordered by arrival `line_no`. Keyed by
-  *     device, this partitions freely across executors — no global sort.
-  *  2. Last-writer-wins field merge → group by (device, fix key) with
-  *     `max(struct(line_no, value))`-style ordered aggregation (plain
-  *     `last()` is shuffle-order-nondeterministic; SURVEY.md §7.3).
-  *
-  * Fixes keyed by full `fix_time` (not time-of-day — the reference's
-  * midnight collision, SURVEY.md §1.5.9); incomplete fixes (GoodEnough
-  * :126-129) are filtered, not leaked forever (:18).
+  * Fixes are keyed by the run of the carried utc, not by time-of-day
+  * alone (the reference's midnight collision, SURVEY.md §1.5.9);
+  * incomplete fixes (GoodEnough :126-129) are dropped, not leaked forever
+  * (:18).
   */
 object FixAssembly {
 
-  /** Last non-null value of `c` by arrival order — arg-max merge. */
-  private def lastBy(c: Column): Column =
-    max(when(c.isNotNull, struct(col("line_no").as("o"), c.as("v"))))
-      .getField("v")
-
   /** Parsed sentences (device, line_no, stype, fields...) → one row per
-    * (device, utc-of-day, date) fix. */
-  def assemble(parsed: DataFrame): DataFrame = {
-    val byArrival = Window.partitionBy(col("device")).orderBy(col("line_no"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val byArrivalRow = Window.partitionBy(col("device")).orderBy(col("line_no"))
-    val keyed = parsed
-      .withColumn("fix_utc", last(col("utc"), ignoreNulls = true).over(byArrival))
-      .filter(col("fix_utc").isNotNull) // pre-fix sentences (ref piles them under key 0, :29)
-      // New fix whenever the carried utc changes. Grouping by the run (not
-      // the raw utc) fixes the reference's midnight collision (:172 — two
-      // days of data share HHMMSS keys; SURVEY.md §1.5.9). Both windows
-      // share one partitioning+sort → a single exchange.
-      .withColumn("fix_seg", sum(
-        when(lag(col("fix_utc"), 1).over(byArrivalRow).isNull ||
-          lag(col("fix_utc"), 1).over(byArrivalRow) =!= col("fix_utc"), 1L)
-          .otherwise(0L)).over(byArrival))
-
-    val merged = keyed
-      .groupBy(col("device"), col("fix_seg"), col("fix_utc"))
-      .agg(
-        lastBy(col("date")).as("date"),
-        lastBy(col("lat")).as("lat"),
-        lastBy(col("lon")).as("lon"),
-        lastBy(col("ns")).as("ns"),
-        lastBy(col("ew")).as("ew"),
-        lastBy(col("quality")).as("quality"),
-        lastBy(col("numsat")).as("numsat"),
-        lastBy(col("hdop")).as("hdop"),
-        lastBy(col("vdop")).as("vdop"),
-        lastBy(col("pdop")).as("pdop"),
-        lastBy(col("alt")).as("alt"),
-        lastBy(col("geoidal")).as("geoidal"),
-        lastBy(col("speed_knots")).as("speed_knots"),
-        lastBy(col("speed_kmph")).as("speed_kmph"),
-        lastBy(col("track_deg")).as("track_deg"),
-        lastBy(col("magvar")).as("magvar"),
-        lastBy(col("status")).as("status"),
-        lastBy(col("sats")).as("sats"),
-        // GSV satellites: concatenate across the multi-sentence group in
-        // msg order (the reference overwrites and keeps 1 of 4 — :261)
-        flatten(transform(
-          array_sort(collect_list(when(col("sats_in_view").isNotNull,
-            struct(col("line_no").as("o"), col("sats_in_view").as("v"))))),
-          s => s.getField("v"))).as("sats_in_view"),
-        // seen sentence-type flag set (:173 etc.)
-        array_join(array_sort(collect_set(col("stype"))), ",").as("types_seen"))
-
-    merged
-      .withColumn("fix_time",
-        NmeaFunctions.nmeaTimestamp(col("fix_utc"), col("date")))
-      .withColumnRenamed("fix_utc", "utc")
-      .drop("fix_seg")
-  }
-
-  /** GoodEnough (:126-129): a fix is emittable iff date/utc/lat/lon bound. */
-  def goodEnough(fixes: DataFrame): DataFrame =
-    fixes.filter(col("date").isNotNull && col("utc").isNotNull &&
-      col("lat").isNotNull && col("lon").isNotNull)
+    * GoodEnough fix. */
+  def assemble(parsed: DataFrame): DataFrame =
+    FixAssembler.assemble(parsed).toDF()
 
   /** The declared-but-never-applied quality filter (:13, :40-77), applied:
     * minSats ≤ numsat, hdop ≤ maxHdop, vdop ≤ maxVdop (null DOP passes,
@@ -97,8 +31,4 @@ object FixAssembly {
       (col("numsat").isNull || col("numsat") >= minSats) &&
       (col("hdop").isNull || col("hdop") <= maxHdop) &&
       (col("vdop").isNull || col("vdop") <= maxVdop))
-
-  /** Full batch pipeline: raw lines → parsed → assembled → gated. */
-  def pipeline(lines: DataFrame, lenient: Boolean = false): DataFrame =
-    goodEnough(assemble(NmeaFunctions.parseSentences(lines, lenient)))
 }

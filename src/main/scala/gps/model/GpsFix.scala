@@ -1,54 +1,8 @@
 package gps.model
 
-import org.apache.spark.sql.types._
-
-/** One satellite-in-view observation (GPGSV; the reference keeps only the
-  * first of 4 per sentence and loses the rest — class.nmea.parser.php:262-272
-  * "needs fixing". We keep all.) */
-case class SatView(prn: Int, elev: Int, azimuth: Int, snr: Int)
-
-/** The assembled GPS fix — the reference's `$Nmea[$CurrentUTC]` row
-  * (class.nmea.parser.php:18,25) as a flat typed record (SURVEY.md §1.4).
-  *
-  * Key differences from the reference, by design (SURVEY.md §1.5):
-  *  - keyed by full event timestamp `fix_time` (not time-of-day — fixes the
-  *    midnight collision :172) and a `device` id (multi-stream capable);
-  *  - numerics are typed, checksums stripped (:243 contamination fixed);
-  *  - all GSV satellites kept as an array.
-  */
-case class GpsFix(
-    device: String,
-    fix_time: java.sql.Timestamp,
-    utc: String,
-    date: String,
-    lat: Option[Double],
-    lon: Option[Double],
-    ns: Option[String],
-    ew: Option[String],
-    quality: Option[Int],
-    numsat: Option[Int],
-    hdop: Option[Double],
-    vdop: Option[Double],
-    pdop: Option[Double],
-    alt: Option[Double],
-    geoidal: Option[Double],
-    speed_knots: Option[Double],
-    speed_kmph: Option[Double],
-    track_deg: Option[Double],
-    magvar: Option[Double],
-    status: Option[String],
-    sats: Option[Seq[Int]],
-    sats_in_view: Option[Seq[SatView]])
-
 object GpsFix {
   /** Sentence families the reference dispatches on
     * (class.nmea.parser.php:106-111). */
   val SentenceTypes: Seq[String] =
     Seq("GPGGA", "GPGLL", "GPGSA", "GPGSV", "GPRMC", "GPVTG")
-
-  val satViewSchema: StructType = StructType(Seq(
-    StructField("prn", IntegerType),
-    StructField("elev", IntegerType),
-    StructField("azimuth", IntegerType),
-    StructField("snr", IntegerType)))
 }

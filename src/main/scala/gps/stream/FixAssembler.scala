@@ -59,11 +59,14 @@ case class StreamFix(
 case class FixBuffer(current: Option[ParsedSentence], maxLineNo: Long,
     types: Int)
 
-/** Streaming GPS-fix assembly — the flagship stateful operator (SURVEY.md
-  * B42). `flatMapGroupsWithState` keyed by the `device` column; sentences
-  * are folded in arrival (`line_no`) order; a timestamped sentence whose
-  * utc differs from the open fix closes it (emit), mirroring ParseLine's
-  * behavior one-to-one while scaling across devices/executors.
+/** GPS-fix assembly, batch and streaming — the flagship stateful operator
+  * (SURVEY.md B42) and the only fix assembly there is. One per-device
+  * `Fold`, keyed by the `device` column, folds sentences in arrival
+  * (`line_no`) order; a timestamped sentence whose utc differs from the
+  * open fix closes it (emit), mirroring ParseLine's behavior one-to-one
+  * while scaling across devices/executors. Batch and stream differ only
+  * in how a device's sentences reach the fold and when its last fix is
+  * flushed (see [[FixAssembler.assemble]]).
   *
   * The typed boundary is kept flat. The fold reads only the 17 columns of
   * [[ParsedSentence]], so Catalyst prunes every other parse column (GSA's
@@ -79,12 +82,12 @@ object FixAssembler {
 
   private def typeBit(stype: String): Int = 1 << SentenceTypes.indexOf(stype)
 
-  /** Mutable working copy of the open fix for one trigger's fold — the
-    * last-writer-wins field merge of `$Nmea[$CurrentUTC][field] = value`
-    * (class.nmea.parser.php:173-187 etc.). Folding into vars allocates
-    * only per fix open/close, not per sentence: last writer wins, GSV
-    * satellite counts add up (:261 intended semantics: every satellite of
-    * the group is kept), `utc` is pinned at open. */
+  /** Mutable working copy of the open fix — the last-writer-wins field
+    * merge of `$Nmea[$CurrentUTC][field] = value` (class.nmea.parser.php
+    * :173-187 etc.). Folding into vars allocates only per fix open/close,
+    * not per sentence: last writer wins, GSV satellite counts add up (:261
+    * intended semantics: every satellite of the group is kept), `utc` is
+    * pinned at open. */
   private final class OpenFix(p: ParsedSentence, var types: Int) {
     val utc = p.utc // fix key — constant within the open fix
     var line_no = p.line_no; var stype = p.stype
@@ -143,17 +146,66 @@ object FixAssembler {
   val WatermarkDelay = "10 minutes"
   private val CushionMs = 10 * 60 * 1000L
 
-  /** The per-group fold. Emits every fix closed in this trigger; keeps the
-    * still-open fix in state for the next trigger. `evict` (streaming
-    * only) schedules an event-time timeout at the open fix's own time +
-    * cushion, so state for silent devices is flushed and removed instead
-    * of living forever — the reference's unbounded `$Nmea` defect
-    * (class.nmea.parser.php:18,25; SURVEY.md §4.2), fixed. */
-  private def processGroup(evict: Boolean)(
-      device: String,
-      it: Iterator[ParsedSentence],
+  private val Empty = FixBuffer(None, -1L, 0)
+
+  /** The fold itself: one device's sentences, in `line_no` order, folded
+    * into closed fixes from a `prior` buffer. A timestamped sentence whose
+    * utc differs from the open fix closes it; every other sentence merges
+    * into the open fix. Only GoodEnough fixes are emitted; [[buffer]] is
+    * the state to carry on. Holds one open fix, whatever the history. */
+  private final class Fold(device: String, prior: FixBuffer) {
+    private var maxLineNo = prior.maxLineNo
+    private var open: OpenFix =
+      prior.current.map(new OpenFix(_, prior.types)).orNull
+
+    private def close(f: OpenFix): Option[StreamFix] =
+      Some(f.toSentence(device)).filter(goodEnough).map(toFix(_, f.types))
+
+    /** Folds in one sentence; returns the fix it closes, if emittable. */
+    def add(s: ParsedSentence): Option[StreamFix] = {
+      // replayed/duplicate lines at or before the high-water mark are
+      // ignored (exactly-once against source replays)
+      if (s.line_no <= maxLineNo) return None
+      maxLineNo = s.line_no
+      if (s.utc.isDefined && (open == null || open.utc != s.utc)) {
+        val closed = Option(open).flatMap(close)
+        open = new OpenFix(s, typeBit(s.stype))
+        closed
+      } else {
+        // a pre-fix, timestamp-less sentence is dropped: the reference
+        // piles these under key 0 (:29), which is never GoodEnough
+        if (open != null) open.add(s)
+        None
+      }
+    }
+
+    /** The still-open fix, if emittable. */
+    def last: Option[StreamFix] = Option(open).flatMap(close)
+
+    def buffer: FixBuffer =
+      if (open == null) FixBuffer(None, maxLineNo, 0)
+      else FixBuffer(Some(open.toSentence(device)), maxLineNo, open.types)
+  }
+
+  /** Batch form: the whole device, sorted by `line_no`, from an empty
+    * buffer. Fixes stream out as they close; the last open fix is flushed
+    * at the end of the group, since no later sentence will close it. */
+  private def foldBatch(device: String,
+      sorted: Iterator[ParsedSentence]): Iterator[StreamFix] = {
+    val fold = new Fold(device, Empty)
+    sorted.flatMap(fold.add) ++ fold.last
+  }
+
+  /** Stream form: one trigger's sentences of a device, sorted here, from
+    * the device's state. Emits every fix closed in this trigger and keeps
+    * the still-open fix in state for the next. An event-time timeout at
+    * the open fix's own time + cushion flushes and removes the state of a
+    * silent device instead of keeping it forever — the reference's
+    * unbounded `$Nmea` defect (class.nmea.parser.php:18,25; SURVEY.md
+    * §4.2), fixed. */
+  private def foldStream(device: String, it: Iterator[ParsedSentence],
       state: GroupState[FixBuffer]): Iterator[StreamFix] = {
-    if (evict && state.hasTimedOut) {
+    if (state.hasTimedOut) {
       // Silent device: close and emit the open fix, drop the state.
       // Known tradeoff: removal also discards maxLineNo, the replay
       // high-water mark — a duplicate line replayed AFTER eviction but
@@ -164,64 +216,41 @@ object FixAssembler {
       // the cushion equals the watermark delay; keeping tombstones would
       // reintroduce the reference's unbounded-state defect for a replay
       // pattern the source (monotone line_no per device) cannot produce.
-      val out = state.getOption.toSeq.flatMap(b =>
-        b.current.filter(goodEnough).map(p => toFix(p, b.types)))
+      val out = state.getOption.flatMap(new Fold(device, _).last)
       state.remove()
       return out.iterator
     }
-    val sorted = it.toSeq.sortBy(_.line_no)
-    val prior = state.getOption.getOrElse(FixBuffer(None, -1L, 0))
-    var maxLineNo = prior.maxLineNo
-    var open: OpenFix = prior.current.map(new OpenFix(_, prior.types)).orNull
-    val out = Seq.newBuilder[StreamFix]
-    sorted.foreach { s =>
-      // replayed/duplicate lines at or before the high-water mark are
-      // ignored (exactly-once against source replays)
-      if (s.line_no > maxLineNo) {
-        maxLineNo = s.line_no
-        val opensNew = s.utc.isDefined &&
-          (open == null || open.utc != s.utc)
-        if (opensNew) {
-          if (open != null) {
-            val p = open.toSentence(device)
-            if (goodEnough(p)) out += toFix(p, open.types)
-          }
-          open = new OpenFix(s, typeBit(s.stype))
-        } else if (open != null) {
-          open.add(s)
-        }
-        // else: pre-fix, timestamp-less sentence — the reference piles
-        // these under key 0 (:29); we drop them (never GoodEnough), the
-        // high-water mark above still advances
-      }
-    }
-    val buf =
-      if (open == null) FixBuffer(None, maxLineNo, 0)
-      else FixBuffer(Some(open.toSentence(device)), maxLineNo, open.types)
+    val fold = new Fold(device, state.getOption.getOrElse(Empty))
+    // strict: the state is written only after the whole trigger is folded
+    val out = it.toSeq.sortBy(_.line_no).flatMap(fold.add)
+    val buf = fold.buffer
     state.update(buf)
-    if (evict) {
-      // Timeouts must be re-armed on every invocation. The open fix's own
-      // event time anchors the timeout; a fix that has no RMC yet inherits
-      // the current watermark as its anchor (it still evicts one cushion
-      // after the stream moves on). Both anchors are >= the current
-      // watermark, which setTimeoutTimestamp requires. Before the first
-      // watermark there is no anchor for a fix without an RMC: it stays
-      // unarmed until its device's next sentence. Anchoring it on the
-      // initial zero watermark would evict it at the first advance and
-      // split the fix at the first trigger boundary. Such a fix cannot be
-      // emitted without an RMC, so the unarmed state never holds output.
-      val wm = state.getCurrentWatermarkMs()
-      buf.current.flatMap(_.fix_time).map(_.getTime)
-        .orElse(Some(wm).filter(_ > 0))
-        .foreach(a => state.setTimeoutTimestamp(math.max(a, wm) + CushionMs))
-    }
-    out.result().iterator
+    // Timeouts must be re-armed on every invocation. The open fix's own
+    // event time anchors the timeout; a fix that has no RMC yet inherits
+    // the current watermark as its anchor (it still evicts one cushion
+    // after the stream moves on). Both anchors are >= the current
+    // watermark, which setTimeoutTimestamp requires. Before the first
+    // watermark there is no anchor for a fix without an RMC: it stays
+    // unarmed until its device's next sentence. Anchoring it on the
+    // initial zero watermark would evict it at the first advance and
+    // split the fix at the first trigger boundary. Such a fix cannot be
+    // emitted without an RMC, so the unarmed state never holds output.
+    val wm = state.getCurrentWatermarkMs()
+    buf.current.flatMap(_.fix_time).map(_.getTime)
+      .orElse(Some(wm).filter(_ > 0))
+      .foreach(a => state.setTimeoutTimestamp(math.max(a, wm) + CushionMs))
+    out.iterator
   }
 
   /** Assembly over the output of NmeaFunctions.parseSentences, streaming
-    * or batch. A stream gets event-time state eviction (watermark on
-    * `fix_time`, carried by RMC sentences); a batch frame runs the
-    * identical fold without timeouts.
+    * or batch: one row per GoodEnough fix. Both forms run the same
+    * `Fold`. A batch frame runs it once per device through
+    * `flatMapSortedGroups`, which adds `line_no` to the sort the grouping
+    * needs anyway; it emits fixes as they close and flushes each device's
+    * last fix, so a device's memory is one open fix, not its history. A
+    * stream runs it through `flatMapGroupsWithState`, per trigger, with
+    * event-time state eviction (watermark on `fix_time`, carried by RMC
+    * sentences).
     *
     * Eviction IS the watermark contract: a sentence arriving more than
     * [[WatermarkDelay]] of event time after its fix opened may find the
@@ -243,13 +272,13 @@ object FixAssembler {
         // null, not size's legacy -1, for the non-GSV sentences
         when(col("sats_in_view").isNotNull, size(col("sats_in_view")))
           .as("n_sats_view"): _*)
-    val (input, timeout) =
-      if (parsed.isStreaming)
-        (narrow.withWatermark("fix_time", WatermarkDelay),
-          GroupStateTimeout.EventTimeTimeout)
-      else (narrow, GroupStateTimeout.NoTimeout)
-    input.groupBy(col("device")).as[String, ParsedSentence]
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(
-        processGroup(evict = parsed.isStreaming))
+    if (parsed.isStreaming)
+      narrow.withWatermark("fix_time", WatermarkDelay)
+        .groupBy(col("device")).as[String, ParsedSentence]
+        .flatMapGroupsWithState(OutputMode.Append,
+          GroupStateTimeout.EventTimeTimeout)(foldStream)
+    else
+      narrow.groupBy(col("device")).as[String, ParsedSentence]
+        .flatMapSortedGroups(col("line_no"))(foldBatch)
   }
 }

@@ -28,29 +28,31 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     * past the cut and the grep's anchor line vanished. Walking the plan
     * tree is length-independent. */
   private def postingsPartitionFilters(q: String): String = {
-    def deep(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
-      val here = p match {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-        case _ => Nil
-      }
-      val kids = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          Seq(a.executedPlan)
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          Seq(s.plan)
-        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-          Seq(r.child)
-        case other => other.children
-      }
-      here ++ kids.flatMap(deep)
+    val scans = preparedNodes(q).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec if f.relation
+          .location.rootPaths.exists(_.toString.endsWith("postings")) => f
     }
-    val exec = graft.SparkEntry.queries(q)(spark, sf)
-      .queryExecution.executedPlan
-    val scans = deep(exec).filter(
-      _.relation.location.rootPaths.exists(_.toString.endsWith("postings")))
     assert(scans.nonEmpty, s"$q: no parquet scan over a postings table")
     scans.map(_.partitionFilters.map(_.toString).mkString(", ")).mkString("\n")
+  }
+
+  /** Every node of `q`'s prepared plan, before any execution, so AQE's
+    * stages are not materialized yet, looking through AQE's wrappers. */
+  private def preparedNodes(q: String)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    subtree(graft.SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan)
+
+  private def subtree(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children
+    }).flatMap(subtree)
   }
 
   /** Costly operators that `q`'s range exchanges run twice, one entry per
@@ -58,42 +60,36 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     * RangePartitioner runs a sampling job over the exchange's input to pick
     * its bounds. That job reads the shuffle files of the next exchange
     * below, but re-runs everything between the two exchanges. A Window,
-    * ObjectHashAggregate, SortAggregate, join or Generate in that segment
-    * is a second evaluation of real work. A broadcast hash join is left
-    * out: its build side is a broadcast built once, so a re-run costs one
-    * probe per row. Walks the prepared plan, before any execution, so
-    * AQE's stages are not materialized yet. */
+    * ObjectHashAggregate, SortAggregate, join, Generate or grouped fold
+    * (MapGroups, FlatMapGroupsWithState) in that segment is a second
+    * evaluation of real work. A broadcast hash join is left out: its build
+    * side is a broadcast built once, so a re-run costs one probe per row. */
   private def rangeSamplerReruns(q: String): Seq[Seq[String]] = {
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
-      QueryStageExec}
+    import org.apache.spark.sql.execution.{GenerateExec, MapGroupsExec,
+      SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
     import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec,
       SortAggregateExec}
     import org.apache.spark.sql.execution.exchange.{Exchange,
       ReusedExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.{BaseJoinExec,
       BroadcastHashJoinExec}
+    import org.apache.spark.sql.execution.streaming.operators.stateful
+      .flatmapgroupswithstate.FlatMapGroupsWithStateExec
     import org.apache.spark.sql.execution.window.WindowExecBase
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case other => other.children
-    }).flatMap(nodes)
     def segment(p: SparkPlan): Seq[SparkPlan] = p match {
       case _: Exchange | _: QueryStageExec | _: ReusedExchangeExec => Nil
       case other => other +: other.children.flatMap(segment)
     }
-    val exec = graft.SparkEntry.queries(q)(spark, sf)
-      .queryExecution.executedPlan
-    nodes(exec).collect {
+    preparedNodes(q).collect {
       case e: ShuffleExchangeExec
           if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
         segment(e.child).filter {
           case _: BroadcastHashJoinExec => false
           case _: WindowExecBase | _: ObjectHashAggregateExec |
-              _: SortAggregateExec | _: BaseJoinExec | _: GenerateExec => true
+              _: SortAggregateExec | _: BaseJoinExec | _: GenerateExec |
+              _: MapGroupsExec | _: FlatMapGroupsWithStateExec => true
           case _ => false
         }.map(_.nodeName)
     }.filter(_.nonEmpty)
@@ -104,6 +100,40 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val reruns = rangeSamplerReruns("nmea_fix_pipeline")
     assert(reruns.isEmpty, "range exchange re-runs: " +
       reruns.map(_.mkString(", ")).mkString("; "))
+  }
+
+  test("nmea_fix_pipeline: fixes come from one per-device fold over input " +
+      "sorted by (device, line_no)") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{MapGroupsExec, SortExec}
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExecBase
+    def names(es: Seq[Expression]) =
+      es.map { case a: Attribute => a.name; case e => e.sql }
+    val all = preparedNodes("nmea_fix_pipeline")
+    val windowed = all.collect {
+      case n @ (_: WindowExecBase | _: ObjectHashAggregateExec) => n.nodeName
+    }
+    assert(windowed.isEmpty, s"windowed assembly is back: $windowed")
+    val folds = all.collect { case m: MapGroupsExec => m }
+    assert(folds.size == 1, s"${folds.size} grouped folds")
+    val under = subtree(folds.head).tail
+    val exchanges = under.collect { case e: ShuffleExchangeExec =>
+      e.outputPartitioning match {
+        case h: HashPartitioning =>
+          names(h.expressions).mkString("hash(", ", ", ")")
+        case other => other.toString
+      }
+    }
+    assert(exchanges == Seq("hash(device)"),
+      s"exchanges under the fold: $exchanges")
+    val sorts = under.collect {
+      case s: SortExec => names(s.sortOrder.map(_.child))
+    }
+    assert(sorts == Seq(Seq("device", "line_no")),
+      s"sorts under the fold: $sorts")
   }
 
   /** The stream fold over a batch frame of the synthesized log. */

@@ -44,8 +44,10 @@ class FixAssemblySpec extends AnyFunSuite {
     ("B", 2L, ck("GPGGA,120000,5000.0000,S,00100.0000,W,1,05,2.0,10.0,M,1.0,M,,")),
     ("B", 3L, ck("GPRMC,120000,A,5000.0000,S,00100.0000,W,005.0,010.0,150324,001.0,E")))
 
-  lazy val fixes = FixAssembly.pipeline(
-    lines.toDF("device", "line_no", "line")).collect()
+  private def assemble(ls: Seq[(String, Long, String)]) = FixAssembly.assemble(
+    NF.parseSentences(ls.toDF("device", "line_no", "line")))
+
+  lazy val fixes = assemble(lines).collect()
 
   test("complete fixes only, per device (GoodEnough gate)") {
     assert(fixes.map(r => (r.getAs[String]("device"), r.getAs[String]("utc")))
@@ -72,9 +74,12 @@ class FixAssemblySpec extends AnyFunSuite {
 
   test("GSV satellites accumulate across the sentence group (8 sats)") {
     val f1 = fixes.find(r => r.getAs[String]("utc") == "235959").get
-    val sats = f1.getSeq[org.apache.spark.sql.Row](f1.fieldIndex("sats_in_view")).toList
-    assert(sats.size == 8)
-    assert(sats.map(_.getInt(0)) == List(1, 2, 12, 14, 18, 19, 22, 27))
+    assert(f1.getAs[Int]("n_sats_view") == 8)
+    // the fix keeps the count; the parse keeps every satellite, in order
+    val prns = NF.parseSentences(lines.toDF("device", "line_no", "line"))
+      .filter(col("stype") === "GPGSV").orderBy("line_no")
+      .select(col("sats_in_view.prn")).as[Seq[Int]].collect().flatten.toList
+    assert(prns == List(1, 2, 12, 14, 18, 19, 22, 27))
   }
 
   test("types_seen records the sentence families merged into the fix") {
@@ -83,10 +88,30 @@ class FixAssemblySpec extends AnyFunSuite {
   }
 
   test("quality filter drops low-sat fixes (intended :13,:40-77 semantics)") {
-    val gated = FixAssembly.qualityFilter(
-      FixAssembly.pipeline(lines.toDF("device", "line_no", "line")),
-      minSats = 6)
+    val gated = FixAssembly.qualityFilter(assemble(lines), minSats = 6)
     // device B has numsat=5 → dropped
     assert(gated.select("device").as[String].collect().toSet == Set("A"))
+  }
+
+  test("a device's last fix is emitted with no later sentence to close it") {
+    val last = Seq(
+      ("C", 1L, ck("GPGGA,101500,4807.0380,N,01131.0000,E,1,06,1.0,12.0,M,46.9,M,,")),
+      ("C", 2L, ck("GPRMC,101500,A,4807.0380,N,01131.0000,E,003.0,084.4,050324,003.1,W")),
+      ("C", 3L, ck("GPVTG,054.7,T,034.4,M,003.0,N,005.6,K")))
+    val rows = assemble(last).collect()
+    assert(rows.map(r => (r.getAs[String]("device"), r.getAs[String]("utc"),
+      r.getAs[Double]("speed_kmph"))).toSeq == Seq(("C", "101500", 5.6)))
+    // device A's last open fix (13: GGA only) is flushed too, and dropped
+    // by GoodEnough, not emitted
+    assert(!fixes.exists(_.getAs[String]("utc") == "000130"))
+  }
+
+  test("a line replayed with its original line_no does not change a fix") {
+    // the second GSV of fix 1 and the duplicate GGA, replayed after fix 2
+    val again = assemble(lines ++ lines.filter(l => l._2 == 5L || l._2 == 8L))
+    assert(again.collect().map(_.toString).sorted.toSeq ==
+      fixes.map(_.toString).sorted.toSeq)
+    val f1 = again.filter(col("utc") === "235959").head()
+    assert(f1.getAs[Int]("n_sats_view") == 8)
   }
 }

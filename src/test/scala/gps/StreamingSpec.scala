@@ -63,12 +63,12 @@ class StreamingSpec extends AnyFunSuite {
       ("A", "120001", None, "GPGGA,GPRMC")))
   }
 
-  test("stream ≡ batch fold ≡ FixAssembly on generated multi-device logs " +
+  test("stream ≡ batch fold ≡ plain-Scala merge on generated device logs " +
       "(ScalaCheck)") {
     import org.scalacheck.{Gen, Prop, Test}
     import org.scalacheck.Prop.propBoolean
     import org.scalacheck.rng.Seed
-    import gps.assemble.FixAssembly
+    import org.apache.spark.sql.Row
     implicit val sc = spark.sqlContext
     def hms(sec: Int) =
       f"${sec / 3600 % 24}%02d${sec / 60 % 60}%02d${sec % 60}%02d"
@@ -134,21 +134,43 @@ class StreamingSpec extends AnyFunSuite {
       "speed_kmph", "track_deg", "n_sats_view", "types_seen")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(cols.map(col): _*).collect().map(_.mkString("|")).sorted.toSeq
+    // The reference: the windowed merge semantics, in plain Scala over the
+    // parse rows of one device: replays dropped, the last non-null utc
+    // carried forward, one fix per run of the carried utc, per field the
+    // last non-null value by line_no, satellite counts summed, the sorted
+    // set of sentence types, and GoodEnough.
+    def merge(device: String, parsed: Seq[Row]): Seq[String] = {
+      val byArrival = parsed.distinctBy(_.getAs[Long]("line_no"))
+        .sortBy(_.getAs[Long]("line_no"))
+      val carried = byArrival.scanLeft(Option.empty[String])((u, r) =>
+        Option(r.getAs[String]("utc")).orElse(u)).tail
+      val runs = byArrival.zip(carried).collect { case (r, Some(u)) => (u, r) }
+        .foldLeft(Vector.empty[(String, Vector[Row])]) {
+          case (acc, (u, r)) if acc.lastOption.exists(_._1 == u) =>
+            acc.init :+ (u -> (acc.last._2 :+ r))
+          case (acc, (u, r)) => acc :+ (u -> Vector(r))
+        }
+      runs.map { case (utc, rs) =>
+        def last(c: String): Any =
+          rs.reverseIterator.map(_.getAs[Any](c)).find(_ != null).orNull
+        val sats = rs.map(r =>
+          Option(r.getAs[collection.Seq[Row]]("sats_in_view")).fold(0)(_.size))
+        Seq(device, utc) ++ cols.slice(2, 14).map(last) :+ sats.sum :+
+          rs.map(_.getAs[String]("stype")).distinct.sorted.mkString(",")
+      }.filter(f => Seq(2, 4, 5).forall(f(_) != null)) // date, lat, lon
+        .map(_.mkString("|"))
+    }
     var fixesSeen, casesRun = 0
     val prop = Prop.forAllNoShrink(log, Gen.listOfN(3, Gen.choose(0, 1000))) {
         (lines, cuts) =>
       casesRun += 1
-      // In batch, a GGA-only sentinel (never complete) closes each
-      // device's last fix; in the stream, the heartbeat's timeout does.
-      val input = (lines ++ lines.map(_._1).distinct.map(d => (d,
-        lines.size + 1000L, ck("GPGGA,999999,0000.0000,N,00000.0000,E,1,00," +
-          "0.0,0.0,M,0.0,M,,")))).toDF("device", "line_no", "line")
+      // No sentinel closes a device's last fix: the batch fold flushes it;
+      // in the stream, the heartbeat's timeout does.
+      val input = lines.toDF("device", "line_no", "line")
       val batch = FixAssembler.assemble(NF.parseSentences(input)).toDF()
-      // the windowed batch assembly has no replay guard: it reads the log
-      // without replays
-      val reference = FixAssembly.goodEnough(FixAssembly.assemble(
-          NF.parseSentences(input.dropDuplicates("device", "line_no"))))
-        .withColumn("n_sats_view", size(col("sats_in_view")))
+      val reference = NF.parseSentences(input).collect().toSeq
+        .groupBy(_.getAs[String]("device"))
+        .flatMap { case (d, ps) => merge(d, ps) }.toSeq.sorted
       val mem = MemoryStream[(String, Long, String)]
       val q = FixAssembler.assemble(NF.parseSentences(
           mem.toDF().toDF("device", "line_no", "line"))).toDF()
@@ -168,11 +190,11 @@ class StreamingSpec extends AnyFunSuite {
         }
         spark.table(s"prop_$casesRun").filter(col("device") =!= "__wm__")
       } finally q.stop()
-      val (b, r, st) = (rows(batch), rows(reference), rows(streamed))
+      val (b, r, st) = (rows(batch), reference, rows(streamed))
       fixesSeen += b.size
       Prop.all(
         (batch.filter(!col("complete")).isEmpty) :| "batch emitted an incomplete fix",
-        (b == r) :| s"batch fold vs FixAssembly:\n${b.diff(r)}\n${r.diff(b)}",
+        (b == r) :| s"batch fold vs reference:\n${b.diff(r)}\n${r.diff(b)}",
         (st == b) :| s"stream vs batch fold:\n${st.diff(b)}\n${b.diff(st)}")
     }
     val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(8)
