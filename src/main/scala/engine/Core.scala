@@ -102,10 +102,8 @@ object Core {
             val metaH = md5hex(srcMeta).take(16)
             val scratch = s"$scratchRoot/graft_nanos_norm_${pathH}_$metaH"
             publishOnce(scratch) { tmp =>
-              val prev = spark.conf.getOption(key)
-              spark.conf.set(key, "true")
-              try spark.read.parquet(s"$dir/$name.parquet").write.parquet(tmp)
-              finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+              withConfs(spark)(key -> "true")(
+                spark.read.parquet(s"$dir/$name.parquet").write.parquet(tmp))
             }
             // prune AFTER the publish (never inside the writer — the
             // staging dir is a `<scratch>.tmp.<uuid>` sibling and an
@@ -144,6 +142,34 @@ object Core {
 
   /** Round a double column to 4 dp — the t2 hash-determinism discipline. */
   def r4(c: Column): Column = round(c, 4)
+
+  /** Shuffle width and state-store count of the engine's small frames:
+    * stateful streams, micro-batch trigger bodies and the id-pair or
+    * top-k-scale iterations (graph rounds, the ANN recall report,
+    * connected components). Each exchange and each state store costs
+    * task scheduling, and each store a WAL write and a commit per
+    * trigger, whatever the data's width. The merge stream, measured on
+    * an earlier 32-core box: 16 stores ≈ 12.6-13.8 s, 8 ≈ 6.4 s, 4 ≈
+    * 6.4 s, so 8 sits at the commit-cost floor with parallelism to
+    * spare. A stream's store count is fixed for the life of its
+    * checkpoint; a cluster sets this per job. */
+  val SmallFrameWidth = 8
+
+  /** Run `body` with `settings` in force on the session `s`, then put
+    * each key back as it was: its prior value, or unset when it had
+    * none, in reverse order, also when `body` throws. This is the only
+    * place engine code changes a session setting (CoreSpec's source
+    * scan fails on any other). */
+  def withConfs[T](s: SparkSession)(settings: (String, String)*)(body: => T): T = {
+    val prior = settings.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      settings.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prior.reverseIterator.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 
   /** A cell-count conf as read at ORACLE-BUILD time: the same session
     * conf the engine query reads at run time, so an oracle string built

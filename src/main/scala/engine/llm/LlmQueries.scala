@@ -897,9 +897,8 @@ object LlmQueries {
     // partition count is the iteration-job conf (on a real cluster
     // sized to edge count; pinned small here because the frames are
     // id-pair scale).
-    val parts = spark.conf.getOption("spark.graft.cc.partitions")
-      .map(_.toInt).getOrElse(8)
-    val part = new org.apache.spark.HashPartitioner(parts)
+    val part = new org.apache.spark.HashPartitioner(
+      engine.Core.SmallFrameWidth)
     val pairs = pairsDf.select(
       col(pairsDf.columns(0)).cast("long"),
       col(pairsDf.columns(1)).cast("long")).as[(Long, Long)].rdd
@@ -1421,10 +1420,8 @@ object LlmQueries {
     * cluster_dbscan; all-integer throughout. */
   private val graphKCore = Q(
     (s, d) => {
-      val shufKey = "spark.sql.shuffle.partitions"
-      val shufPrev = s.conf.get(shufKey)
-      try {
-        s.conf.set(shufKey, "8")
+      engine.Core.withConfs(s)("spark.sql.shuffle.partitions" ->
+          engine.Core.SmallFrameWidth.toString) {
         val prs = srpNearDupPairs(s, d, DbscanEps)
           .select(col("va").as("v"), col("vb").as("u"))
         val edges = prs.unionByName(
@@ -1463,7 +1460,7 @@ object LlmQueries {
             coalesce(col("m"), lit(false)).as("in_core"),
             coalesce(col("core_deg"), lit(0L)).as("core_deg"))
           .orderBy("vec_id")
-      } finally s.conf.set(shufKey, shufPrev)
+      }
     },
     Some {
       // every kc CTE is referenced 2-3 times downstream; DuckDB inlines
@@ -1866,23 +1863,19 @@ object LlmQueries {
     cents.map { case (id, cu) => (id, upd.getOrElse(id, cu)) }
   }
 
-  /** The 16-cell spherical coarse codebook, memoized per (corpus dir,
-    * rounds) — the CurateQueries `coarseModelCache` discipline applied
-    * to the cosine-geometry quantizer: md5-sampled seeds + `rounds`
+  /** The 16-cell spherical coarse codebook, memoized per corpus dir —
+    * the CurateQueries `coarseModelCache` discipline applied to the
+    * cosine-geometry quantizer: md5-sampled seeds + two
     * [[lloydRound]]s, trained ONCE per corpus and served to every
     * consumer (sim_search_ivf, the ivf index build, cluster_kmeans). A
     * bounded model artifact (16 × 64 doubles); retraining per query
     * would model a pipeline that rebuilds its quantizer every time it
-    * answers a search. The rounds knob (`spark.graft.ivf.rounds`,
-    * recall/cost experiments ONLY — the oracles replay exactly 2) is
-    * part of the cache key, so an override can never serve a stale
-    * default-rounds codebook. */
+    * answers a search. The oracles replay the same two rounds. */
   private val sphericalCellCache = new java.util.concurrent.ConcurrentHashMap[
     String, Seq[(Long, Seq[Double])]]()
 
   private[engine] def trainedSphericalCells(s: SparkSession, d: String,
       e: DataFrame, k: Int = 16): Seq[(Long, Seq[Double])] = {
-    val nr = s.conf.get("spark.graft.ivf.rounds", "2").toInt
     // key carries the embeddings fingerprint (Core.srcFingerprint): a
     // corpus regenerated in-place mid-session retrains instead of
     // serving the previous generation's codebook (r12 advisor) — and
@@ -1890,7 +1883,7 @@ object LlmQueries {
     // corpus-proportional k) never collides with the 16-cell codebook
     // the IVF/cluster family shares
     val fp = engine.Core.srcFingerprint(d, "embeddings")
-    sphericalCellCache.computeIfAbsent(s"$d#$nr#$k#$fp", _ => {
+    sphericalCellCache.computeIfAbsent(s"$d#$k#$fp", _ => {
       import s.implicits._
       val seedDs = e
         .withColumn("h", md5(col("vec_id").cast("string")))
@@ -1898,7 +1891,7 @@ object LlmQueries {
         .select(col("vec_id").as("cent_id"), col("u").as("cu"))
         .as[(Long, Seq[Double])]
       val seeds = engine.Core.boundedCollect(seedDs, k, "codebook seeds")
-      (1 to nr).foldLeft(seeds)((c, _) => lloydRound(e, c))
+      (1 to 2).foldLeft(seeds)((c, _) => lloydRound(e, c))
     })
   }
 
@@ -2159,15 +2152,8 @@ object LlmQueries {
 
   private def ivfBuildIndex(s: SparkSession, d: String)
       : (String, String, org.apache.spark.sql.types.StructType) = {
-    // the key folds in spark.graft.ivf.rounds (r21 advisor): the built
-    // index depends on the codebook, whose own cache keys on rounds
-    // precisely so "an override can never serve a stale default-rounds
-    // codebook" — omitting it here broke that invariant one level up
-    // (a mid-session rounds override would be served the memoized
-    // default-rounds index)
-    val nr = s.conf.get("spark.graft.ivf.rounds", "2").toInt
     ivfIndexCache.computeIfAbsent(
-      s"$d#$nr#${engine.Core.srcFingerprint(d, "embeddings")}",
+      s"$d#${engine.Core.srcFingerprint(d, "embeddings")}",
       _ => ivfBuildIndexUncached(s, d))
   }
 

@@ -2210,10 +2210,8 @@ object SearchQueries {
       // exchanges paid pure task-scheduling overhead per round (the
       // cluster_dbscan / graph_k_core conf rationale; a cluster sizes
       // this to edge count in the job conf)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val shufPrev = s.conf.get(shufKey)
-      try {
-        s.conf.set(shufKey, "8")
+      engine.Core.withConfs(s)("spark.sql.shuffle.partitions" ->
+          engine.Core.SmallFrameWidth.toString) {
       val rawEdges = knnGraphFrame(s, d)
         .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
       // out-degree folded into the persisted edge table ONCE (a window
@@ -2254,7 +2252,7 @@ object SearchQueries {
       pr.select(col("vec_id"),
           round(col("pr") * lit(1e9), 0).cast("long").as("pr_nano"))
         .orderBy("vec_id")
-      } finally s.conf.set(shufKey, shufPrev)
+      }
     },
     Some {
       def prRound(k: Int): String = s""",
@@ -2529,21 +2527,19 @@ object SearchQueries {
       // graph_pagerank conf rationale; r21 JobTimer: 85 stages / 1312
       // tasks warm for a 50-row report). Materialized eagerly inside
       // the scope so the caller's action replays rows, not the plan.
-      val shufKey = "spark.sql.shuffle.partitions"
-      val aqKey = "spark.sql.adaptive.enabled"
-      val shufPrev = s.conf.get(shufKey)
-      val aqPrev = s.conf.getOption(aqKey)
-      try {
-        s.conf.set(shufKey, "8")
-        // AQE off for the report window (r22, the withMicroBatchConfs
-        // rationale applied here): with AQE on, every exchange of every
-        // rung's serve materialized as its own serialized stage job —
-        // ~150 driver futures for top-k-scale frames whose partition
-        // count is already pinned to 8. Measured same-box A/B
-        // (MiniBench, sf0.1): warm 4.8–6.3 s with AQE → 3.4–3.8 s
-        // without, cold flat. Semantics-free (results oracle-gated);
-        // the rung threads plan inside this window by design.
-        s.conf.set(aqKey, "false")
+      // AQE off for the report window (the withMicroBatchConfs
+      // rationale applied here): with AQE on, every exchange of every
+      // rung's serve materialized as its own serialized stage job —
+      // ~150 driver futures for top-k-scale frames whose partition
+      // count is already pinned. Measured same-box A/B (MiniBench,
+      // sf0.1): warm 4.8–6.3 s with AQE → 3.4–3.8 s without, cold
+      // flat. Semantics-free (results oracle-gated); the rung threads
+      // plan inside this window by design. Not withMicroBatchConfs:
+      // constraint propagation stays on, so the plans stay as measured.
+      engine.Core.withConfs(s)(
+          "spark.sql.shuffle.partitions" ->
+            engine.Core.SmallFrameWidth.toString,
+          "spark.sql.adaptive.enabled" -> "false") {
       // the exact ground truth is consumed TWICE (the hit join and the
       // completeness grid) and Spark does not dedupe common subplans
       // across join branches (r13 lesson) — unpersisted, the brute-force
@@ -2638,12 +2634,6 @@ object SearchQueries {
             r4(coalesce(col("h"), lit(0L)).cast("double") / lit(5.0))
               .as("recall"))
           .orderBy("method", "qid"))
-      } finally {
-        s.conf.set(shufKey, shufPrev)
-        aqPrev match {
-          case Some(v) => s.conf.set(aqKey, v)
-          case None => s.conf.unset(aqKey)
-        }
       }
     },
     Some {

@@ -76,14 +76,12 @@ object RelQueries {
       val src = t(s, d, "documents")
         .select(col("doc_id"), col("n_chars"), col("lang"))
       src.write.mode("overwrite").partitionBy("lang").parquet(out)
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(key)
-      try {
-        s.conf.set(key, "dynamic")
+      engine.Core.withConfs(s)(
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         src.filter(col("lang") === "en")
           .withColumn("n_chars", col("n_chars") + 1000000L)
           .write.mode("overwrite").partitionBy("lang").parquet(out)
-      } finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+      }
       s.read.parquet(out)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))

@@ -15,6 +15,13 @@ import gps.stream.FixAssembler
   * so each query terminates and returns a DataFrame the driver can verify;
   * event-time windows are also expressed batch-side where DuckDB can check
   * them (the contract's batch-equivalent oracle strategy).
+  *
+  * Session settings: a run's width, no-data and micro-batch planning
+  * settings are scoped with [[engine.Core.withConfs]], the only way
+  * engine code changes a session setting. The state-store provider is
+  * not scoped: a RocksDB run (off-heap, disk-spillable state) sets
+  * Spark's own `spark.sql.streaming.stateStore.providerClass` on the
+  * session, and StreamingSpec pins that results do not depend on it.
   */
 object StreamQueries {
 
@@ -77,10 +84,11 @@ object StreamQueries {
   }
 
   /** Run `body` (a foreachBatch stream-to-completion and its store
-    * reads) under micro-batch planning confs, restoring both after:
+    * reads) under micro-batch planning confs, scoped by
+    * [[engine.Core.withConfs]]:
     *
-    *  - `spark.sql.shuffle.partitions` = `n` (default 8): trigger
-    *    frames are batch-sized; 32-way exchanges pay 4× the
+    *  - `spark.sql.shuffle.partitions` = [[engine.Core.SmallFrameWidth]]:
+    *    trigger frames are batch-sized; 32-way exchanges pay 4× the
     *    task-scheduling overhead of the data's actual width;
     *  - constraint propagation OFF: it re-derives the constraint set
     *    per Project/Filter/Join node per ACTION per TRIGGER, and on the
@@ -94,43 +102,23 @@ object StreamQueries {
     *    as its own serialized query stage (a Spark job each, with a
     *    driver re-optimize between) — the right trade on TB shuffles,
     *    pure overhead on batch-sized trigger frames whose partition
-    *    count is already pinned to `n` above. Honest measurement
-    *    (same-JVM A/B via spark.graft.mb.aqe on pipeline_online at
-    *    sf0.1): 9.7-9.8 s with AQE → 9.2-9.6 s without, stages
+    *    count is already pinned above. Same-JVM A/B on pipeline_online
+    *    at sf0.1: 9.7-9.8 s with AQE → 9.2-9.6 s without, stages
     *    100 → 87 — a small (~3-5%) but consistently-signed win whose
     *    real content is the 13 fewer serialized stage barriers per
     *    run; byte-identical results. The store FOLDS that rely on
     *    AQE's small-output coalescing (AppendTable.compact,
     *    compactIndexSegments) all run in the separate maintenance ops,
     *    OUTSIDE this wrapper — per-trigger appends are batch-sized and
-    *    write `n` small files either way.
+    *    write small files either way.
     *
     * On a real cluster all three are per-job deployment confs; scoping
     * them to the trigger loop is the local analogue. */
-  private[engine] def withMicroBatchConfs[T](s: SparkSession, n: Int = 8)
-      (body: => T): T = {
-    val shufKey = "spark.sql.shuffle.partitions"
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    val aqKey = "spark.sql.adaptive.enabled"
-    val shufPrev = s.conf.get(shufKey)
-    val cpPrev = s.conf.getOption(cpKey)
-    val aqPrev = s.conf.getOption(aqKey)
-    s.conf.set(shufKey, n.toString)
-    s.conf.set(cpKey, "false")
-    // spark.graft.mb.aqe=true re-enables AQE inside trigger bodies —
-    // the A/B knob the measurement above was taken with
-    if (s.conf.get("spark.graft.mb.aqe", "false") != "true")
-      s.conf.set(aqKey, "false")
-    def restore(key: String, prev: Option[String]): Unit = prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-    try body finally {
-      s.conf.set(shufKey, shufPrev)
-      restore(cpKey, cpPrev)
-      restore(aqKey, aqPrev)
-    }
-  }
+  private[engine] def withMicroBatchConfs[T](s: SparkSession)(body: => T): T =
+    engine.Core.withConfs(s)(
+      "spark.sql.shuffle.partitions" -> engine.Core.SmallFrameWidth.toString,
+      "spark.sql.constraintPropagation.enabled" -> "false",
+      "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** Run a streaming df to completion into a memory sink; return result.
     * The checkpoint (WAL + state stores) is transient by design here —
@@ -138,64 +126,38 @@ object StreamQueries {
     * available: state-store commits were the dominant IO (and run-to-run
     * variance) of every stateful stream on a disk-backed /tmp. A real
     * deployment with a durable sink needs a durable checkpoint instead —
-    * that's a recovery requirement, not a throughput choice. */
+    * that's a recovery requirement, not a throughput choice.
+    *
+    * Stateful streams pin the shuffle width at first start (AQE is off
+    * for stateful workloads), and every stateful operator then runs one
+    * state store per partition, each paying WAL + commit IO per
+    * trigger; the run pins [[engine.Core.SmallFrameWidth]]. */
   private def runToMemory(spark: SparkSession, sdf: DataFrame, name: String,
-      mode: String = "append", noDataBatches: Boolean = true,
-      statePartitions: Option[Int] = None): DataFrame = {
+      mode: String = "append", noDataBatches: Boolean = true): DataFrame = {
     spark.catalog.dropTempView(name) // tolerate re-runs within a session
     val ckRoot = engine.Core.scratchRoot
     val ck = new java.io.File(
       s"$ckRoot/graft_ckpt_${name}_${java.util.UUID.randomUUID}")
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val noDataPrev = spark.conf.getOption(noDataKey)
-    // stateful streams pin shuffle partitions at first start (AQE is off
-    // for stateful workloads): every stateful operator then runs ONE
-    // state-store instance per partition, each paying WAL+commit IO per
-    // trigger. statePartitions sizes that to the stream's actual key
-    // cardinality/throughput — a per-JOB deployment decision a real
-    // cluster makes in the job conf (it must stay fixed for the life of a
-    // checkpoint; our checkpoints are one-shot). Low-cardinality state
-    // at 32 partitions is 32x the commit overhead for zero parallelism
-    // gain.
-    val shufKey = "spark.sql.shuffle.partitions"
-    val shufPrev = spark.conf.get(shufKey)
-    // State-store PROVIDER is the other per-job deployment knob: the
-    // default HDFS-backed store keeps every key in executor heap — the
-    // first casualty when key cardinality grows 100x. Setting
-    // `spark.graft.stateStore=rocksdb` swaps in Spark's RocksDB provider
-    // (off-heap, disk-spillable, incremental snapshot) for this run;
-    // results are provider-independent by contract, and StreamingSpec
-    // pins that identity for the flagship merge and both stateful joins.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val providerPrev = spark.conf.getOption(providerKey)
     // start() is inside the try: it can throw after creating checkpoint
     // dirs, and a stranded dir on tmpfs is leaked RAM
     try {
-      if (spark.conf.get("spark.graft.stateStore", "") == "rocksdb")
-        spark.conf.set(providerKey, "org.apache.spark.sql.execution." +
-          "streaming.state.RocksDBStateStoreProvider")
       // noDataBatches=false skips the trailing empty microbatch that only
       // advances the watermark and evicts state. Callers may opt out ONLY
       // when the sink result cannot depend on it (e.g. a complete-mode agg
       // whose dedup filter already ran in the data batches); any query
       // whose OUTPUT needs a watermark sweep — timeout-evicted fixes,
       // append-mode window finalization — must keep it true.
-      spark.conf.set(noDataKey, noDataBatches.toString)
-      statePartitions.foreach(n => spark.conf.set(shufKey, n.toString))
-      sdf.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ck.getPath)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-        .awaitTermination()
+      engine.Core.withConfs(spark)(
+          "spark.sql.streaming.noDataMicroBatches.enabled" ->
+            noDataBatches.toString,
+          "spark.sql.shuffle.partitions" ->
+            engine.Core.SmallFrameWidth.toString) {
+        sdf.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", ck.getPath)
+          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
+      }
     } finally {
-      spark.conf.set(shufKey, shufPrev)
-      noDataPrev match {
-        case Some(v) => spark.conf.set(noDataKey, v)
-        case None    => spark.conf.unset(noDataKey)
-      }
-      providerPrev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
       }
@@ -233,8 +195,7 @@ object StreamQueries {
             .as("sum_value"))
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:00").as("h"),
           col("event_type"), col("n"), col("sum_value"))
-      runToMemory(s, agg, "graft_tumble_sink", mode = "complete",
-        statePartitions = Some(8))
+      runToMemory(s, agg, "graft_tumble_sink", mode = "complete")
         .orderBy("h", "event_type")
     },
     Some("""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS h,
@@ -252,8 +213,8 @@ object StreamQueries {
         .agg(count(lit(1)).as("n"))
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:00").as("ws"),
           col("n"))
-      runToMemory(s, agg, "graft_slide_sink", mode = "complete",
-        statePartitions = Some(8)).orderBy("ws")
+      runToMemory(s, agg, "graft_slide_sink", mode = "complete")
+        .orderBy("ws")
     },
     Some("""SELECT strftime(ws, '%Y-%m-%d %H:00') AS ws, count(*) AS n
       FROM (SELECT unnest([date_trunc('hour', ts),
@@ -274,8 +235,7 @@ object StreamQueries {
         .select(col("user_id"),
           unix_micros(col("session_window.start")).as("session_start"),
           col("n_events"), col("sum_value"))
-      runToMemory(s, agg, "graft_session_sink", mode = "complete",
-        statePartitions = Some(8))
+      runToMemory(s, agg, "graft_session_sink", mode = "complete")
         .orderBy("user_id", "session_start")
     },
     Some("""WITH marked AS (
@@ -316,8 +276,8 @@ object StreamQueries {
         .agg(count(lit(1)).as("n"))
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:00").as("h"),
           col("n"))
-      runToMemory(s, agg, "graft_wm_sink", mode = "complete",
-        statePartitions = Some(8)).orderBy("h")
+      runToMemory(s, agg, "graft_wm_sink", mode = "complete")
+        .orderBy("h")
     },
     Some("""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS h,
         count(*) AS n
@@ -349,17 +309,12 @@ object StreamQueries {
       // dedup keys (the output of this complete-mode agg is fixed after
       // the last data batch); eviction semantics are pinned by
       // StreamingSpec's two-batch MemoryStream test, not by this run.
-      // statePartitions: this op was the LAST stateful stream on the
-      // session-default 32 stores (every other one is sized) — two
-      // stateful operators here (the watermark dedup + the agg) paid
-      // 64 store commits per trigger. Same deployment-conf treatment as
-      // the merge: per-trigger commit count is the cost driver, key
-      // parallelism is preserved within each store, results are
-      // width-invariant by contract. Measured 3.06 -> 2.05 s warm at
-      // sf0.1 (MiniBench A/B, 32 -> 8).
+      // Two stateful operators here (the watermark dedup + the agg): at
+      // the session's 32 partitions they paid 64 store commits per
+      // trigger; the small-frame width measured 3.06 -> 2.05 s warm at
+      // sf0.1 (MiniBench A/B, 32 -> 8), with results width-invariant.
       runToMemory(s, deduped, "graft_dedup_sink", mode = "complete",
-        noDataBatches = false, statePartitions =
-          Some(s.conf.get("spark.graft.dedup.statePartitions", "8").toInt))
+        noDataBatches = false)
         .orderBy("user_id")
     },
     Some("""SELECT user_id, count(DISTINCT event_id) AS n_events
@@ -407,16 +362,10 @@ object StreamQueries {
         orderedBy = Some("line_no"), maxFilesPerTrigger =
           Some(s.conf.get("spark.graft.merge.filesPerTrigger", "16").toInt))
       val fixes = FixAssembler.assemble(NmeaFunctions.parseSentences(src))
-      // ~150 devices ⇒ 8 state partitions: assembly parallelism is
-      // capped by device count anyway (~19 devices/store at 8), and
-      // every halving of the store count halves per-trigger WAL+commit
-      // IO across the multi-trigger run — measured on an earlier box:
-      // 16 stores ≈ 12.6-13.8 s, 8 ≈ 6.4 s, 4 ≈ 6.4 s (flat past 8),
-      // so 8 keeps the parallelism headroom at the IO floor. A real
-      // deployment sizes this in the job conf (the override below).
-      val out = runToMemory(s, fixes.toDF(), "graft_merge_sink",
-        statePartitions =
-          Some(s.conf.get("spark.graft.merge.statePartitions", "8").toInt))
+      // ~150 devices over Core.SmallFrameWidth stores: assembly
+      // parallelism is capped by device count anyway (~19 devices/store
+      // at 8), and the store count sets per-trigger WAL+commit IO
+      val out = runToMemory(s, fixes.toDF(), "graft_merge_sink")
       out.filter(col("device") =!= "__wm__")
         .filter(col("complete"))
         .filter(col("numsat") >= 5 && col("hdop") <= 8.0)
@@ -509,7 +458,7 @@ object StreamQueries {
           col("p.event_id").as("purchase_id"), col("c.user_id").as("user_id"))
       // few hundred active users ⇒ 8 state partitions; 32 would mean 4x
       // the per-trigger store commits for no extra parallelism
-      runToMemory(s, joined, "graft_ssjoin_sink", statePartitions = Some(8))
+      runToMemory(s, joined, "graft_ssjoin_sink")
         .orderBy("click_id", "purchase_id")
     },
     Some("""SELECT c.event_id AS click_id, p.event_id AS purchase_id,
@@ -981,8 +930,7 @@ object StreamQueries {
           asofFold)
       // few hundred active keys ⇒ 8 state partitions (the
       // stream_join_stream sizing rationale)
-      runToMemory(s, enriched.toDF(), "graft_asofen_sink",
-          statePartitions = Some(8))
+      runToMemory(s, enriched.toDF(), "graft_asofen_sink")
         .orderBy("event_id")
     },
     Some("""SELECT event_id, user_id, ok AS matched_order
@@ -1066,8 +1014,7 @@ object StreamQueries {
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
           cusumFold(calib))
       // 5 series ⇒ 8 state partitions (the stream_join_stream sizing)
-      runToMemory(s, out.toDF(), "graft_cusum_sink",
-          statePartitions = Some(8))
+      runToMemory(s, out.toDF(), "graft_cusum_sink")
         .orderBy("event_id")
     },
     Some(engine.rel.RelQueries.cusumSql))
@@ -1127,8 +1074,7 @@ object StreamQueries {
           org.apache.spark.sql.streaming.OutputMode.Append,
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
           ewmaFold)
-      runToMemory(s, out.toDF(), "graft_ewma_sink",
-          statePartitions = Some(8))
+      runToMemory(s, out.toDF(), "graft_ewma_sink")
         .orderBy("event_id")
     },
     Some(engine.rel.RelQueries.ewmaSql))

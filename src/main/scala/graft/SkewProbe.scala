@@ -132,13 +132,8 @@ object SkewProbe {
         if (sumMs > 0) maxMs.toDouble / (sumMs.toDouble / cores) else 0.0
     }
     def measure(q: String, dir: String,
-        confs: Map[String, String] = Map.empty): Res = {
-      // restore PRIOR values on exit, don't blanket-unset: a
-      // pre-existing session-level setting of an overridden key must
-      // survive the measured run (r16 ADVICE)
-      val prior = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
+        confs: Map[String, String] = Map.empty): Res =
+      engine.Core.withConfs(spark)(confs.toSeq: _*) {
         // UNMEASURED warm pass first: codebook/model builds are per-dir
         // (fpKey-memoized) and JIT warm-up lands on whichever run goes
         // first — both would pollute the max-task comparison, so the
@@ -167,11 +162,7 @@ object SkewProbe {
           f"balance ${r.balance}%.2f ($c rows)")
         engine.ScratchCache.drain(); System.gc()
         r
-      } finally prior.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
       }
-    }
 
     // √N cell recipe at 10× (the ScaleProbe discipline); cap at 256 so
     // the ~12100-member hot cell MUST sub-block (nsb ≈ 48 → ~2300 tasks

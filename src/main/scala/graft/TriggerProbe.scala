@@ -81,13 +81,9 @@ object TriggerProbe {
         firstQ: Double, lastQ: Double, ratio: Double, flag: Boolean)
     def run(q: String, mftKey: String, mft: Int, dir: String,
         tag: String): Row = {
-      val prior = spark.conf.getOption(mftKey)
-      spark.conf.set(mftKey, mft.toString)
-      trig.clear()
-      try Eval.rows(SparkEntry.queries(q)(spark, dir)): Unit
-      finally prior match {
-        case Some(v) => spark.conf.set(mftKey, v)
-        case None => spark.conf.unset(mftKey)
+      engine.Core.withConfs(spark)(mftKey -> mft.toString) {
+        trig.clear()
+        Eval.rows(SparkEntry.queries(q)(spark, dir)): Unit
       }
       // listener bus is async — poll until the trigger map is stable
       var sz = -1; var spins = 0

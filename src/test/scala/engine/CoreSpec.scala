@@ -4,11 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** Pins Core.publishOnce's locking contract (r3 advisor): same-dir
   * publishes serialize and write exactly once; publishes of UNRELATED
   * dirs overlap instead of queueing on a global monitor; a failed
-  * produce step deletes its temp dir and leaves no published marker. */
+  * produce step deletes its temp dir and leaves no published marker.
+  * Also pins Core.withConfs' scoping, and that engine code changes
+  * session settings through nothing else. */
 class CoreSpec extends AnyFunSuite {
 
   private def freshDir(tag: String): String =
@@ -153,5 +156,79 @@ class CoreSpec extends AnyFunSuite {
       Core.boundedCollect(ds, 9, "overflow-probe")
     }
     assert(ex.getMessage.contains("overflow-probe"))
+  }
+
+  private val setKey = "corespec.withconfs.set"
+  private val absentKey = "corespec.withconfs.absent"
+
+  test("withConfs restores a prior value") {
+    val spark = gps.TestSpark.spark
+    spark.conf.set(setKey, "before")
+    try {
+      val seen = Core.withConfs(spark)(setKey -> "inside")(
+        spark.conf.get(setKey))
+      assert(seen == "inside")
+      assert(spark.conf.get(setKey) == "before")
+    } finally spark.conf.unset(setKey)
+  }
+
+  test("withConfs unsets a key that was absent") {
+    val spark = gps.TestSpark.spark
+    assert(spark.conf.getOption(absentKey).isEmpty)
+    Core.withConfs(spark)(absentKey -> "inside") {
+      assert(spark.conf.get(absentKey) == "inside")
+    }
+    assert(spark.conf.getOption(absentKey).isEmpty)
+  }
+
+  test("withConfs restores when its body throws") {
+    val spark = gps.TestSpark.spark
+    spark.conf.set(setKey, "before")
+    try {
+      intercept[IllegalStateException] {
+        Core.withConfs(spark)(setKey -> "inside", absentKey -> "inside")(
+          throw new IllegalStateException("body failed"))
+      }
+      assert(spark.conf.get(setKey) == "before")
+      assert(spark.conf.getOption(absentKey).isEmpty)
+    } finally spark.conf.unset(setKey)
+  }
+
+  test("withConfs nests: each scope restores what it found") {
+    val spark = gps.TestSpark.spark
+    Core.withConfs(spark)(absentKey -> "outer") {
+      Core.withConfs(spark)(absentKey -> "inner", setKey -> "inner") {
+        assert(spark.conf.get(absentKey) == "inner")
+      }
+      assert(spark.conf.get(absentKey) == "outer")
+      assert(spark.conf.getOption(setKey).isEmpty)
+    }
+    assert(spark.conf.getOption(absentKey).isEmpty)
+  }
+
+  test("engine code changes a session setting only through withConfs") {
+    // a save/set/restore block of its own leaks a setting when it gets the
+    // restore wrong, and hides from anyone looking for shared-session
+    // writes; this scan leaves Core.withConfs as the one place to look
+    val root = java.nio.file.Paths.get("src/main/scala/engine")
+    val call = raw"conf\.(set|unset)\(".r
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty, s"no sources under $root")
+    val hits = files.flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.toSeq
+      val helper = if (f.getFileName.toString == "Core.scala") {
+        val from = lines.indexWhere(_.contains("def withConfs["))
+        assert(from >= 0, "Core.withConfs not found")
+        val to = lines.indexWhere(_.startsWith("  }"), from)
+        from to to
+      } else Range(0, 0)
+      lines.zipWithIndex.collect {
+        case (l, i) if call.findFirstIn(l).isDefined && !helper.contains(i) =>
+          s"$f:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty, "scope session settings with Core.withConfs:\n" +
+      hits.mkString("\n"))
   }
 }

@@ -282,42 +282,80 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("RocksDB state store: flagship merge + stateful joins result-identical") {
-    // spark.graft.stateStore=rocksdb swaps the per-run provider inside
-    // runToMemory; every stateful query must produce byte-identical
-    // results under either store — the deployment knob for 100x key
-    // cardinality must never be a semantics knob
+    // Spark's own provider key on the session reaches every stateful
+    // query's runToMemory; every stateful query must produce
+    // byte-identical results under either store — the deployment knob
+    // for 100x key cardinality must never be a semantics knob
     val sf = "/root/testdata/sf0.001"
     val qs = engine.stream.StreamQueries.queries
     Seq("stream_stateful_merge", "stream_join_stream", "stream_dedup")
       .foreach { id =>
         val base = qs(id).fn(spark, sf).collect().map(_.toString).sorted.toSeq
-        spark.conf.set("spark.graft.stateStore", "rocksdb")
-        try {
-          val rocks = qs(id).fn(spark, sf).collect().map(_.toString).sorted.toSeq
-          assert(rocks == base, s"$id differs under RocksDB")
-          assert(rocks.nonEmpty, s"$id returned no rows")
-        } finally spark.conf.unset("spark.graft.stateStore")
+        val rocks = engine.Core.withConfs(spark)(
+            "spark.sql.streaming.stateStore.providerClass" ->
+              ("org.apache.spark.sql.execution.streaming.state." +
+                "RocksDBStateStoreProvider"))(
+          qs(id).fn(spark, sf).collect().map(_.toString).sorted.toSeq)
+        assert(rocks == base, s"$id differs under RocksDB")
+        assert(rocks.nonEmpty, s"$id returned no rows")
       }
   }
 
-  test("flagship merge: result invariant under trigger/state-partition knobs") {
-    // the deployment confs (spark.graft.merge.*) size trigger admission
-    // and state-store parallelism; like the store provider, they must
-    // never be semantics knobs — any file split and any partition count
-    // must assemble the identical fix set (decomposition invariance)
+  test("fix assembly invariant under files per trigger and state-store count") {
+    // trigger admission and the store count size the work, never the
+    // result: any file split and any store count must assemble the
+    // identical fix set (decomposition invariance)
     val sf = "/root/testdata/sf0.001"
     val q = engine.stream.StreamQueries.queries("stream_stateful_merge")
     val base = q.fn(spark, sf).collect().map(_.toString).sorted.toSeq
     assert(base.nonEmpty)
-    spark.conf.set("spark.graft.merge.filesPerTrigger", "32")
-    spark.conf.set("spark.graft.merge.statePartitions", "8")
-    try {
-      val alt = q.fn(spark, sf).collect().map(_.toString).sorted.toSeq
-      assert(alt == base, "merge result depends on trigger/state sizing")
-    } finally {
-      spark.conf.unset("spark.graft.merge.filesPerTrigger")
-      spark.conf.unset("spark.graft.merge.statePartitions")
-    }
+    val alt = engine.Core.withConfs(spark)(
+        "spark.graft.merge.filesPerTrigger" -> "32")(
+      q.fn(spark, sf).collect().map(_.toString).sorted.toSeq)
+    assert(alt == base, "merge result depends on files per trigger")
+
+    // 6 devices × 5 fixes, device-interleaved, over 3 triggers; the store
+    // count is the shuffle width the stream starts under
+    val log = (0 until 5).flatMap { i =>
+      ('A' to 'F').flatMap { dv =>
+        val t = f"1200${i * 7 + dv - 'A'}%02d"
+        val lat = f"48${dv - 'A'}%02d.${i}%04d"
+        Seq(s"GPGGA,$t,$lat,N,01131.0000,E,1,0${5 + i},0.9,545.4,M,46.9,M,,",
+          s"GPRMC,$t,A,$lat,N,01131.0000,E,02$i.4,084.4,010324,003.1,W")
+          .map(l => (dv.toString, ck(l)))
+      }
+    }.zipWithIndex.map { case ((dv, l), n) => (dv, n.toLong, l) }
+    def fold(width: Int): (Seq[String], Seq[Long]) =
+      engine.Core.withConfs(spark)(
+          "spark.sql.shuffle.partitions" -> width.toString) {
+        implicit val sc = spark.sqlContext
+        val mem = MemoryStream[(String, Long, String)]
+        val sq = FixAssembler.assemble(NF.parseSentences(
+            mem.toDF().toDF("device", "line_no", "line"))).toDF()
+          .writeStream.format("memory").queryName(s"width_$width")
+          .outputMode("append").start()
+        try {
+          log.grouped(log.size / 3 + 1).foreach { part =>
+            mem.addData(part: _*); sq.processAllAvailable()
+          }
+          // a heartbeat a day later: its timeout sweep emits every open fix
+          Seq(0, 1).foreach { i =>
+            mem.addData(("__wm__", log.size + 100L + i, ck(s"GPRMC,13000$i," +
+              "A,0000.0000,N,00000.0000,E,000.0,084.4,030324,003.1,W")))
+            sq.processAllAvailable()
+          }
+          (spark.table(s"width_$width").filter(col("device") =!= "__wm__")
+            .collect().map(_.toString).sorted.toSeq,
+            sq.recentProgress.flatMap(_.stateOperators)
+              .map(_.numStateStoreInstances).distinct.toSeq)
+        } finally sq.stop()
+      }
+    val (one, oneStores) = fold(1)
+    val (eight, eightStores) = fold(8)
+    assert(oneStores == Seq(1L) && eightStores == Seq(8L),
+      s"store counts $oneStores / $eightStores")
+    assert(one.size == 30, s"${one.size} fixes, expected 30")
+    assert(eight == one, "fixes depend on the state-store count")
   }
 
   test("stream-stream interval join: cross-trigger pairs join, watermark drops late") {
