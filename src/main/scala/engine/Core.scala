@@ -122,13 +122,7 @@ object Core {
             Option(new java.io.File(scratchRoot).listFiles()).foreach(
               _.filter(f => gen.pattern.matcher(f.getName).matches() &&
                   f.getName != cur && f.lastModified < cutoff)
-                .foreach { stale =>
-                  def rmTree(f: java.io.File): Unit = {
-                    Option(f.listFiles()).foreach(_.foreach(rmTree))
-                    f.delete(): Unit
-                  }
-                  rmTree(stale)
-                })
+                .foreach(deleteRecursively))
             spark.read.parquet(scratch)
         }
       raw.schema("ts").dataType match {
@@ -398,7 +392,9 @@ object Core {
       dir
     }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  /** Deletes `f` and everything under it, children first; a failed
+    * `delete()` is ignored. */
+  private[engine] def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
   }

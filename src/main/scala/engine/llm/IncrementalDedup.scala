@@ -54,10 +54,6 @@ import LlmQueries.{minhashSignatures, estJaccard}
   */
 object IncrementalDedup {
 
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
   private val dedupIncremental = Q(
     (s, d) => {
       val san = d.replaceAll("[^a-zA-Z0-9]", "_")
@@ -152,7 +148,7 @@ object IncrementalDedup {
             .option("checkpointLocation", ck.getPath)
             .trigger(Trigger.AvailableNow()).start().awaitTermination()
         }
-      } finally rm(ck)
+      } finally engine.Core.deleteRecursively(ck)
       // settle the LAST trigger's deferred sidecar build before the
       // serve read (r21 advisor): the store must leave this run
       // complete (the sidecar is what the NEXT nightly run probes
@@ -270,7 +266,7 @@ object IncrementalDedup {
             .option("checkpointLocation", ck.getPath)
             .trigger(Trigger.AvailableNow()).start().awaitTermination()
         }
-      } finally rm(ck)
+      } finally engine.Core.deleteRecursively(ck)
       engine.stream.AppendTable.read(s, resRoot, resSchema)
         .orderBy("doc_id", "eval_id")
     },
@@ -438,7 +434,7 @@ object IncrementalDedup {
             .option("checkpointLocation", ck.getPath)
             .trigger(Trigger.AvailableNow()).start().awaitTermination()
         }
-      } finally rm(ck)
+      } finally engine.Core.deleteRecursively(ck)
       engine.stream.AppendTable.read(s, store, storeSchema)
         .filter(col("kept"))
         .select(col("vec_id"))
@@ -537,7 +533,7 @@ object IncrementalDedup {
             .option("checkpointLocation", ck.getPath)
             .trigger(Trigger.AvailableNow()).start().awaitTermination()
         }
-      } finally rm(ck)
+      } finally engine.Core.deleteRecursively(ck)
       // settle the last trigger's deferred sidecar build before serve
       // (see dedupIncremental)
       engine.stream.AppendTable.settle(store)
@@ -605,7 +601,7 @@ object IncrementalDedup {
             .option("checkpointLocation", ck.getPath)
             .trigger(Trigger.AvailableNow()).start().awaitTermination()
         }
-      } finally rm(ck)
+      } finally engine.Core.deleteRecursively(ck)
       val refC = engine.stream.AppendTable.read(s, refStore, tcSchema)
         .groupBy(col("term")).agg(sum(col("cnt")).as("n_ref"))
       val newC = engine.stream.AppendTable.read(s, newStore, tcSchema)
@@ -715,7 +711,7 @@ object IncrementalDedup {
             .option("checkpointLocation", ck.getPath)
             .trigger(Trigger.AvailableNow()).start().awaitTermination()
         }
-      } finally rm(ck)
+      } finally engine.Core.deleteRecursively(ck)
       // serve = fold the delta archives
       val card = engine.stream.AppendTable.read(s, cardStore, cardSchema)
         .groupBy(col("source"), col("lang"))
@@ -943,7 +939,7 @@ object IncrementalDedup {
             .option("checkpointLocation", ck.getPath)
             .trigger(Trigger.AvailableNow()).start().awaitTermination()
         }
-      } finally rm(ck)
+      } finally engine.Core.deleteRecursively(ck)
       import s.implicits._
       def f4(x: org.apache.spark.sql.Column) =
         floor(x * lit(1e4) + lit(0.5)) / lit(1e4)

@@ -3200,12 +3200,7 @@ object LlmQueries {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start().awaitTermination()
         }
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(ck)
-      }
+      } finally engine.Core.deleteRecursively(ck)
       engine.stream.AppendTable.read(s, resRoot, resSchema)
         .orderBy("qid", "rank")
     },

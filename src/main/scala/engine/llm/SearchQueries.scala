@@ -2064,9 +2064,6 @@ object SearchQueries {
         maxFilesPerTrigger = Some(mft))
       val ck = new java.io.File(engine.Core.scratchRoot +
         s"/graft_ckpt_knngincr_${java.util.UUID.randomUUID}")
-      def rmCk(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmCk)); f.delete(): Unit
-      }
       try {
         engine.stream.StreamQueries.withMicroBatchConfs(s) {
           src.writeStream.queryName("knng_incr").foreachBatch(mergeBatch)
@@ -2074,7 +2071,7 @@ object SearchQueries {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start().awaitTermination()
         }
-      } finally rmCk(ck)
+      } finally engine.Core.deleteRecursively(ck)
       engine.stream.VersionedTable.read(s, graphState)
         .getOrElse(sys.error(s"knn graph state missing at $graphState"))
         .withColumn("rank", row_number().over(
@@ -2765,12 +2762,7 @@ object SearchQueries {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start().awaitTermination()
         }
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(ck)
-      }
+      } finally engine.Core.deleteRecursively(ck)
       engine.stream.AppendTable.read(s, resRoot, resSchema)
         .orderBy("qid", "rank")
     },
@@ -2966,12 +2958,7 @@ object SearchQueries {
     }
     Option(new java.io.File(idxRoot, "segments").listFiles())
       .foreach(_.filter(f => f.isDirectory && f.getName != folded)
-        .foreach { stale =>
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(stale)
-        })
+        .foreach(engine.Core.deleteRecursively))
   }
 
   /** B57: the index-maintenance operator exercising
@@ -3438,10 +3425,7 @@ object SearchQueries {
         }
       } finally {
         commits.quietJoin() // failure path: join without masking
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(ck)
+        engine.Core.deleteRecursively(ck)
       }
       // 4. serve from the CURRENT index version — the merged segment
       // view; the shared bm25Rank join pins scoring identity
@@ -3692,10 +3676,7 @@ object SearchQueries {
         }
       } finally {
         commits.quietJoin() // failure path: join without masking
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(ck)
+        engine.Core.deleteRecursively(ck)
       }
       // 5. SERVE hybrid RRF from the online stores
       s.sparkContext.setJobDescription("onlineh:serve")

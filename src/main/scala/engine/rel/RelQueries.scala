@@ -69,10 +69,7 @@ object RelQueries {
     (s, d) => {
       val san = d.replaceAll("[^a-zA-Z0-9]", "_")
       val out = s"${engine.Core.scratchRoot}/graft_sink_dynpart_$san"
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(): Unit
-      }
-      rmTree(new java.io.File(out)) // clean slate — the run IS the replay
+      engine.Core.deleteRecursively(new java.io.File(out)) // clean slate — the run IS the replay
       val src = t(s, d, "documents")
         .select(col("doc_id"), col("n_chars"), col("lang"))
       src.write.mode("overwrite").partitionBy("lang").parquet(out)

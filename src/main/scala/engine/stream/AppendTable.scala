@@ -1,6 +1,7 @@
 package engine.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import engine.Core.deleteRecursively
 import org.apache.spark.sql.types.StructType
 
 /** Bloom sidecar spec for [[AppendTable]] segments: `key` names the
@@ -485,10 +486,5 @@ object AppendTable {
         s"of $root: ${e.getMessage}"))
     }
     deleteRecursively(root)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 }

@@ -157,12 +157,7 @@ object StreamQueries {
           .outputMode(mode).trigger(Trigger.AvailableNow()).start()
           .awaitTermination()
       }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(ck)
-    }
+    } finally engine.Core.deleteRecursively(ck)
     spark.table(name)
   }
 
@@ -519,14 +514,11 @@ object StreamQueries {
       }
       val ck = new java.io.File(engine.Core.scratchRoot +
         s"/graft_ckpt_upsert_${java.util.UUID.randomUUID}")
-      def rmCk(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmCk)); f.delete(): Unit
-      }
       try {
         src.writeStream.queryName("upsert_fold").foreachBatch(mergeBatch)
           .option("checkpointLocation", ck.getPath)
           .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      } finally rmCk(ck)
+      } finally engine.Core.deleteRecursively(ck)
       VersionedTable.read(s, state)
         .getOrElse(sys.error(s"upsert state missing at $state"))
         .select(col("user_id"), col("last_event_id"), col("last_type"),
@@ -587,14 +579,11 @@ object StreamQueries {
       }
       val ck = new java.io.File(engine.Core.scratchRoot +
         s"/graft_ckpt_topk_${java.util.UUID.randomUUID}")
-      def rmCk(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmCk)); f.delete(): Unit
-      }
       try {
         src.writeStream.queryName("topk_fold").foreachBatch(mergeBatch)
           .option("checkpointLocation", ck.getPath)
           .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      } finally rmCk(ck)
+      } finally engine.Core.deleteRecursively(ck)
       VersionedTable.read(s, state)
         .getOrElse(sys.error(s"topk state missing at $state"))
         .withColumn("rank", row_number().over(rankW))
@@ -667,14 +656,11 @@ object StreamQueries {
       }
       val ck = new java.io.File(engine.Core.scratchRoot +
         s"/graft_ckpt_cdc_${java.util.UUID.randomUUID}")
-      def rmCk(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmCk)); f.delete(): Unit
-      }
       try {
         src.writeStream.queryName("cdc_apply").foreachBatch(mergeBatch)
           .option("checkpointLocation", ck.getPath)
           .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      } finally rmCk(ck)
+      } finally engine.Core.deleteRecursively(ck)
       VersionedTable.read(s, state)
         .getOrElse(sys.error(s"cdc state missing at $state"))
         .filter(col("op") =!= "D") // tombstoned keys leave the served view
@@ -804,14 +790,11 @@ object StreamQueries {
         orderedBy = Some("tu,event_id"), maxFilesPerTrigger = Some(mft))
       val ck = new java.io.File(engine.Core.scratchRoot +
         s"/graft_ckpt_scd2_${java.util.UUID.randomUUID}")
-      def rmCk(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmCk)); f.delete(): Unit
-      }
       try {
         src.writeStream.queryName("scd2_apply").foreachBatch(mergeBatch)
           .option("checkpointLocation", ck.getPath)
           .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      } finally rmCk(ck)
+      } finally engine.Core.deleteRecursively(ck)
       val closed = AppendTable.read(s, closedStore, closedSchema)
         .withColumn("is_current", lit(false))
       val open = VersionedTable.read(s, openState)

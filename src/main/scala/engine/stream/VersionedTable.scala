@@ -1,6 +1,7 @@
 package engine.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import engine.Core.deleteRecursively
 
 /** A crash-safe parquet state table for foreachBatch merge sinks: every
   * commit writes a FRESH version directory (`v<id>/`) and then atomically
@@ -116,9 +117,4 @@ object VersionedTable {
 
   /** Remove the table entirely (fresh-run reset). */
   def destroy(root: java.io.File): Unit = deleteRecursively(root)
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
 }

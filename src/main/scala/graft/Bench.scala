@@ -31,38 +31,21 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    // Per-trigger wall times for every streaming query that runs inside
-    // a timed window (r13 verdict item 4: the trigger-timed ops doubled
-    // between a builder run and the driver run with no cache-build
-    // attribution to explain it — machine load on trigger-granular
-    // machinery is invisible in a single per-op number). The listener
-    // records "sinkName#batchId:durationMs" per completed trigger;
-    // once() drains it into the op's attribution entry, so a slow op
-    // decomposes into WHICH trigger paid and how much.
-    val triggerLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val streamsStarted = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(e: org.apache.spark.sql.streaming
-            .StreamingQueryListener.QueryStartedEvent): Unit = {
-          streamsStarted.incrementAndGet(): Unit
+    // every timed run's record: jobs, tasks, task CPU, shuffle and
+    // per-trigger phases, next to its wall time
+    val recorder = OpRecorder.attach(spark)
+    val queries = SparkEntry.queries
+    /** One run of `q`: its seconds (-1 on a crash, never a flatteringly
+      * fast time-to-failure) and its record. */
+    def timed(q: String): (Double, OpRecord) = {
+      val (ok, rec) = recorder.measure {
+        try { Eval.rows(queries(q)(spark, sfDir)); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $q FAILED: ${e.getMessage}")
+          false
         }
-        override def onQueryProgress(e: org.apache.spark.sql.streaming
-            .StreamingQueryListener.QueryProgressEvent): Unit = {
-          val p = e.progress
-          val ms = Option(p.durationMs.get("triggerExecution"))
-            .map(_.longValue).getOrElse(-1L)
-          triggerLog.add(
-            s"${Option(p.name).getOrElse("anon")}#${p.batchId}:$ms"): Unit
-        }
-        override def onQueryTerminated(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      })
-    def drainTriggers(): Seq[String] = {
-      val b = Seq.newBuilder[String]
-      var x = triggerLog.poll()
-      while (x != null) { b += x; x = triggerLog.poll() }
-      b.result()
+      }
+      (if (ok) rec.wallS else -1.0, rec)
     }
     // warm-up: touch the scan path, shuffle machinery, codegen cache,
     // AND the streaming stack (MicroBatchExecution, file source, memory
@@ -70,157 +53,111 @@ object Bench {
     // heap, so without a streaming warm-up the first stream op absorbs
     // all of that machinery's JIT inside its timed window
     for (w <- Seq("scan_parquet", "agg_hash", "stream_join_static"))
-      try SparkEntry.queries(w)(spark, sfDir).count()
+      try queries(w)(spark, sfDir).count()
       catch { case _: Throwable => }
     // Best-of-2 per query, with a BLOCKING cache drain and a full GC
-    // between timed runs: r2's single-shot numbers drifted 2-7x on
-    // untouched queries because lazy unpersist + GC pressure from earlier
-    // queries leaked into later timed regions. The min of two isolated
-    // runs reproduces a query's standalone cost (and the second run reuses
-    // the deterministic /tmp stream-source caches, so one-time scratch
-    // builds don't masquerade as query cost).
-    // FIXED run order (was: immutable-Map hash order, which reshuffled
-    // whenever the id set changed — round-over-round per-query deltas
-    // then compared different heap states). Stateful streaming queries
-    // run FIRST on a fresh heap: they are the most allocation-sensitive
-    // (state stores + per-trigger sinks), and the drain+GC between
-    // queries cannot undo fragmentation from 90 earlier queries. The
-    // rest run alphabetically. The key is SHARED with ScaleProbe
-    // (SparkEntry.benchOrderKey) — see its doc for why that matters.
-    // builder iteration only (the driver never sets it): restrict the
-    // timed sweep to a comma-separated id list — same warm-up, same
-    // best-of-2 semantics, so a targeted number is comparable to the
-    // full sweep's
+    // between timed runs: lazy unpersist and GC pressure from earlier
+    // queries would otherwise leak into later timed regions. The min of
+    // two isolated runs reproduces a query's standalone cost (and the
+    // second run reuses the deterministic /tmp stream-source caches, so
+    // one-time scratch builds don't masquerade as query cost).
+    // Fixed run order, so round-over-round per-query deltas compare the
+    // same heap states: stateful streaming queries run FIRST on a fresh
+    // heap, since they are the most allocation-sensitive (state stores +
+    // per-trigger sinks) and the drain+GC between queries cannot undo
+    // fragmentation from 90 earlier queries. The rest run alphabetically.
+    // The key is SHARED with ScaleProbe (SparkEntry.benchOrderKey) — see
+    // its doc for why that matters.
+    // SPARK_GRAFT_BENCH_ONLY restricts the timed sweep to a comma-
+    // separated id list — same warm-up, same best-of-2 semantics, so a
+    // targeted number is comparable to the full sweep's
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .sortBy { case (name, _) => SparkEntry.benchOrderKey(name) }
-    val results = ordered.map { case (name, fn) =>
-      def once(): (Double, Seq[String], Seq[String]) = {
+    val ordered = queries.keys.toSeq
+      .filter(name => only.forall(_.contains(name)))
+      .sortBy(SparkEntry.benchOrderKey)
+    val results = ordered.map { name =>
+      def once(): (Double, Seq[String], OpRecord) = {
         engine.ScratchCache.drainBuiltLog() // discard pre-window noise
-        drainTriggers()                     // discard pre-window events
-        val s0 = streamsStarted.get()
-        val t0 = System.nanoTime()
-        // a crash records -1, never a flatteringly-fast time-to-failure
-        val dt =
-          try { Eval.rows(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            -1.0
-          }
+        val (dt, rec) = timed(name)
         val built = engine.ScratchCache.drainBuiltLog()
-        // progress events post on an ASYNC listener bus with no flush
-        // guarantee at termination (r14 advisor — the old comment
-        // claimed the opposite), so the final trigger could land in the
-        // NEXT op's list. If this window ran any stream, grace-drain
-        // outside the timed region until two consecutive 50 ms polls
-        // come back empty; batch-only windows skip the wait entirely.
-        val trig = {
-          val got = Seq.newBuilder[String]
-          got ++= drainTriggers()
-          if (streamsStarted.get() != s0) {
-            var quiet = 0
-            var spins = 0
-            while (quiet < 2 && spins < 40) { // ≤ 2 s hard bound
-              Thread.sleep(50)
-              val more = drainTriggers()
-              if (more.isEmpty) quiet += 1
-              else { quiet = 0; got ++= more }
-              spins += 1
-            }
-          }
-          got.result()
-        }
         engine.ScratchCache.drain() // blocking; outside the timed region
-        (dt, built, trig)
+        (dt, built, rec)
       }
-      val (first, built1, trig1) = once()
+      val (first, built1, rec1) = once()
       System.gc()
-      val (second, built2, trig2) = once()
+      val (second, built2, rec2) = once()
       System.gc()
       // min over SUCCESSFUL runs only: a bare min() would let the -1.0
       // failure sentinel shadow a valid time when exactly one run is
-      // transiently flaky (r3 advisor). -1 only if both runs failed.
+      // transiently flaky. -1 only if both runs failed.
       val best = Seq(first, second).filter(_ >= 0) match {
         case Nil => -1.0
         case xs  => xs.min
       }
-      (name, best, first, second, built1 ++ built2, trig1 ++ trig2)
+      (name, best, first, second, built1 ++ built2, Seq(rec1, rec2))
     }
     val qs = results.map { case (k, v, _, _, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // per-op attribution: both raw runs plus the shared keyed-cache
-    // entries this op was FIRST to register (and so paid the one-time
-    // build for). With best-of-2, a shared build lands in t1 and the
-    // kept min is usually the build-free t2 — the column explains
-    // round-over-round deltas where an op inherited (or shed) a build
-    // because a cache-sharing sibling entered the sweep (r12 verdict
-    // item 3: 85-103 s same-round totals, uninterpretable without this).
-    val attribution = results.map { case (k, _, t1, t2, built, trig) =>
-      val bl = built.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val tl = trig.map("\"" + _ + "\"").mkString("[", ",", "]")
-      f""""$k":{"t1":$t1%.3f,"t2":$t2%.3f,"built":$bl,"trig":$tl}"""
+    // per-op attribution: both raw runs, each with its record, plus the
+    // shared keyed-cache entries this op was FIRST to register (and so
+    // paid the one-time build for). With best-of-2, a shared build lands
+    // in t1 and the kept min is usually the build-free t2 — the column
+    // explains round-over-round deltas where an op inherited (or shed) a
+    // build because a cache-sharing sibling entered the sweep.
+    val attribution = results.map { case (k, _, t1, t2, built, recs) =>
+      val bl = built.map(OpRecord.quote).mkString("[", ",", "]")
+      val rl = recs.map(_.json).mkString("[", ",", "]")
+      f""""$k":{"t1":$t1%.3f,"t2":$t2%.3f,"built":$bl,"runs":$rl}"""
     }.mkString("{", ",", "}")
     // hard failures (-1) are visible per-query but must not subtract
     // from the reported total — and they are surfaced as a first-class
     // count + id list so a partially-broken sweep can never read as a
-    // faster total (r10: 31 silent -1.0s made 132.7 s look like a win)
+    // faster total
     val total = results.map(_._2).filter(_ >= 0).sum
     val failedIds = results.collect { case (k, v, _, _, _, _) if v < 0 => k }
     val failedList = failedIds.map("\"" + _ + "\"").mkString("[", ",", "]")
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // per-query band vs the PREVIOUS round's committed bench_out.json,
-    // read before this run overwrites it (r16 verdict item 4: corpus-
-    // growth ratios can't see per-row constant blowups; the bench band
-    // can — see DriftCheck). Report-only; rides the artifact.
+    // read before this run overwrites it (corpus-growth ratios can't see
+    // per-row constant blowups; the bench band can — see DriftCheck).
+    // Report-only; rides the artifact.
     //
-    // SELF-ADJUDICATING (r17 verdict item 1): every flagged op is
-    // re-run ONCE, in-process, after a blocking cache drain + GC, and
-    // both timings ride the flag entry. The r17 sweep flagged
-    // sim_search_ivf_indexed at 7.3× from transient box load during the
-    // timed window; with only the single number in the artifact, the
-    // idle truth and the official artifact could contradict each other
-    // for a whole round. The embedded re-run closes that: environmental
-    // load shows as rerun ≈ prev (the flag carries its own refutation);
-    // a real plan regression reproduces (rerun ≈ cur). The re-run sees
-    // any process-lifetime keyed caches already built — so it measures
-    // the op's steady-state cost, which is exactly what the band is
-    // banding (one-time builds are already visible in `built`).
+    // SELF-ADJUDICATING: every flagged op is re-run in-process, each run
+    // after a blocking cache drain + GC, and the timings ride the flag
+    // entry, so transient box load during the timed window shows as
+    // rerun ≈ prev (the flag carries its own refutation) while a real
+    // plan regression reproduces (rerun ≈ cur). The re-runs see any
+    // process-lifetime keyed caches already built — so they measure the
+    // op's steady-state cost, which is exactly what the band is banding
+    // (one-time builds are already visible in `built`).
     //
-    // FAIL-CLOSED MARKER (r17 ADVICE): a missing/unreadable/malformed
-    // previous artifact used to be swallowed into "drift":{} — a judge
-    // read that as "no drift" even when the gate never executed. Now a
-    // gate failure emits "drift_error" with the exception and stderr
-    // gets the stack, so an empty map always means the gate RAN clean.
+    // FAIL-CLOSED: a missing, unreadable or malformed previous artifact
+    // emits "drift_error" with the exception and stderr gets the stack,
+    // so an empty "drift" map always means the gate RAN clean.
     val (drift, driftError) = {
       val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", out)
       try {
         val prevQ = DriftCheck.readQueries(prevPath)
         // a READABLE-but-unparseable previous artifact (truncated
         // mid-write) parses to an empty map without throwing — which
-        // would re-open exactly the fail-open hole the catch below
-        // closes (r18 review); a real bench artifact always has queries
+        // would re-open the fail-open hole the catch below closes; a
+        // real bench artifact always has queries
         if (prevQ.isEmpty)
           throw new IllegalStateException(
             s"previous bench artifact $prevPath parsed to an empty queries map")
         val flags = DriftCheck.check(prevQ,
           results.map { case (k, v, _, _, _, _) => k -> v }.toMap)
-        // the ISOLATED TRIPLE (r20 verdict item 3): one re-run can be
-        // unlucky either way; three isolated runs + the median decide,
-        // and the whole protocol rides the artifact so a flag's
-        // disposition is machine-readable (DriftCheck.adjudicate, unit-
-        // pinned by DriftCheckSpec) — never a SURVEY paragraph again
+        // the ISOLATED TRIPLE: one re-run can be unlucky either way;
+        // three isolated runs + the median decide, and the whole
+        // protocol rides the artifact so a flag's disposition is
+        // machine-readable (DriftCheck.adjudicate, unit-pinned by
+        // DriftCheckSpec)
         val adjudicated = flags.map { case (q, p, c, r) =>
           val triple = (1 to 3).map { _ =>
             engine.ScratchCache.drainBuiltLog(): Unit
-            drainTriggers(): Unit
             System.gc()
-            val t0 = System.nanoTime()
-            val rr =
-              try { Eval.rows(SparkEntry.queries(q)(spark, sfDir))
-                    (System.nanoTime() - t0) / 1e9 }
-              catch { case _: Throwable => -1.0 }
+            val rr = timed(q)._1
             engine.ScratchCache.drain()
             rr
           }
@@ -242,26 +179,22 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] drift gate FAILED on $prevPath:")
         e.printStackTrace()
-        val msg = (e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse(""))
-          .replace("\\", "\\\\").replace("\"", "\\\"")
-          .replace("\n", " ").take(300)
-        ("{}", "\"" + msg + "\"")
+        ("{}", OpRecord.quote((e.getClass.getSimpleName + ": " +
+          Option(e.getMessage).getOrElse("")).take(300)))
       }
     }
     // the FULL record (with the per-query map + drift + attribution)
-    // goes to the file. stdout gets TWO metric lines (r21 verdict item
-    // 1 — the driver's per-query comparator went blind when the map
-    // left stdout in r15):
+    // goes to the file. stdout gets TWO metric lines, so a per-query
+    // comparator reading stdout keeps the map:
     //   1. FIRST, a total line WITH the per-query map (ms precision,
     //      ~5.5 KB at 226 queries) — a parser that reads the full
     //      stdout stream recovers per-query/geomean/scaling from it.
     //   2. LAST, the short (< 1 KB) total line — identical totals,
     //      guaranteed to survive a bounded tail-capture window intact.
     // Ordering is the safety argument: a tail window truncates the
-    // STREAM HEAD, so the short final line always parses (the r10/r11
-    // failure was a single long line as the ONLY metric line — its head
-    // was cut and the round's bench parse returned null). Both lines
+    // STREAM HEAD, so the short final line always parses (a single long
+    // line as the ONLY metric line loses its head to such a window, and
+    // the bench parse returns null). Both lines
     // carry the same totals, so any parser strategy (first parseable,
     // last parseable, scan-all) reads a correct total, and per-query
     // data is available to any full-stream reader.

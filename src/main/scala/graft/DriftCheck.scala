@@ -1,6 +1,6 @@
 package graft
 
-/** Per-query bench-band drift gate (r16 verdict item 4).
+/** Per-query bench-band drift gate.
   *
   * The corpus-growth ratios in ScaleProbe cannot catch a PER-ROW
   * constant blowup: multimodal_align's defect was quadratic in document
@@ -19,8 +19,8 @@ package graft
   *    the judge sees the band violation in the same file as the number.
   *  - A standalone main for offline demonstration/adjudication:
   *    {{{ runMain graft.DriftCheck <prev_bench.json> <cur_bench.json> }}}
-  *    e.g. the r15→r16 artifacts, where the unfixed multimodal_align
-  *    fires at ~672× (the retroactive proof this gate closes the class).
+  *    e.g. on two artifacts around a per-row blowup like the unfixed
+  *    multimodal_align, which fires at ~672×.
   *
   * Report-only by design: wall-clock on a shared box carries noise and
   * the bench already runs under a wall-clock budget, so the gate's job
@@ -37,7 +37,7 @@ object DriftCheck {
     * a 0.1 s → 0.4 s move is scheduler noise, not a plan change. */
   val AbsFloorSec = 1.0
 
-  /** Adjudication CLEAR threshold (r21 verdict item 8) — deliberately
+  /** Adjudication CLEAR threshold — deliberately
     * tighter than [[DriftBand]]: the 3× band is right for FLAGGING
     * (catches complexity-class blowups without false-positive spam),
     * but clearing a flag only requires the isolated triple's median to
@@ -55,10 +55,10 @@ object DriftCheck {
       java.nio.file.Paths.get(path)))
     val qBlock = """"queries"\s*:\s*\{([^}]*)\}""".r
       .findFirstMatchIn(src).map(_.group(1)).getOrElse("")
-    // signed-exponent-aware (r17 ADVICE): Bench writes raw
-    // Double.toString, which goes scientific below 1e-3 (8.3E-4) — the
-    // old char-class regex captured "8.3E" and .toDouble threw,
-    // crashing the main and silently emptying Bench's drift map
+    // signed-exponent-aware: Bench writes raw Double.toString, which
+    // goes scientific below 1e-3 (8.3E-4); a plain char-class regex
+    // would capture "8.3E", and .toDouble would throw, crash the main
+    // and silently empty Bench's drift map
     """"([A-Za-z0-9_]+)"\s*:\s*(-?[0-9.]+(?:[eE][+-]?[0-9]+)?)""".r
       .findAllMatchIn(qBlock)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
@@ -74,7 +74,7 @@ object DriftCheck {
         .map(p => (q, p, c, c / p))
     }.sortBy(-_._4)
 
-  /** Isolated-triple adjudication (r20 verdict item 3): a flag's
+  /** Isolated-triple adjudication: a flag's
     * disposition must be machine-readable IN the artifact, not a
     * SURVEY paragraph. [[Bench]] re-runs every flagged op three times
     * (each isolated: blocking cache drain + GC first) and this decides:
@@ -86,8 +86,7 @@ object DriftCheck {
     * (median, cleared); median −1 when every re-run crashed (never
     * cleared). Median, not min: a single lucky fast run must not clear
     * a real regression, and a single loaded run must not sustain a
-    * false flag — the lesson-9 protocol the r20 retention_cohorts flag
-    * was hand-cleared by. */
+    * false flag. */
   def adjudicate(prevSec: Double, isolated: Seq[Double])
       : (Double, Boolean) = {
     val valid = isolated.filter(_ >= 0).sorted
@@ -97,8 +96,8 @@ object DriftCheck {
     (med, cleared)
   }
 
-  /** Per-op (sec, us_per_row) from a committed scaleprobe artifact
-    * (r17 verdict item 3). Same tolerant flat-regex discipline as
+  /** Per-op (sec, us_per_row) from a committed scaleprobe artifact.
+    * Same tolerant flat-regex discipline as
     * [[readQueries]] — the file is machine-written by ScaleProbe. */
   def readProbe(path: String): Map[String, (Double, Double)] = {
     val f = java.nio.file.Paths.get(path)
@@ -111,7 +110,7 @@ object DriftCheck {
       .toMap
   }
 
-  /** Probe-artifact per-row-cost band (r17 verdict item 3): the bench
+  /** Probe-artifact per-row-cost band: the bench
     * band sees absolute seconds within the bench; the probe's
     * `us_per_row` is the number a slow CROSS-ROUND per-row-cost creep
     * moves (the within-round vs10x/vs30x ratios only see growth across

@@ -2,19 +2,18 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The ONE timed action shared by Bench/MiniBench/ScaleProbe/SkewProbe/
-  * JobTimer (r16): evaluate EVERY output column through the built-in
+/** The ONE timed action shared by Bench, ScaleProbe, SkewProbe and
+  * TriggerProbe: evaluate EVERY output column through the built-in
   * noop sink and return the row count from an [[org.apache.spark.sql
   * .Observation]] riding the same execution.
   *
-  * `.count()` — the timed action through r15 — lets Catalyst prune all
-  * output columns and then eliminate whole subtrees that only feed
-  * pruned columns: a distinct-keyed flag join (dedup_semantic's `kept`
-  * left join) vanishes under count(), so the bench timed the cell
-  * assignment but never the within-cell pair verification — caught by
-  * the r16 skew probe, where the capped and uncapped hot-cell runs
-  * timed identically because neither was running the pairs. count()
-  * also drops the final ORDER BY. The noop sink materializes every
+  * `.count()` lets Catalyst prune all output columns and then eliminate
+  * whole subtrees that only feed pruned columns: a distinct-keyed flag
+  * join (dedup_semantic's `kept` left join) vanishes under count(), so
+  * a count()-timed run times the cell assignment but never the
+  * within-cell pair verification — the skew probe's capped and uncapped
+  * hot-cell runs then time identically because neither runs the pairs.
+  * count() also drops the final ORDER BY. The noop sink materializes every
   * output row with all columns — the work a user collecting the result
   * pays — while writing nothing; the observed count(1) makes the row
   * count free (no second execution).

@@ -14,12 +14,12 @@ import org.apache.spark.sql.functions._
   * `runMain graft.ScaleProbe 30` runs the FRONTIER probe instead: the
   * top-8 ops by committed 10× probe time, on a 30× corpus, written to
   * `scaleprobe30.json` with each op's t30/t10 ratio. The 15× gate at
-  * 10× says nothing about the 100× trend for ops in the 11-14× band
-  * (r11 verdict); ~linear scaling predicts t30/t10 ≈ scale/10, so any
-  * ratio above the scale-proportional line ([[FrontierFactor]] ×
-  * scale/30 — 3.3 at 30×, 11.0 at 100×) is flagged in the artifact
-  * and on stdout — verdict-visible, not a hard failure (absolute
-  * times at larger scales carry proportionally more noise). */
+  * 10× says nothing about the 100× trend for ops in the 11-14× band;
+  * ~linear scaling predicts t30/t10 ≈ scale/10, so any ratio above the
+  * scale-proportional line ([[FrontierFactor]] × scale/30 — 3.3 at
+  * 30×, 11.0 at 100×) is flagged in the artifact and on stdout, not as
+  * a hard failure (absolute times at larger scales carry
+  * proportionally more noise). */
 object ScaleProbe {
   /** Loose on purpose: ~constant-factor noise passes, O(n²) does not. */
   val RegressionFactor = 15.0
@@ -60,9 +60,9 @@ object ScaleProbe {
       emb.withColumn("vec_id", col("vec_id") + lit(k * n)))
       .reduce(_ unionAll _)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    // r16 (r15 verdict item 4): the relational/stream wave reads the
-    // TPC-H-ish tables — replicate them too, id-offset per replica so
-    // keys stay unique and cross-table joins stay consistent:
+    // the relational/stream ops read the TPC-H-ish tables — replicate
+    // them too, id-offset per replica so keys stay unique and
+    // cross-table joins stay consistent:
     // events.user_id and orders.o_custkey share the +k·1e6 offset
     // (stream_asof_enrich joins them), o_orderkey/l_orderkey share
     // +k·1e7, and event_id's +k·1e6 offset preserves event_id % 10
@@ -94,7 +94,7 @@ object ScaleProbe {
     // store ops FIRST precisely to see a fresh heap (Bench doc), but in
     // this JVM the scaled-corpus write just churned it — without the
     // barrier dedup_incremental measured 18-22 s here vs 7-14 s
-    // standalone (MiniBench) on the identical corpus
+    // standalone on the identical corpus
     engine.ScratchCache.drain()
     System.gc()
     spark.conf.set("spark.graft.dedupEmbedding.mode", "banded")
@@ -102,7 +102,7 @@ object ScaleProbe {
     // cell count ∝ √N (the probe corpus has 2000 × scale vectors), so
     // assignment O(N·k) and within-cell pair work O(N·⟨cell⟩) both grow
     // as N^1.5 — a FIXED 16-cell codebook is quadratic and measured so
-    // (graph_pagerank 6.15× at 3× data in the r14 fixed-k probe)
+    // (graph_pagerank 6.15× at 3× data in a fixed-k probe)
     val knnK = math.max(16, math.ceil(math.sqrt(2000.0 * scale)).toInt)
     spark.conf.set("spark.graft.knng.k", knnK.toString)
     spark.conf.set("spark.graft.semdedup.k", knnK.toString)
@@ -114,22 +114,19 @@ object ScaleProbe {
     val opsOverride = args.drop(1).toSeq
     val ops = (if (opsOverride.nonEmpty) opsOverride
       else if (scale == 10) fullOps
-      // scale=100: the top-8 frontier (r17 verdict item 4 — the 30×
-      // trend set, re-probed at 100× now that per-op cost is down ~2×)
-      // PLUS the output-bound pair emitters (r12 verdict item 8), whose
-      // us_per_row_vs10x/vs30x fields keep "output-bound" a measured
-      // claim rather than a label
+      // scale=100: the top-8 frontier (the 30× trend set) PLUS the
+      // output-bound pair emitters, whose us_per_row_vs10x/vs30x fields
+      // keep "output-bound" a measured claim rather than a label
       else if (scale == 100)
-        // tokenize_decode stays on the 100× roster by name: it carried
-        // the r19 superlinear flag (fixed r20 — the narrow-posting-path
+        // tokenize_decode stays on the 100× roster by name: it once
+        // scaled superlinearly (fixed by the narrow-posting-path
         // rewrite), and the clean ratio must remain a MEASURED artifact
         // even now that the op is fast enough to fall out of the top-8.
-        // r21 (r20 verdict item 8): the frontier roster is no longer
-        // extrapolated from the batch-heavy top-8 — the streaming
-        // capstone stateful ops and one op per LLM family ride by name
-        // (stream_stateful_merge, stream_scd2_apply; dedup's
-        // dedup_embedding_banded, sim-search's sim_search_ivfpq_indexed,
-        // curation's pack_sequences)
+        // The frontier roster is not extrapolated from the batch-heavy
+        // top-8 alone — the streaming capstone stateful ops and one op
+        // per LLM family ride by name (stream_stateful_merge,
+        // stream_scd2_apply; dedup's dedup_embedding_banded, sim-search's
+        // sim_search_ivfpq_indexed, curation's pack_sequences)
         withProxies(tenProbe.toSeq.sortBy(-_._2).take(8).map(_._1) ++
           Seq("decontaminate_incremental", "dedup_edit_distance",
             "dedup_ngram_jaccard", "tokenize_decode",
@@ -148,8 +145,8 @@ object ScaleProbe {
     // the self-regression gate only runs at 10x (frontier runs are
     // flagged by ratio, not gated), so only read the prior artifact there
     val prev = if (scale == 10) readPrev(artifactPath(10)) else Map.empty[String, Double]
-    // ops whose replica-physics flags demand measured work counters
-    // (r20 verdict item 2): after the TIMED run — which stays
+    // ops whose replica-physics flags demand measured work counters:
+    // after the TIMED run — which stays
     // counter-free so sec/us_per_row remain comparable to previous
     // rounds' artifacts — the op replays once with
     // spark.graft.probe.counters on, and the drained counters
@@ -166,21 +163,18 @@ object ScaleProbe {
       engine.ScratchCache.drain(); System.gc()
       val counters: Map[String, Long] = if (!counterOps(q)) Map.empty
         else {
-          spark.conf.set("spark.graft.probe.counters", "true")
-          try {
+          try engine.Core.withConfs(spark)(
+              "spark.graft.probe.counters" -> "true") {
             engine.Core.drainProbeCounters(): Unit // pre-window noise
             Eval.rows(SparkEntry.queries(q)(spark, out)): Unit
             engine.Core.drainProbeCounters()
-          } finally {
-            spark.conf.set("spark.graft.probe.counters", "false")
-            engine.ScratchCache.drain(); System.gc()
-          }
+          } finally { engine.ScratchCache.drain(); System.gc() }
         }
       counters.toSeq.sortBy(_._1).foreach { case (k, v) =>
         println(s"SCALE $q counter $k=$v") }
       (q, sec, c, counters)
     }
-    // r15 (r14 verdict item 5): the √N recipe's RECALL trade, measured
+    // the √N recipe's RECALL trade, measured
     // in-engine — within-cell kNN recall vs the exact corpus-wide top-k
     // on a deterministic query sample, at BOTH the oracle-pinned 16
     // cells and the √N-scaled count. On this replica-built corpus the
@@ -189,20 +183,19 @@ object ScaleProbe {
     // two-k trade is pinned in SearchSpec.
     val knngRecall = if (scale != 10) Nil
       else Seq(16, knnK).distinct.map { k =>
-        spark.conf.set("spark.graft.knng.k", k.toString)
-        val r = engine.llm.SearchQueries.blockedKnnRecall(spark, out, 101)
-        engine.ScratchCache.drain(); System.gc()
-        println(f"SCALE knng_recall k=$k: $r%.3f")
-        (k, r)
+        engine.Core.withConfs(spark)("spark.graft.knng.k" -> k.toString) {
+          val r = engine.llm.SearchQueries.blockedKnnRecall(spark, out, 101)
+          engine.ScratchCache.drain(); System.gc()
+          println(f"SCALE knng_recall k=$k: $r%.3f")
+          (k, r)
+        }
       }
-    if (knngRecall.nonEmpty)
-      spark.conf.set("spark.graft.knng.k", knnK.toString)
-    // r16 (r15 verdict item 7): screen/ranking quality as probe fields —
+    // screen/ranking quality as probe fields —
     // dedup_eval's MinHash precision/recall and rank_eval's hybrid
     // nDCG@5 ride the 10× artifact the way knng_recall does, so screen
     // quality is trend-gated against corpus growth, not point-measured
     // at sf0.01
-    // opsOverride gate (r16 ADVICE): debug/override runs skip the
+    // opsOverride gate: debug/override runs skip the
     // artifact write, so paying two pair-table queries for discarded
     // output is pure waste — only the full 10× artifact run measures.
     val qualityFields =
@@ -214,7 +207,7 @@ object ScaleProbe {
           .filter(col("ranker") === "hybrid_rrf")
           .agg(avg(col("ndcg5"))).collect().head
         // avg over an empty/NULL slice is NULL — emit no fields rather
-        // than throw mid-probe (r16 ADVICE)
+        // than throw mid-probe
         if (ndRow.isNullAt(0)) "" else {
           val nd = ndRow.getDouble(0)
           engine.ScratchCache.drain(); System.gc()
@@ -226,7 +219,7 @@ object ScaleProbe {
         }
       }
     val tenRows = readPrevRows(artifactPath(10))
-    // round-over-round per-row-cost band (r17 verdict item 3): the
+    // round-over-round per-row-cost band: the
     // within-round vs10x/vs30x ratios only see growth across SCALES;
     // a per-row constant that creeps ACROSS ROUNDS at fixed scale is
     // invisible to them. Read the previous committed 10× artifact's
@@ -279,7 +272,7 @@ object ScaleProbe {
       val ratio = if (scale == 10) ""
         else tenProbe.get(q).map(t10 =>
           f""", "vs10x": ${sec / t10}%.2f""").getOrElse("")
-      // time-per-output-row (µs) for EVERY op (r16 verdict item 4: a
+      // time-per-output-row (µs) for EVERY op (a
       // per-row constant blowup — quadratic in doc LENGTH, not corpus
       // size — is invisible to every corpus-growth ratio on replicated
       // same-length docs; the absolute per-row cost is the number that
@@ -301,7 +294,7 @@ object ScaleProbe {
             (if (scale != 100) "" else s"${vs("10x", tenProbe, tenRows)}${
               vs("30x", thirty, thirtyRows)}")
         }
-      // measured work counters (r20 verdict item 2) from the untimed
+      // measured work counters from the untimed
       // counter replay; edges_per_point derived when both ε-graph
       // counters are present so the flag_notes' "edges-per-point stays
       // ~scale" claim is directly readable
@@ -328,12 +321,11 @@ object ScaleProbe {
           match { case " \"growth_proxy\": {}," => ""; case s0 => s0 }) +
         // cross-round band field ONLY where the band actually ran
         // (scale 10, full roster): an unconditional `[]` at 30×/100×
-        // read as "band clean" when the band never executed — the
-        // empty-map-means-clean fail-open this round's bench
-        // drift_error fix exists to prevent (r18 review). Same hole
-        // one level down (r18 advisor): a MISSING/unparseable previous
-        // artifact makes prevProbeUs empty, usFlags vacuously empty,
-        // and `[]` would still read as "band clean" — emit an explicit
+        // would read as "band clean" when the band never executed — the
+        // empty-map-means-clean fail-open the bench's drift_error
+        // prevents. Likewise a MISSING/unparseable previous artifact
+        // makes prevProbeUs empty, usFlags vacuously empty, and `[]`
+        // would still read as "band clean" — emit an explicit
         // probe_band_error marker instead, mirroring the bench's
         // drift_error fail-closed.
         (if (scale != 10 || opsOverride.nonEmpty) ""
@@ -411,31 +403,31 @@ object ScaleProbe {
     "sample_hash", "dedup_lines", "pii_scrub", "pack_sequences",
     "dedup_spans", "sample_stratified", "tokenize_ids",
     "embedding_quantize", "embedding_pq",
-    // r8 additions: url canon/caps, temperature resample, persisted
+    // url canon/caps, temperature resample, persisted
     // ANN index + ADC probes, cross-run stores, z-order rewrite
     "dedup_url", "sample_temperature", "sim_search_ivf_indexed",
     "sim_search_pq_adc", "decontaminate_incremental",
     "dedup_embedding_incremental", "stream_ann_probe",
     "pipeline_pretrain",
-    // r11 additions: linear quality gate, per-stratum data card,
+    // linear quality gate, per-stratum data card,
     // cluster-weighted soft dedup
     "quality_classifier", "corpus_report", "sample_cluster_weighted",
     "multimodal_resize", "text_bigram_logprob",
-    // r12 additions: the tokenizer encode path + the B53 retrieval
+    // the tokenizer encode path + the B53 retrieval
     // family (chunking, lexical/hybrid retrieval, clustering, MRL)
     "tokenize_bpe_apply", "text_chunk", "search_bm25",
     "search_hybrid_rrf", "cluster_kmeans", "sim_search_matryoshka",
     "corpus_mixture_plan", "dedup_exact_incremental",
     "sim_search_ivfpq_indexed", "quality_classifier_train",
     "stream_bm25_probe", "cluster_topics",
-    // r13 additions: the online ingest→dedup-stores→index→serve
+    // the online ingest→dedup-stores→index→serve
     // capstone and the SemDeDup cluster-blocked embedding screen
     "pipeline_online", "dedup_semantic",
-    // r14 additions: the AppendTable store fold + the hybrid online
+    // the AppendTable store fold + the hybrid online
     // capstone
     "maintenance_store_compact", "pipeline_online_hybrid",
     "maintenance_index_compact",
-    // r14 late additions: positional phrase retrieval, MoreLikeThis,
+    // positional phrase retrieval, MoreLikeThis,
     // the cluster-blocked kNN graph build, chunk-granular passage
     // retrieval, the incremental data card. stream_topk is NOT probed —
     // like stream_upsert_sink it reads `events` (not in the probe
@@ -444,7 +436,7 @@ object ScaleProbe {
     "search_passage", "corpus_report_incremental", "graph_pagerank",
     "tokenize_report", "tokenize_vocab_coverage", "sample_quality_topk",
     "search_autocomplete",
-    // r15 additions: the IVF posting-store fold (vector twin of
+    // the IVF posting-store fold (vector twin of
     // maintenance_index_compact), contrastive hard-negative mining,
     // snippet generation
     "maintenance_ivf_compact", "mine_hard_negatives", "search_snippet",
@@ -456,10 +448,9 @@ object ScaleProbe {
     "quality_classifier_eval", "sim_search_filtered",
     "sim_search_ivf_filtered", "search_facets", "search_prf",
     "multimodal_phash_dedup",
-    // r15 fourth wave
     "rank_eval", "multimodal_align", "search_bm25f", "pipeline_rag",
     "corpus_heavy_hitters", "dedup_eval",
-    // r16 additions (r15 verdict item 4): the relational/stream wave
+    // the relational/stream wave
     // over the now-replicated events/orders/lineitem tables — sketch
     // aggs, the asof family, the CDC/SCD2 streaming folds, DPP, the
     // dynamic-overwrite sink, and the batch MERGE twin
@@ -469,18 +460,18 @@ object ScaleProbe {
     "join_partition_pruned", "sink_dynamic_overwrite", "observe_metrics",
     "maintenance_stats_analyze", "stream_cdc_apply", "stream_scd2_apply",
     "stream_asof_enrich", "merge_into",
-    // r17: the no-equi-key range join — THE shape whose candidate count
+    // the no-equi-key range join — THE shape whose candidate count
     // must be probed at scale (bucket-locality bound, never |C|·|P|) —
     // and the char-entropy quality signal (a full char explode is the
     // widest fan-out in the text family: ~300× row expansion)
     "join_range_bucketed", "text_entropy", "sample_split",
     "corpus_length_histogram",
-    // r18: the CCNet perplexity-tercile gate — its tercile window is a
+    // the CCNet perplexity-tercile gate — its tercile window is a
     // per-lang sort of ONE narrow row per doc, the shape to probe —
     // and the OHLC hour-bucket downsample (one partial-agg groupBy
     // over the replicated events table)
     "quality_perplexity", "ts_downsample",
-    // r19: the telemetry QA window pair (range-frame z-scores, the
+    // the telemetry QA window pair (range-frame z-scores, the
     // sweep-line interval union) + gaps-and-islands streaks, the
     // surgical Bloom-pruned store purge, snapshot retention reads,
     // bounded BFS over the kNN graph, and the per-shard manifest
@@ -489,7 +480,7 @@ object ScaleProbe {
     "ts_anomaly", "ts_interval_union", "win_streaks",
     "maintenance_purge_keys", "maintenance_time_travel",
     "graph_shortest_path", "sample_global_shuffle",
-    // r19 continuation: finite-K EWMA smoothing, bitmap-word exact
+    // finite-K EWMA smoothing, bitmap-word exact
     // distinct, density clustering over the banded epsilon graph
     "ts_ewma", "agg_bitmap_distinct", "cluster_dbscan",
     "agg_bitmap_retention", "embedding_outlier_knn", "ts_cusum",

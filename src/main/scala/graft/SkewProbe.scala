@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
-/** Forced-skew probe (r15 verdict item 1): the committed scale probes
+/** Forced-skew probe: the committed scale probes
   * all run on the driver's uniform/isotropic testdata, which hides the
   * #1 risk at 100 TB — a hot key or hot cell concentrating a join/agg/
   * pair-enumeration on one straggler reducer. This main synthesizes the
@@ -39,26 +39,13 @@ import org.apache.spark.sql.DataFrame
   */
 object SkewProbe {
   /** Balance (max task / ideal task) above which a skewed run is
-    * flagged. 2.0 is the verdict's bound; +25% absorbs task-scheduling
+    * flagged. 2.0 is the balance bound; +25% absorbs task-scheduling
     * jitter on a shared box (max over hundreds of tasks is noisy). */
   val FlagRatio = 2.5
 
   /** Below this max-task time a run cannot meaningfully straggle —
     * scheduling jitter dominates sub-second tasks. */
   val MinStragglerMs = 500L
-
-  private class MaxTaskListener extends org.apache.spark.scheduler.SparkListener {
-    @volatile var maxMs: Long = 0L
-    private val sum = new java.util.concurrent.atomic.AtomicLong(0)
-    def sumMs: Long = sum.get()
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val d = e.taskInfo.duration
-      if (d > maxMs) maxMs = d
-      sum.addAndGet(d): Unit
-    }
-    def reset(): Unit = { maxMs = 0L; sum.set(0) }
-  }
 
   def main(args: Array[String]): Unit = {
     val scale = 10
@@ -123,8 +110,7 @@ object SkewProbe {
       s"hot embeddings=${spark.read.parquet(s"$hot/embeddings.parquet").count()}")
     engine.ScratchCache.drain(); System.gc()
 
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
+    val recorder = OpRecorder.attach(spark)
     case class Res(sec: Double, maxMs: Long, sumMs: Long, rows: Long) {
       /** max task over the ideal (total task time spread over the
         * session's cores) — ≈1 is perfectly balanced, >> 1 is a straggler. */
@@ -141,24 +127,10 @@ object SkewProbe {
         // ONLY the operator's own distributed work
         Eval.rows(SparkEntry.queries(q)(spark, dir))
         engine.ScratchCache.drain(); System.gc()
-        listener.reset()
-        val t0 = System.nanoTime()
-        val c = Eval.rows(SparkEntry.queries(q)(spark, dir))
-        val sec = (System.nanoTime() - t0) / 1e9
-        // the listener bus is async with no public flush — poll until
-        // the max is stable for two consecutive 50 ms windows (the
-        // Bench grace-drain discipline), ≤ 2 s hard bound
-        var mt = listener.maxMs; var sm = listener.sumMs
-        var quiet = 0; var spins = 0
-        while (quiet < 2 && spins < 40) {
-          Thread.sleep(50)
-          val m2 = listener.maxMs; val s2 = listener.sumMs
-          if (m2 == mt && s2 == sm) quiet += 1
-          else { mt = m2; sm = s2; quiet = 0 }
-          spins += 1
-        }
-        val r = Res(sec, mt, sm, c)
-        println(f"SKEW $q @$dir: $sec%.2f s, max task $mt ms, " +
+        val (c, rec) =
+          recorder.measure(Eval.rows(SparkEntry.queries(q)(spark, dir)))
+        val r = Res(rec.wallS, rec.taskMsMax, rec.taskMsSum, c)
+        println(f"SKEW $q @$dir: ${r.sec}%.2f s, max task ${r.maxMs} ms, " +
           f"balance ${r.balance}%.2f ($c rows)")
         engine.ScratchCache.drain(); System.gc()
         r

@@ -1,14 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Streaming trigger-cost probe (r16 verdict item 8): the segmented
-  * online-index capstones claim O(batch) commit I/O — every trigger
-  * appends one immutable segment and rewrites only a manifest, so
-  * per-trigger cost must be FLAT in store size. The committed bench
-  * can't see that (its default runs use 2 triggers), so the claim has
-  * carried no number. This main measures it directly:
+/** Streaming trigger-cost probe: the segmented online-index capstones
+  * claim O(batch) commit I/O — every trigger appends one immutable
+  * segment and rewrites only a manifest, so per-trigger cost must be
+  * FLAT in store size. The committed bench can't see that (its default
+  * runs use 2 triggers). This main measures it directly:
   *
   *  - builds a 10× document/embedding corpus (the ScaleProbe
   *    replication scheme) and runs `pipeline_online` and
@@ -16,8 +14,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    16 equal-size triggers, so the LAST triggers commit against a
   *    store ~15× the size the FIRST ones saw: a store-size sweep
   *    inside one run, with batch size held constant;
-  *  - records per-trigger triggerExecution ms from the progress
-  *    listener (the Bench `trig` discipline);
+  *  - reads per-trigger ms from the [[OpRecorder]] record;
   *  - compares the mean of the last 4 triggers against the mean of
   *    triggers 1-4 (trigger 0 is excluded on both sides — it pays
   *    JIT/codegen and the store bootstrap). An O(batch) commit holds
@@ -61,39 +58,19 @@ object TriggerProbe {
     println(s"TRIG wrote ${scale}x corpus")
     engine.ScratchCache.drain(); System.gc()
 
-    // per-trigger ms, keyed by (queryName, batchId) — same listener
-    // field Bench's trig attribution uses
-    val trig = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val ms = Option(e.progress.durationMs.get("triggerExecution"))
-          .map(_.longValue).getOrElse(-1L)
-        trig.put(e.progress.batchId, ms): Unit
-      }
-    })
+    val recorder = OpRecorder.attach(spark)
 
     case class Row(q: String, tag: String, ms: Seq[Long],
         firstQ: Double, lastQ: Double, ratio: Double, flag: Boolean)
     def run(q: String, mftKey: String, mft: Int, dir: String,
         tag: String): Row = {
-      engine.Core.withConfs(spark)(mftKey -> mft.toString) {
-        trig.clear()
-        Eval.rows(SparkEntry.queries(q)(spark, dir)): Unit
-      }
-      // listener bus is async — poll until the trigger map is stable
-      var sz = -1; var spins = 0
-      while (trig.size != sz && spins < 40) {
-        sz = trig.size; Thread.sleep(50); spins += 1
+      val (_, rec) = recorder.measure {
+        engine.Core.withConfs(spark)(mftKey -> mft.toString) {
+          Eval.rows(SparkEntry.queries(q)(spark, dir))
+        }
       }
       engine.ScratchCache.drain(); System.gc()
-      val ms = trig.entrySet().toArray.toSeq
-        .map(_.asInstanceOf[java.util.Map.Entry[Long, Long]])
-        .sortBy(_.getKey).map(_.getValue.longValue)
+      val ms = rec.triggers.map(_.ms)
       // trigger 0 pays JIT + store bootstrap on both sides; AvailableNow
       // also emits a final EMPTY commit batch — drop trailing ~0-row
       // artifacts by keeping only triggers with real ms
@@ -104,10 +81,9 @@ object TriggerProbe {
         else if (body.nonEmpty) (body.head.toDouble, body.last.toDouble)
         else (0.0, 0.0)
       val ratio = if (fq > 0) lq / fq else 0.0
-      // flag only when the quartile means are REAL quartile means
-      // (r17 ADVICE: gating on raw ms.length let a short post-filter
-      // body degrade to a single-trigger last/first comparison that
-      // could flag on jitter)
+      // flag only when the quartile means are REAL quartile means: a
+      // short post-filter body degrades to a single-trigger last/first
+      // comparison that could flag on jitter
       val r = Row(q, tag, ms, fq, lq, ratio,
         body.length >= 8 && ratio > FlagRatio)
       println(f"TRIG $q @$tag: ${ms.length} triggers, " +

@@ -22,7 +22,7 @@ object Verify {
     // ScaleProbe sets (√N cell counts) parameterize the ENGINE, but the
     // DuckDB oracles hard-pin the 16-cell replay — a conf inherited from
     // an earlier run in the same session would report false mismatches
-    // on correct results (r14 advisor). Clear them up front so the
+    // on correct results. Clear them up front so the
     // oracle comparison can never diverge from the replayed SQL.
     Seq("spark.graft.knng.k", "spark.graft.semdedup.k")
       .foreach(spark.conf.unset)
@@ -60,20 +60,12 @@ object Verify {
       }
       finally engine.ScratchCache.drain() // per-query persist lifetime
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every string JSON-escaped, control chars included — a tab or CR
+    // in the SQL would otherwise make the json.load of the compare fail
+    // and silently zero the correctness gate
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${OpRecord.quote(k)}: ${OpRecord.quote(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
