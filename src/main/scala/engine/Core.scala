@@ -165,6 +165,20 @@ object Core {
     }
   }
 
+  /** Run `body` with Spark job description `label` on this thread, then
+    * put back the description that was there before (or none), also
+    * when `body` throws. Jobs started in `body` carry the label, and so
+    * do AQE's query-stage jobs and threads started in `body`, which copy
+    * the thread's local properties. This is the only place engine and
+    * harness code set a job description (CoreSpec's source scan fails
+    * on any other). */
+  def describe[T](s: SparkSession, label: String)(body: => T): T = {
+    val sc = s.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prior)
+  }
+
   /** A cell-count conf as read at ORACLE-BUILD time: the same session
     * conf the engine query reads at run time, so an oracle string built
     * through this can never pin a different k than the plan it replays
@@ -357,8 +371,11 @@ object Core {
     * rename into place. A publish that completed while we were producing
     * ours is a win, never a delete target — the lock closes the
     * re-check→delete window that a marker-only protocol leaves open
-    * (r2 advisor TOCTOU; r3 review). A failed produce step deletes its
-    * own temp dir instead of stranding it in /tmp. */
+    * (a TOCTOU race). A failed produce step deletes its
+    * own temp dir instead of stranding it in /tmp. A publish that moves
+    * its dir into place logs the dir's name as built
+    * ([[ScratchCache.drainBuiltLog]]), so Bench attributes the one-time
+    * write to the op that paid for it. */
   def publishOnce(dir: String)(write: String => Unit): String =
     // canonical key: aliased spellings ("/tmp//x", "/tmp/x/") must map to
     // ONE monitor or same-dir publishes would race after all (r4 review).
@@ -381,9 +398,11 @@ object Core {
           if (marker.exists()) deleteRecursively(tmp) // concurrent publish won
           else {
             if (dest.exists()) deleteRecursively(dest) // crashed, marker-less
-            try java.nio.file.Files.move(tmp.toPath, dest.toPath,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            catch { case _: java.io.IOException => // lost a non-locking race
+            try {
+              java.nio.file.Files.move(tmp.toPath, dest.toPath,
+                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+              ScratchCache.logBuilt(dest.getName)
+            } catch { case _: java.io.IOException => // lost a non-locking race
               deleteRecursively(tmp)
             }
           }
@@ -521,12 +540,15 @@ object ScratchCache {
     }
   }
   /** Keys first REGISTERED (hence first materialized, and paid for)
-    * since the last call — the bench drains this per timing window to
-    * attribute one-time shared-cache builds to the op that triggered
-    * them (r12 verdict: three same-round totals spanned 85-103 s and
-    * per-op deltas were uninterpretable without knowing which op paid
-    * each shared build). */
+    * since the last call, and the names of dirs [[Core.publishOnce]]
+    * wrote — the bench drains this per timing window to attribute
+    * one-time shared builds to the op that triggered them (three
+    * same-round totals spanned 85-103 s, and per-op deltas were
+    * uninterpretable without knowing which op paid each shared build). */
   private val builtLog = scala.collection.mutable.ArrayBuffer.empty[String]
+  private[engine] def logBuilt(name: String): Unit = synchronized {
+    builtLog += name: Unit
+  }
   def drainBuiltLog(): Seq[String] = synchronized {
     val r = builtLog.toList; builtLog.clear(); r
   }

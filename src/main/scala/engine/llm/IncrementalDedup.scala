@@ -2,9 +2,10 @@ package engine.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import engine.Core.t
 import engine.Q
+import engine.stream.StreamQueries.{SourceFiles, asFileStream,
+  runToCompletion, withMicroBatchConfs}
 import LlmQueries.{minhashSignatures, estJaccard}
 
 /** Cross-RUN deduplication against a persisted signature store — the
@@ -66,13 +67,12 @@ object IncrementalDedup {
       // Decomposition invariance (LlmSpec pins the 11-files = 3-batch
       // split against the single-pass result + the whole-corpus oracle)
       // holds for ANY split, so the DEFAULT replay of a static corpus
-      // admits it in one trigger — a deployment sizes the knob to its
-      // arriving batch volume (r12 verdict item 5).
-      val mft = s.conf.get("spark.graft.incr.mft", "32").toInt
-      val src = engine.stream.StreamQueries.asFileStream(s,
+      // admits it in one trigger — a deployment sizes triggers to its
+      // arriving batch volume.
+      val src = asFileStream(s,
         t(s, d, "documents").select(col("doc_id"), col("text")),
         s"incrdocs_$san", orderedBy = Some("doc_id"),
-        maxFilesPerTrigger = Some(mft))
+        maxFilesPerTrigger = Some(SourceFiles))
       // the store's read schema is DERIVED from the signature pipeline
       // itself (analysis-only on a limit(0) frame), never hand-written:
       // a hardcoded DDL would silently null-read every column — and
@@ -135,26 +135,21 @@ object IncrementalDedup {
             store, batchId, Some(LlmQueries.bandKeyBloom))
         } finally { sig.unpersist(); () }
       }
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_incr_${java.util.UUID.randomUUID}")
       // a trigger's frames are batch-sized (corpus/3); 8-way exchanges
       // inside the merge cut per-batch task overhead 4x vs the session's
       // 32 — the per-JOB sizing a deployment sets to its batch volume
       // (4-way measured no better: the merge is stage-count-bound, not
       // task-count-bound, at this sf)
-      try {
-        engine.stream.StreamQueries.withMicroBatchConfs(s) {
-          src.writeStream.queryName("incr_minhash").foreachBatch(mergeBatch)
-            .option("checkpointLocation", ck.getPath)
-            .trigger(Trigger.AvailableNow()).start().awaitTermination()
-        }
-      } finally engine.Core.deleteRecursively(ck)
-      // settle the LAST trigger's deferred sidecar build before the
-      // serve read (r21 advisor): the store must leave this run
-      // complete (the sidecar is what the NEXT nightly run probes
-      // with), a build failure must fail THIS op, and the build's
-      // Spark job must not bleed past the op's own window
-      engine.stream.AppendTable.settle(store)
+      withMicroBatchConfs(s) {
+        runToCompletion(src.writeStream.foreachBatch(mergeBatch), "incr_minhash")
+        // settle the LAST trigger's deferred sidecar build before the
+        // serve read: the store must leave this run complete (the
+        // sidecar is what the NEXT nightly run probes with), a build
+        // failure must fail THIS op, and the build's Spark job must not
+        // bleed past the op's own window. Inside the conf scope, so the
+        // build plans under the settings its trigger ran under.
+        engine.stream.AppendTable.settle(store)
+      }
       val kept = engine.stream.AppendTable.read(s, store, storeSchema)
         .filter(col("kept"))
         .select(col("doc_id"))
@@ -247,26 +242,18 @@ object IncrementalDedup {
       val train = t(s, d, "documents").filter(!LlmQueries.evalBucket(col("doc_id")))
         .select(col("doc_id"), col("text"))
       val resSchema = probe(train.limit(0)).schema
-      // trigger sizing knob: verdicts are f(batch doc, static index),
+      // trigger sizing: verdicts are f(batch doc, static index),
       // so ANY split produces identical output (LlmSpec pins the
       // 11-files = 3-batch split against this default); the static-
-      // corpus replay defaults to ONE trigger (r12 verdict item 5 —
-      // trigger count, not rows, was the bench cost driver)
-      val mft = s.conf.get("spark.graft.decon.mft", "32").toInt
-      val src = engine.stream.StreamQueries.asFileStream(s, train,
+      // corpus replay defaults to ONE trigger (trigger count, not rows,
+      // was the bench cost driver)
+      val src = asFileStream(s, train,
         s"decondocs_$san", orderedBy = Some("doc_id"),
-        maxFilesPerTrigger = Some(mft))
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_decon_${java.util.UUID.randomUUID}")
+        maxFilesPerTrigger = Some(SourceFiles))
       val screenBatch: (DataFrame, Long) => Unit = (batch, batchId) =>
         engine.stream.AppendTable.append(probe(batch), resRoot, batchId)
-      try {
-        engine.stream.StreamQueries.withMicroBatchConfs(s) {
-          src.writeStream.queryName("incr_decon").foreachBatch(screenBatch)
-            .option("checkpointLocation", ck.getPath)
-            .trigger(Trigger.AvailableNow()).start().awaitTermination()
-        }
-      } finally engine.Core.deleteRecursively(ck)
+      withMicroBatchConfs(s)(
+        runToCompletion(src.writeStream.foreachBatch(screenBatch), "incr_decon"))
       engine.stream.AppendTable.read(s, resRoot, resSchema)
         .orderBy("doc_id", "eval_id")
     },
@@ -421,20 +408,12 @@ object IncrementalDedup {
       val mergeBatch: (DataFrame, Long) => Unit =
         srpMergeBatch(store, storeSchema)
       // single-trigger default for the static-corpus replay; LlmSpec
-      // pins the 11-files = 3-batch split (r12 verdict item 5)
-      val mft = s.conf.get("spark.graft.embIncr.mft", "32").toInt
-      val src = engine.stream.StreamQueries.asFileStream(s, src0,
+      // pins the 11-files = 3-batch split
+      val src = asFileStream(s, src0,
         s"incrvecs_$san", orderedBy = Some("vec_id"),
-        maxFilesPerTrigger = Some(mft))
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_incrvec_${java.util.UUID.randomUUID}")
-      try {
-        engine.stream.StreamQueries.withMicroBatchConfs(s) {
-          src.writeStream.queryName("incr_srp").foreachBatch(mergeBatch)
-            .option("checkpointLocation", ck.getPath)
-            .trigger(Trigger.AvailableNow()).start().awaitTermination()
-        }
-      } finally engine.Core.deleteRecursively(ck)
+        maxFilesPerTrigger = Some(SourceFiles))
+      withMicroBatchConfs(s)(
+        runToCompletion(src.writeStream.foreachBatch(mergeBatch), "incr_srp"))
       engine.stream.AppendTable.read(s, store, storeSchema)
         .filter(col("kept"))
         .select(col("vec_id"))
@@ -479,8 +458,8 @@ object IncrementalDedup {
     * prefix so a probe prunes to matching buckets, with a Bloom filter
     * fronting the scan — both pure layout, same verdicts). Ordered
     * admission makes the streamed run hash-match the whole-corpus
-    * dedup_exact oracle for ANY trigger split (`spark.graft.exactIncr
-    * .mft` sizes triggers for the LlmSpec decomposition pin). */
+    * dedup_exact oracle for ANY trigger split (LlmSpec pins a 3-batch
+    * split). */
   private val dedupExactIncremental = Q(
     (s, d) => {
       val san = d.replaceAll("[^a-zA-Z0-9]", "_")
@@ -521,22 +500,15 @@ object IncrementalDedup {
         engine.stream.AppendTable.append(verdicts, store, batchId,
           Some(engine.stream.BloomSpec.column("dg")))
       }
-      val mft = s.conf.get("spark.graft.exactIncr.mft", "32").toInt
-      val src = engine.stream.StreamQueries.asFileStream(s, src0,
+      val src = asFileStream(s, src0,
         s"incrdg_$san", orderedBy = Some("doc_id"),
-        maxFilesPerTrigger = Some(mft))
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_incrdg_${java.util.UUID.randomUUID}")
-      try {
-        engine.stream.StreamQueries.withMicroBatchConfs(s) {
-          src.writeStream.queryName("incr_exact").foreachBatch(mergeBatch)
-            .option("checkpointLocation", ck.getPath)
-            .trigger(Trigger.AvailableNow()).start().awaitTermination()
-        }
-      } finally engine.Core.deleteRecursively(ck)
-      // settle the last trigger's deferred sidecar build before serve
-      // (see dedupIncremental)
-      engine.stream.AppendTable.settle(store)
+        maxFilesPerTrigger = Some(SourceFiles))
+      withMicroBatchConfs(s) {
+        runToCompletion(src.writeStream.foreachBatch(mergeBatch), "incr_exact")
+        // settle the last trigger's deferred sidecar build before serve,
+        // inside the conf scope (see dedupIncremental)
+        engine.stream.AppendTable.settle(store)
+      }
       val kept = engine.stream.AppendTable.read(s, store, storeSchema)
         .filter(col("kept"))
         .select(col("doc_id"))
@@ -589,19 +561,11 @@ object IncrementalDedup {
         .select(col("doc_id"), col("text"))
       val mergeBatch: (DataFrame, Long) => Unit = (batch, batchId) =>
         engine.stream.AppendTable.append(tcOf(batch), newStore, batchId)
-      val mft = s.conf.get("spark.graft.driftIncr.mft", "32").toInt
-      val src = engine.stream.StreamQueries.asFileStream(s, src0,
+      val src = asFileStream(s, src0,
         s"driftincr_$san", orderedBy = Some("doc_id"),
-        maxFilesPerTrigger = Some(mft))
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_driftincr_${java.util.UUID.randomUUID}")
-      try {
-        engine.stream.StreamQueries.withMicroBatchConfs(s) {
-          src.writeStream.queryName("drift_incr").foreachBatch(mergeBatch)
-            .option("checkpointLocation", ck.getPath)
-            .trigger(Trigger.AvailableNow()).start().awaitTermination()
-        }
-      } finally engine.Core.deleteRecursively(ck)
+        maxFilesPerTrigger = Some(SourceFiles))
+      withMicroBatchConfs(s)(
+        runToCompletion(src.writeStream.foreachBatch(mergeBatch), "drift_incr"))
       val refC = engine.stream.AppendTable.read(s, refStore, tcSchema)
         .groupBy(col("term")).agg(sum(col("cnt")).as("n_ref"))
       val newC = engine.stream.AppendTable.read(s, newStore, tcSchema)
@@ -699,19 +663,11 @@ object IncrementalDedup {
         engine.stream.AppendTable.append(cardOf(batch), cardStore, batchId)
         engine.stream.AppendTable.append(dgOf(batch), dgStore, batchId)
       }
-      val mft = s.conf.get("spark.graft.cardIncr.mft", "32").toInt
-      val src = engine.stream.StreamQueries.asFileStream(s, src0,
+      val src = asFileStream(s, src0,
         s"cardincr_$san", orderedBy = Some("doc_id"),
-        maxFilesPerTrigger = Some(mft))
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_cardincr_${java.util.UUID.randomUUID}")
-      try {
-        engine.stream.StreamQueries.withMicroBatchConfs(s) {
-          src.writeStream.queryName("card_incr").foreachBatch(mergeBatch)
-            .option("checkpointLocation", ck.getPath)
-            .trigger(Trigger.AvailableNow()).start().awaitTermination()
-        }
-      } finally engine.Core.deleteRecursively(ck)
+        maxFilesPerTrigger = Some(SourceFiles))
+      withMicroBatchConfs(s)(
+        runToCompletion(src.writeStream.foreachBatch(mergeBatch), "card_incr"))
       // serve = fold the delta archives
       val card = engine.stream.AppendTable.read(s, cardStore, cardSchema)
         .groupBy(col("source"), col("lang"))
@@ -927,19 +883,11 @@ object IncrementalDedup {
       val scSchema = scOf(li0.limit(0)).schema
       val mergeBatch: (DataFrame, Long) => Unit = (batch, batchId) =>
         engine.stream.AppendTable.append(scOf(batch), store, batchId)
-      val mft = s.conf.get("spark.graft.qsIncr.mft", "32").toInt
-      val src = engine.stream.StreamQueries.asFileStream(s, li0,
+      val src = asFileStream(s, li0,
         s"qsincr_$san", orderedBy = Some("rid"),
-        maxFilesPerTrigger = Some(mft))
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_qsincr_${java.util.UUID.randomUUID}")
-      try {
-        engine.stream.StreamQueries.withMicroBatchConfs(s) {
-          src.writeStream.queryName("qs_incr").foreachBatch(mergeBatch)
-            .option("checkpointLocation", ck.getPath)
-            .trigger(Trigger.AvailableNow()).start().awaitTermination()
-        }
-      } finally engine.Core.deleteRecursively(ck)
+        maxFilesPerTrigger = Some(SourceFiles))
+      withMicroBatchConfs(s)(
+        runToCompletion(src.writeStream.foreachBatch(mergeBatch), "qs_incr"))
       import s.implicits._
       def f4(x: org.apache.spark.sql.Column) =
         floor(x * lit(1e4) + lit(0.5)) / lit(1e4)

@@ -3183,24 +3183,16 @@ object LlmQueries {
       val resSchema = probe(src0.limit(0)).schema
       // single-trigger default for the static query replay (an answer is
       // f(query, static index), so any split is identical — LlmSpec pins
-      // the 16-files = 2-batch serving split; r12 verdict item 5:
-      // trigger count, not row volume, is the fixed-cost driver here)
-      val mft = s.conf.get("spark.graft.annprobe.mft", "32").toInt
+      // the 16-files = 2-batch serving split; trigger count, not row
+      // volume, is the fixed-cost driver here)
       val src = engine.stream.StreamQueries.asFileStream(s, src0,
         s"annq_$san", orderedBy = Some("vec_id"),
-        maxFilesPerTrigger = Some(mft))
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_annprobe_${java.util.UUID.randomUUID}")
+        maxFilesPerTrigger = Some(engine.stream.StreamQueries.SourceFiles))
       val serveBatch: (DataFrame, Long) => Unit = (batch, batchId) =>
         engine.stream.AppendTable.append(probe(batch), resRoot, batchId)
-      try {
-        engine.stream.StreamQueries.withMicroBatchConfs(s) {
-          src.writeStream.queryName("ann_probe").foreachBatch(serveBatch)
-            .option("checkpointLocation", ck.getPath)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start().awaitTermination()
-        }
-      } finally engine.Core.deleteRecursively(ck)
+      engine.stream.StreamQueries.withMicroBatchConfs(s)(
+        engine.stream.StreamQueries.runToCompletion(
+          src.writeStream.foreachBatch(serveBatch), "ann_probe"))
       engine.stream.AppendTable.read(s, resRoot, resSchema)
         .orderBy("qid", "rank")
     },

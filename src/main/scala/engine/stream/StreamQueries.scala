@@ -1,9 +1,9 @@
 package engine.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import engine.Core.{t, r4}
 import engine.Q
 import gps.parse.{NmeaFunctions, NmeaSynth}
@@ -25,17 +25,31 @@ import gps.stream.FixAssembler
   */
 object StreamQueries {
 
+  /** Files in an ordered source ([[publishSource]] with `orderedBy`).
+    * A caller that admits this many files per trigger replays the whole
+    * source in one trigger. */
+  private[engine] val SourceFiles = 32
+
+  /** The one trigger-size setting: files admitted per trigger by every
+    * source opened with a `maxFilesPerTrigger`, in place of the size its
+    * caller passed. Trigger count drives a micro-batch run's fixed cost,
+    * so this is a deployment decision made once, not a query option.
+    * Sources opened without a size stay single-trigger under it. */
+  val MaxFilesPerTriggerKey = "spark.graft.maxFilesPerTrigger"
+
   /** Write a batch df to a scratch parquet dir and open it as a stream.
     * The content is a deterministic function of (query, sf dir), so an
     * existing complete dir (_SUCCESS) is reused instead of rewritten —
     * the merge source is 600k rows and rebuilding it dominated the
-    * streaming flagship's bench time. */
+    * streaming flagship's bench time. `maxFilesPerTrigger` is the
+    * caller's trigger size; [[MaxFilesPerTriggerKey]] overrides it. */
   private[engine] def asFileStream(spark: SparkSession, df: DataFrame, tag: String,
       singleFile: Boolean = false, orderedBy: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val dir = publishSource(df, tag, singleFile, orderedBy)
     val reader = spark.readStream.schema(df.schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger",
+      spark.conf.getOption(MaxFilesPerTriggerKey).fold(n)(_.toInt)))
     reader.parquet(dir)
   }
 
@@ -60,7 +74,7 @@ object StreamQueries {
         // later trigger when ts is not monotone in the surrogate id
         case Some(c) =>
           val ks = c.split(",").map(n => col(n.trim)).toSeq
-          df.repartitionByRange(32, ks: _*).sortWithinPartitions(ks: _*)
+          df.repartitionByRange(SourceFiles, ks: _*).sortWithinPartitions(ks: _*)
         case None => if (singleFile) df.coalesce(1) else df
       }
       out.write.mode("overwrite").parquet(tmp)
@@ -120,13 +134,31 @@ object StreamQueries {
       "spark.sql.constraintPropagation.enabled" -> "false",
       "spark.sql.adaptive.enabled" -> "false")(body)
 
-  /** Run a streaming df to completion into a memory sink; return result.
+  /** Run a stream to completion: one `Trigger.AvailableNow` pass over
+    * everything its sources hold, named `name`, under a fresh checkpoint
+    * that is deleted afterwards. The only place engine code starts a
+    * stream. It scopes no setting: a caller that plans its triggers under
+    * other settings wraps the call.
+    *
     * The checkpoint (WAL + state stores) is transient by design here —
-    * one-shot AvailableNow run, memory sink — so it goes to tmpfs when
-    * available: state-store commits were the dominant IO (and run-to-run
-    * variance) of every stateful stream on a disk-backed /tmp. A real
-    * deployment with a durable sink needs a durable checkpoint instead —
-    * that's a recovery requirement, not a throughput choice.
+    * one-shot AvailableNow run, memory or foreachBatch sink — so it goes
+    * to the scratch root (tmpfs when available): state-store commits were
+    * the dominant IO (and run-to-run variance) of every stateful stream
+    * on a disk-backed /tmp. A real deployment with a durable sink needs a
+    * durable checkpoint instead — that's a recovery requirement, not a
+    * throughput choice. */
+  private[engine] def runToCompletion(writer: DataStreamWriter[Row],
+      name: String): Unit = {
+    val ck = new java.io.File(
+      s"${engine.Core.scratchRoot}/graft_ckpt_${name}_${java.util.UUID.randomUUID}")
+    // start() is inside the try: it can throw after creating checkpoint
+    // dirs, and a stranded dir on tmpfs is leaked RAM
+    try writer.queryName(name).option("checkpointLocation", ck.getPath)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    finally engine.Core.deleteRecursively(ck)
+  }
+
+  /** Run a streaming df to completion into a memory sink; return result.
     *
     * Stateful streams pin the shuffle width at first start (AQE is off
     * for stateful workloads), and every stateful operator then runs one
@@ -135,29 +167,18 @@ object StreamQueries {
   private def runToMemory(spark: SparkSession, sdf: DataFrame, name: String,
       mode: String = "append", noDataBatches: Boolean = true): DataFrame = {
     spark.catalog.dropTempView(name) // tolerate re-runs within a session
-    val ckRoot = engine.Core.scratchRoot
-    val ck = new java.io.File(
-      s"$ckRoot/graft_ckpt_${name}_${java.util.UUID.randomUUID}")
-    // start() is inside the try: it can throw after creating checkpoint
-    // dirs, and a stranded dir on tmpfs is leaked RAM
-    try {
-      // noDataBatches=false skips the trailing empty microbatch that only
-      // advances the watermark and evicts state. Callers may opt out ONLY
-      // when the sink result cannot depend on it (e.g. a complete-mode agg
-      // whose dedup filter already ran in the data batches); any query
-      // whose OUTPUT needs a watermark sweep — timeout-evicted fixes,
-      // append-mode window finalization — must keep it true.
-      engine.Core.withConfs(spark)(
-          "spark.sql.streaming.noDataMicroBatches.enabled" ->
-            noDataBatches.toString,
-          "spark.sql.shuffle.partitions" ->
-            engine.Core.SmallFrameWidth.toString) {
-        sdf.writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ck.getPath)
-          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-          .awaitTermination()
-      }
-    } finally engine.Core.deleteRecursively(ck)
+    // noDataBatches=false skips the trailing empty microbatch that only
+    // advances the watermark and evicts state. Callers may opt out ONLY
+    // when the sink result cannot depend on it (e.g. a complete-mode agg
+    // whose dedup filter already ran in the data batches); any query
+    // whose OUTPUT needs a watermark sweep — timeout-evicted fixes,
+    // append-mode window finalization — must keep it true.
+    engine.Core.withConfs(spark)(
+        "spark.sql.streaming.noDataMicroBatches.enabled" ->
+          noDataBatches.toString,
+        "spark.sql.shuffle.partitions" ->
+          engine.Core.SmallFrameWidth.toString)(
+      runToCompletion(sdf.writeStream.format("memory").outputMode(mode), name))
     spark.table(name)
   }
 
@@ -354,8 +375,7 @@ object StreamQueries {
       // keeps FixAssembler's per-device it.toSeq slice bounded at scale
       val src = asFileStream(s, lines.unionByName(heartbeat),
         s"mergev3_${d.replaceAll("[^a-zA-Z0-9]", "_")}",
-        orderedBy = Some("line_no"), maxFilesPerTrigger =
-          Some(s.conf.get("spark.graft.merge.filesPerTrigger", "16").toInt))
+        orderedBy = Some("line_no"), maxFilesPerTrigger = Some(16))
       val fixes = FixAssembler.assemble(NmeaFunctions.parseSentences(src))
       // ~150 devices over Core.SmallFrameWidth stores: assembly
       // parallelism is capped by device count anyway (~19 devices/store
@@ -492,8 +512,7 @@ object StreamQueries {
         // against this default); each extra trigger costs a full state
         // read+rewrite+commit cycle
         s"upsert_${san}", orderedBy = Some("event_id"),
-        maxFilesPerTrigger =
-          Some(s.conf.get("spark.graft.upsert.mft", "32").toInt))
+        maxFilesPerTrigger = Some(SourceFiles))
       val mergeBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
         val sp = batch.sparkSession
         val prev = VersionedTable.read(sp, state).getOrElse(
@@ -512,13 +531,7 @@ object StreamQueries {
             expr("max_by(value, event_id)").as("last_value"))
         VersionedTable.commit(up, state, batchId)
       }
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_upsert_${java.util.UUID.randomUUID}")
-      try {
-        src.writeStream.queryName("upsert_fold").foreachBatch(mergeBatch)
-          .option("checkpointLocation", ck.getPath)
-          .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      } finally engine.Core.deleteRecursively(ck)
+      runToCompletion(src.writeStream.foreachBatch(mergeBatch), "upsert_fold")
       VersionedTable.read(s, state)
         .getOrElse(sys.error(s"upsert state missing at $state"))
         .select(col("user_id"), col("last_event_id"), col("last_type"),
@@ -561,8 +574,7 @@ object StreamQueries {
         t(s, d, "events").select(col("event_id"), col("event_type"),
           col("value")),
         s"topk_$san", orderedBy = Some("event_id"),
-        maxFilesPerTrigger =
-          Some(s.conf.get("spark.graft.topk.mft", "32").toInt))
+        maxFilesPerTrigger = Some(SourceFiles))
       val rankW = Window.partitionBy(col("event_type"))
         .orderBy(col("value").desc, col("event_id"))
       val mergeBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
@@ -577,13 +589,7 @@ object StreamQueries {
           .filter(col("r") <= TopKDepth).drop("r")
         VersionedTable.commit(top, state, batchId)
       }
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_topk_${java.util.UUID.randomUUID}")
-      try {
-        src.writeStream.queryName("topk_fold").foreachBatch(mergeBatch)
-          .option("checkpointLocation", ck.getPath)
-          .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      } finally engine.Core.deleteRecursively(ck)
+      runToCompletion(src.writeStream.foreachBatch(mergeBatch), "topk_fold")
       VersionedTable.read(s, state)
         .getOrElse(sys.error(s"topk state missing at $state"))
         .withColumn("rank", row_number().over(rankW))
@@ -636,8 +642,7 @@ object StreamQueries {
             .otherwise(lit("U")).as("op"),
           col("event_type"), col("value")),
         s"cdc_$san", orderedBy = Some("seq"),
-        maxFilesPerTrigger =
-          Some(s.conf.get("spark.graft.cdc.mft", "32").toInt))
+        maxFilesPerTrigger = Some(SourceFiles))
       val mergeBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
         val sp = batch.sparkSession
         val prev = VersionedTable.read(sp, state).getOrElse(
@@ -654,13 +659,7 @@ object StreamQueries {
             expr("max_by(value, seq)").as("value"))
         VersionedTable.commit(up, state, batchId)
       }
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_cdc_${java.util.UUID.randomUUID}")
-      try {
-        src.writeStream.queryName("cdc_apply").foreachBatch(mergeBatch)
-          .option("checkpointLocation", ck.getPath)
-          .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      } finally engine.Core.deleteRecursively(ck)
+      runToCompletion(src.writeStream.foreachBatch(mergeBatch), "cdc_apply")
       VersionedTable.read(s, state)
         .getOrElse(sys.error(s"cdc state missing at $state"))
         .filter(col("op") =!= "D") // tombstoned keys leave the served view
@@ -780,21 +779,14 @@ object StreamQueries {
         VersionedTable.commit(untouched.unionByName(newOpen), openState,
           batchId)
       }
-      val mft = s.conf.get("spark.graft.scd2.mft", "32").toInt
       // admission ordered by event time (event_id only tiebreaks equal
       // tu) — the run-length fold and the whole-log oracle both order
       // by (ts, event_id), so the trigger partition must too; ordering
       // by event_id alone would rest on the testdata's undocumented
       // ts-monotone-in-event_id invariant
       val src = asFileStream(s, src0, s"scd2v2_$san",
-        orderedBy = Some("tu,event_id"), maxFilesPerTrigger = Some(mft))
-      val ck = new java.io.File(engine.Core.scratchRoot +
-        s"/graft_ckpt_scd2_${java.util.UUID.randomUUID}")
-      try {
-        src.writeStream.queryName("scd2_apply").foreachBatch(mergeBatch)
-          .option("checkpointLocation", ck.getPath)
-          .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      } finally engine.Core.deleteRecursively(ck)
+        orderedBy = Some("tu,event_id"), maxFilesPerTrigger = Some(SourceFiles))
+      runToCompletion(src.writeStream.foreachBatch(mergeBatch), "scd2_apply")
       val closed = AppendTable.read(s, closedStore, closedSchema)
         .withColumn("is_current", lit(false))
       val open = VersionedTable.read(s, openState)
@@ -885,7 +877,7 @@ object StreamQueries {
     * ordered admission "latest seen so far" ≡ the event-time as-of, and
     * the output equals batch join_asof for ANY trigger split
     * (StreamSourceSpec pins the 3-trigger ≡ single-trigger ≡ batch
-    * equivalence; `spark.graft.asofStream.mft` sizes triggers).
+    * equivalence).
     *
     * Shape at 100 TB: per trigger the fold touches only the batch's
     * rows plus one shuffled (key, long) state row per ACTIVE key — the
@@ -903,9 +895,8 @@ object StreamQueries {
       val ev = t(s, d, "events")
         .select(col("user_id").as("k"), col("ts").as("at"),
           lit(null: java.lang.Long).as("ok"), col("event_id"))
-      val mft = s.conf.get("spark.graft.asofStream.mft", "32").toInt
       val src = asFileStream(s, dim.unionByName(ev), s"asofen_$san",
-        orderedBy = Some("at"), maxFilesPerTrigger = Some(mft))
+        orderedBy = Some("at"), maxFilesPerTrigger = Some(SourceFiles))
       val enriched = src.as[AsofRow].groupByKey(_.k)
         .flatMapGroupsWithState(
           org.apache.spark.sql.streaming.OutputMode.Append,
@@ -964,9 +955,9 @@ object StreamQueries {
     * (the quantile_sketch_incremental pre-declared-grid discipline;
     * here it is derived from the same corpus so the oracle can replay
     * it). State is O(series), never history; per trigger the fold
-    * touches only the batch's rows. `spark.graft.cusumStream.mft`
-    * sizes triggers; ordered admission (us-major, event_id tiebreak)
-    * is the file-source contract every stateful stream here rides. */
+    * touches only the batch's rows. Ordered admission (us-major,
+    * event_id tiebreak) is the file-source contract every stateful
+    * stream here rides. */
   private val streamCusum = Q(
     (s, d) => {
       import s.implicits._
@@ -988,9 +979,8 @@ object StreamQueries {
           1024, "stream_cusum per-series calibration (one row per " +
             "event_type — the shipped-config table, never corpus rows)")
         .map(r => r.getString(0) -> ((r.getLong(2), r.getLong(1)))).toMap
-      val mft = s.conf.get("spark.graft.cusumStream.mft", "32").toInt
       val src = asFileStream(s, base, s"cusum_$san",
-        orderedBy = Some("us,event_id"), maxFilesPerTrigger = Some(mft))
+        orderedBy = Some("us,event_id"), maxFilesPerTrigger = Some(SourceFiles))
       val out = src.as[CusumRow].groupByKey(_.event_type)
         .flatMapGroupsWithState(
           org.apache.spark.sql.streaming.OutputMode.Append,
@@ -1039,8 +1029,7 @@ object StreamQueries {
     * LAST K−1 OBSERVATIONS — the minimal ring buffer that makes the
     * weight ladder readable at a batch cut; both are O(series), never
     * history. The oracle is batch ts_ewma's lag-chain SQL verbatim,
-    * and StreamSourceSpec pins 3-trigger ≡ single ≡ batch
-    * (`spark.graft.ewmaStream.mft` sizes triggers). */
+    * and StreamSourceSpec pins 3-trigger ≡ single ≡ batch. */
   private val streamEwma = Q(
     (s, d) => {
       import s.implicits._
@@ -1049,9 +1038,8 @@ object StreamQueries {
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("us"),
           round(col("value") * 100, 0).cast("long").as("c"))
-      val mft = s.conf.get("spark.graft.ewmaStream.mft", "32").toInt
       val src = asFileStream(s, base, s"ewma_$san",
-        orderedBy = Some("us,event_id"), maxFilesPerTrigger = Some(mft))
+        orderedBy = Some("us,event_id"), maxFilesPerTrigger = Some(SourceFiles))
       val out = src.as[EwmaRow].groupByKey(_.user_id)
         .flatMapGroupsWithState(
           org.apache.spark.sql.streaming.OutputMode.Append,

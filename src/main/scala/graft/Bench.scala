@@ -36,11 +36,14 @@ object Bench {
     val recorder = OpRecorder.attach(spark)
     val queries = SparkEntry.queries
     /** One run of `q`: its seconds (-1 on a crash, never a flatteringly
-      * fast time-to-failure) and its record. */
+      * fast time-to-failure) and its record. Its jobs carry `q` as their
+      * description unless a phase of the op names its own. */
     def timed(q: String): (Double, OpRecord) = {
       val (ok, rec) = recorder.measure {
-        try { Eval.rows(queries(q)(spark, sfDir)); true }
-        catch { case e: Throwable =>
+        try {
+          engine.Core.describe(spark, q)(Eval.rows(queries(q)(spark, sfDir)))
+          true
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $q FAILED: ${e.getMessage}")
           false
         }

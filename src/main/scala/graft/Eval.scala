@@ -26,10 +26,6 @@ object Eval {
       s"graft_eval_${seq.incrementAndGet()}")
     df.observe(obs, count(lit(1)).as("n"))
       .write.format("noop").mode("overwrite").save()
-    // a query BUILDER may leave a job description set so the final
-    // action above is attributed to its phase (e.g. "online:serve");
-    // clear it here so the label can't leak onto the NEXT op's jobs
-    df.sparkSession.sparkContext.setJobDescription(null)
     obs.get("n").asInstanceOf[Long]
   }
 }

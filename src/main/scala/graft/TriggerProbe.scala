@@ -62,10 +62,10 @@ object TriggerProbe {
 
     case class Row(q: String, tag: String, ms: Seq[Long],
         firstQ: Double, lastQ: Double, ratio: Double, flag: Boolean)
-    def run(q: String, mftKey: String, mft: Int, dir: String,
-        tag: String): Row = {
+    def run(q: String, mft: Int, dir: String, tag: String): Row = {
       val (_, rec) = recorder.measure {
-        engine.Core.withConfs(spark)(mftKey -> mft.toString) {
+        engine.Core.withConfs(spark)(
+            engine.stream.StreamQueries.MaxFilesPerTriggerKey -> mft.toString) {
           Eval.rows(SparkEntry.queries(q)(spark, dir))
         }
       }
@@ -95,13 +95,11 @@ object TriggerProbe {
     val rows = Seq(
       // 16 equal triggers over the 10× corpus: store grows ~15× under
       // a constant batch size — the O(batch)-commit sweep
-      run("pipeline_online", "spark.graft.online.mft", 2, out, "10x_t16"),
-      run("pipeline_online_hybrid", "spark.graft.onlineh.mft", 2, out,
-        "10x_t16"),
+      run("pipeline_online", 2, out, "10x_t16"),
+      run("pipeline_online_hybrid", 2, out, "10x_t16"),
       // the default 2-trigger 1× runs anchor absolute per-trigger cost
-      run("pipeline_online", "spark.graft.online.mft", 16, base, "1x_t2"),
-      run("pipeline_online_hybrid", "spark.graft.onlineh.mft", 16, base,
-        "1x_t2"))
+      run("pipeline_online", 16, base, "1x_t2"),
+      run("pipeline_online_hybrid", 16, base, "1x_t2"))
 
     val flagged = rows.filter(_.flag).map(_.q)
     val json = rows.map { r =>

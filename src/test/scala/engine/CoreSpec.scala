@@ -6,12 +6,14 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
-/** Pins Core.publishOnce's locking contract (r3 advisor): same-dir
-  * publishes serialize and write exactly once; publishes of UNRELATED
-  * dirs overlap instead of queueing on a global monitor; a failed
-  * produce step deletes its temp dir and leaves no published marker.
-  * Also pins Core.withConfs' scoping, and that engine code changes
-  * session settings through nothing else. */
+/** Pins Core.publishOnce's locking contract: same-dir publishes
+  * serialize and write exactly once; publishes of UNRELATED dirs overlap
+  * instead of queueing on a global monitor; a failed produce step
+  * deletes its temp dir and leaves no published marker; a publish that
+  * writes logs its dir as built. Also pins the scoping of Core.withConfs
+  * and Core.describe, and by source scans that engine code changes
+  * session settings, sets job descriptions and starts streams through
+  * nothing else. */
 class CoreSpec extends AnyFunSuite {
 
   private def freshDir(tag: String): String =
@@ -98,6 +100,22 @@ class CoreSpec extends AnyFunSuite {
         Files.writeString(java.nio.file.Paths.get(tmp, "_SUCCESS"), "")
       }
       assert(new java.io.File(dir, "_SUCCESS").exists())
+    } finally cleanup(dir)
+  }
+
+  test("a publish that writes its dir logs it as built, once") {
+    val dir = s"${freshDir("built")}_${System.nanoTime}"
+    val name = new java.io.File(dir).getName
+    def publish(): Unit = Core.publishOnce(dir) { tmp =>
+      new java.io.File(tmp).mkdirs()
+      Files.writeString(java.nio.file.Paths.get(tmp, "_SUCCESS"), "")
+    }: Unit
+    try {
+      ScratchCache.drainBuiltLog()
+      publish()
+      assert(ScratchCache.drainBuiltLog().count(_ == name) == 1)
+      publish() // already published: nothing written, nothing logged
+      assert(!ScratchCache.drainBuiltLog().contains(name))
     } finally cleanup(dir)
   }
 
@@ -206,20 +224,36 @@ class CoreSpec extends AnyFunSuite {
     assert(spark.conf.getOption(absentKey).isEmpty)
   }
 
-  test("engine code changes a session setting only through withConfs") {
-    // a save/set/restore block of its own leaks a setting when it gets the
-    // restore wrong, and hides from anyone looking for shared-session
-    // writes; this scan leaves Core.withConfs as the one place to look
-    val root = java.nio.file.Paths.get("src/main/scala/engine")
-    val call = raw"conf\.(set|unset)\(".r
-    val files = Files.walk(root).iterator().asScala
+  test("describe restores the prior job description, also when its " +
+      "body throws") {
+    val spark = gps.TestSpark.spark
+    def label = spark.sparkContext.getLocalProperty("spark.job.description")
+    val before = label
+    Core.describe(spark, "corespec:outer") {
+      assert(Core.describe(spark, "corespec:inner")(label) == "corespec:inner")
+      assert(label == "corespec:outer")
+      intercept[IllegalStateException] {
+        Core.describe(spark, "corespec:inner")(
+          throw new IllegalStateException("body failed"))
+      }
+      assert(label == "corespec:outer")
+    }
+    assert(label == before)
+  }
+
+  /** Lines of the Scala sources under `root` that match `call`, outside
+    * the body of the method whose definition line contains `defn` in the
+    * file named `home`. */
+  private def hitsOutside(root: String, call: scala.util.matching.Regex,
+      home: String, defn: String): Seq[String] = {
+    val files = Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.nonEmpty, s"no sources under $root")
-    val hits = files.flatMap { f =>
+    files.flatMap { f =>
       val lines = Files.readAllLines(f).asScala.toSeq
-      val helper = if (f.getFileName.toString == "Core.scala") {
-        val from = lines.indexWhere(_.contains("def withConfs["))
-        assert(from >= 0, "Core.withConfs not found")
+      val helper = if (f.getFileName.toString == home) {
+        val from = lines.indexWhere(_.contains(defn))
+        assert(from >= 0, s"$defn not found in $home")
         val to = lines.indexWhere(_.startsWith("  }"), from)
         from to to
       } else Range(0, 0)
@@ -228,7 +262,41 @@ class CoreSpec extends AnyFunSuite {
           s"$f:${i + 1}: ${l.trim}"
       }
     }
+  }
+
+  test("engine code changes a session setting only through withConfs") {
+    // a save/set/restore block of its own leaks a setting when it gets the
+    // restore wrong, and hides from anyone looking for shared-session
+    // writes; this scan leaves Core.withConfs as the one place to look
+    val hits = hitsOutside("src/main/scala/engine", raw"conf\.(set|unset)\(".r,
+      "Core.scala", "def withConfs[")
     assert(hits.isEmpty, "scope session settings with Core.withConfs:\n" +
       hits.mkString("\n"))
+  }
+
+  test("engine and harness code set a job description only through " +
+      "describe") {
+    // an unscoped label leaks onto the next op's jobs
+    val hits = hitsOutside("src/main/scala", raw"setJobDescription\(".r,
+      "Core.scala", "def describe[")
+    assert(hits.isEmpty, "label jobs with Core.describe:\n" +
+      hits.mkString("\n"))
+  }
+
+  test("engine code starts a stream only through runToCompletion") {
+    val hits = hitsOutside("src/main/scala/engine",
+      raw"checkpointLocation|AvailableNow\(\)".r,
+      "StreamQueries.scala", "def runToCompletion(")
+    assert(hits.isEmpty, "run streams with StreamQueries.runToCompletion:\n" +
+      hits.mkString("\n"))
+  }
+
+  test("no per-query trigger-size key is left") {
+    // one setting sizes every sized source's triggers
+    // (StreamQueries.MaxFilesPerTriggerKey)
+    val hits = hitsOutside("src",
+      raw"spark\.graft\.[\w.]*(\.mft|filesPerTrigger)\b".r,
+      home = "", defn = "") // no file is exempt
+    assert(hits.isEmpty, "per-query trigger-size keys:\n" + hits.mkString("\n"))
   }
 }

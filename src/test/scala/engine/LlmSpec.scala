@@ -11,6 +11,7 @@ import engine.llm.{LlmQueries, MultimodalQueries, TextFunctions, VectorFunctions
   * multimodal decode-stub plumbing. */
 class LlmSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
+  private val Mft = engine.stream.StreamQueries.MaxFilesPerTriggerKey
   import spark.implicits._
 
   val sf = "/root/testdata/sf0.001"
@@ -131,10 +132,10 @@ class LlmSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // computed in one pass over the whole corpus. mft=11 forces the
     // 3-batch cross-trigger path (the op's default replays in ONE
     // trigger since r13 — this pin is what keeps the split exercised)
-    spark.conf.set("spark.graft.incr.mft", "11")
-    val streamed = try LlmQueries.queries("dedup_incremental").fn(spark, sf)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-      finally spark.conf.unset("spark.graft.incr.mft")
+    val streamed = engine.Core.withConfs(spark)(Mft -> "11") {
+      LlmQueries.queries("dedup_incremental").fn(spark, sf)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    }
     val dropped = LlmQueries.queries("dedup_minhash").fn(spark, sf)
       .select("db").collect().map(_.getLong(0)).toSet
     val all = spark.read.parquet(s"$sf/documents.parquet")
@@ -177,9 +178,8 @@ class LlmSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def run(): Seq[Seq[Any]] =
       LlmQueries.queries("decontaminate_incremental").fn(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.decon.mft", "11") // 3 nightly batches
-    val batched = try run()
-      finally spark.conf.unset("spark.graft.decon.mft")
+    // 3 nightly batches
+    val batched = engine.Core.withConfs(spark)(Mft -> "11")(run())
     val single = run() // default: one trigger
     assert(batched == single)
     assert(batched.nonEmpty, "fixture plants contaminated train docs")
@@ -193,9 +193,7 @@ class LlmSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def run(): Seq[Long] =
       LlmQueries.queries("dedup_exact_incremental").fn(spark, sf)
         .select("doc_id").collect().map(_.getLong(0)).toSeq
-    spark.conf.set("spark.graft.exactIncr.mft", "11") // 3 batches
-    val batched = try run()
-      finally spark.conf.unset("spark.graft.exactIncr.mft")
+    val batched = engine.Core.withConfs(spark)(Mft -> "11")(run()) // 3 batches
     val single = run() // default: one trigger
     assert(batched == single)
     val exact = LlmQueries.queries("dedup_exact").fn(spark, sf)
@@ -211,9 +209,7 @@ class LlmSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def run(): Seq[Seq[Any]] =
       LlmQueries.queries("corpus_report_incremental").fn(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.cardIncr.mft", "11") // 3 batches
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.cardIncr.mft")
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run()) // 3 batches
     val single = run()
     val batch = LlmQueries.queries("corpus_report").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -230,9 +226,7 @@ class LlmSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def run(): Seq[Seq[Any]] =
       engine.llm.IncrementalDedup.queries("quantile_sketch_incremental")
         .fn(spark, sf).collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.qsIncr.mft", "11") // 3 batches
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.qsIncr.mft")
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run()) // 3 batches
     val single = run()
     val batch = engine.rel.RelQueries.queries("agg_quantile_sketch")
       .fn(spark, sf).collect()
@@ -251,9 +245,7 @@ class LlmSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def run(): Seq[Seq[Any]] =
       LlmQueries.queries("corpus_drift_incremental").fn(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.driftIncr.mft", "11") // 3 batches
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.driftIncr.mft")
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run()) // 3 batches
     val single = run()
     val batch = LlmQueries.queries("corpus_drift").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -277,11 +269,10 @@ class LlmSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       .write.parquet(s"$dir/documents.parquet")
     // 32 range-partitioned source files, 1 per trigger ⇒ each doc
     // arrives in its own micro-batch: the cross-batch path is exercised
-    spark.conf.set("spark.graft.exactIncr.mft", "1")
-    val kept = try
+    val kept = engine.Core.withConfs(spark)(Mft -> "1") {
       LlmQueries.queries("dedup_exact_incremental").fn(spark, dir.getPath)
         .select("doc_id").collect().map(_.getLong(0)).toSet
-      finally spark.conf.unset("spark.graft.exactIncr.mft")
+    }
     assert(kept == Set(0L, 1L),
       s"expected first copy of each content group (incl the null group), got $kept")
   }
@@ -292,10 +283,10 @@ class LlmSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // run against the growing SRP store must equal "vectors minus every
     // higher id of a verified banded pair" from the single-pass operator.
     // mft=11 forces the 3-batch cross-trigger path (default = 1 trigger)
-    spark.conf.set("spark.graft.embIncr.mft", "11")
-    val streamed = try LlmQueries.queries("dedup_embedding_incremental")
-      .fn(spark, sf).collect().map(_.getLong(0)).toSet
-      finally spark.conf.unset("spark.graft.embIncr.mft")
+    val streamed = engine.Core.withConfs(spark)(Mft -> "11") {
+      LlmQueries.queries("dedup_embedding_incremental")
+        .fn(spark, sf).collect().map(_.getLong(0)).toSet
+    }
     val dropped = LlmQueries.queries("dedup_embedding_banded").fn(spark, sf)
       .select("vb").collect().map(_.getLong(0)).toSet
     val all = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -471,10 +462,10 @@ class LlmSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // reproduce the batch indexed probe row-for-row on the queries both
     // serve (qid < 5), whatever trigger the query landed in. mft=16
     // forces the 2-batch serving split (default = 1 trigger)
-    spark.conf.set("spark.graft.annprobe.mft", "16")
-    val streamed = try LlmQueries.queries("stream_ann_probe").fn(spark, sf)
-      .filter("qid < 5").collect().map(_.toSeq).toSeq
-      finally spark.conf.unset("spark.graft.annprobe.mft")
+    val streamed = engine.Core.withConfs(spark)(Mft -> "16") {
+      LlmQueries.queries("stream_ann_probe").fn(spark, sf)
+        .filter("qid < 5").collect().map(_.toSeq).toSeq
+    }
     val batch = LlmQueries.queries("sim_search_ivf_indexed").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(streamed == batch)

@@ -11,6 +11,7 @@ import engine.llm.SearchQueries
   * two-stage recall vs the exact top-k. */
 class SearchSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
+  private val Mft = engine.stream.StreamQueries.MaxFilesPerTriggerKey
   import spark.implicits._
 
   val sf = "/root/testdata/sf0.001"
@@ -196,9 +197,8 @@ class SearchSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       SearchQueries.queries("stream_bm25_probe").fn(spark, sf).collect()
         .map(r => (r.getLong(0), r.getLong(1)) ->
           (r.getInt(2), r.getDouble(3))).toMap
-    spark.conf.set("spark.graft.bm25probe.mft", "16") // 2 serving batches
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.bm25probe.mft")
+    // 2 serving batches
+    val multi = engine.Core.withConfs(spark)(Mft -> "16")(run())
     val single = run() // default: one trigger
     assert(multi == single,
       "a verdict is f(query, static index) — trigger split must not matter")
@@ -219,9 +219,8 @@ class SearchSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def run(): Seq[Seq[Any]] =
       SearchQueries.queries("pipeline_online").fn(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.online.mft", "11") // 3 ingest batches
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.online.mft")
+    // 3 ingest batches
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run())
     val san = sf.replaceAll("[^a-zA-Z0-9]", "_")
     // store contents AFTER the run == the batch operators' replay
     val dgSchema = StructType(Seq(StructField("doc_id", LongType),
@@ -284,9 +283,7 @@ class SearchSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(multi.nonEmpty)
     // decomposition: a single-trigger ingest lands on the identical
     // funnel (stores and index rebuilt from scratch by the replay)
-    spark.conf.set("spark.graft.online.mft", "32")
-    val single = try run()
-      finally spark.conf.unset("spark.graft.online.mft")
+    val single = engine.Core.withConfs(spark)(Mft -> "32")(run())
     assert(multi == single)
   }
 
@@ -296,9 +293,8 @@ class SearchSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def run(): Seq[Seq[Any]] =
       SearchQueries.queries("pipeline_online_hybrid").fn(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.onlineh.mft", "11") // 3 ingest batches
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.onlineh.mft")
+    // 3 ingest batches
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run())
     val san = sf.replaceAll("[^a-zA-Z0-9]", "_")
     // lexical stores: same merges as pipeline_online — dg kept ==
     // dedup_exact, sig kept == exact minus the minhash drops
@@ -375,9 +371,7 @@ class SearchSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(vposts == participants -- expDropped,
       "vector index does not cover exactly the surviving vectors")
     // decomposition: the single-trigger replay lands on the same funnel
-    spark.conf.set("spark.graft.onlineh.mft", "32")
-    val single = try run()
-      finally spark.conf.unset("spark.graft.onlineh.mft")
+    val single = engine.Core.withConfs(spark)(Mft -> "32")(run())
     assert(multi == single)
     assert(multi.nonEmpty)
   }
@@ -1008,9 +1002,7 @@ class SearchSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     def run(): Seq[Seq[Any]] =
       SearchQueries.queries("sim_knn_graph_incremental").fn(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.knngIncr.mft", "11") // 3 batches
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.knngIncr.mft")
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run()) // 3 batches
     val single = run()
     val batch = SearchQueries.queries("sim_knn_graph").fn(spark, sf)
       .collect().map(_.toSeq).toSeq

@@ -11,6 +11,7 @@ import gps.TestSpark
   * "bounded" stream into one whole-log trigger. */
 class StreamSourceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  private val Mft = engine.stream.StreamQueries.MaxFilesPerTriggerKey
   import spark.implicits._
 
   test("win_sessionize (batch) agrees with stream_session window-for-window") {
@@ -36,9 +37,7 @@ class StreamSourceSpec extends AnyFunSuite {
     def run(): Seq[Seq[Any]] =
       graft.SparkEntry.queries("stream_cusum")(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.cusumStream.mft", "11")
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.cusumStream.mft")
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run())
     val single = run()
     assert(multi == single && single == batch)
     assert(batch.exists(_.last == true), "alarms must fire on the fixture")
@@ -52,9 +51,7 @@ class StreamSourceSpec extends AnyFunSuite {
     def run(): Seq[Seq[Any]] =
       graft.SparkEntry.queries("stream_ewma")(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.ewmaStream.mft", "11")
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.ewmaStream.mft")
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run())
     val single = run()
     assert(multi == single && single == batch)
     assert(batch.nonEmpty)
@@ -69,9 +66,7 @@ class StreamSourceSpec extends AnyFunSuite {
     def run(): Seq[Seq[Any]] =
       graft.SparkEntry.queries("stream_upsert_sink")(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.upsert.mft", "11")
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.upsert.mft")
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run())
     val single = run()
     assert(multi == single)
     assert(multi.nonEmpty)
@@ -86,9 +81,7 @@ class StreamSourceSpec extends AnyFunSuite {
     def run(): Seq[Seq[Any]] =
       graft.SparkEntry.queries("stream_cdc_apply")(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.cdc.mft", "11")
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.cdc.mft")
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run())
     val single = run()
     assert(multi == single)
     assert(multi.nonEmpty)
@@ -119,9 +112,7 @@ class StreamSourceSpec extends AnyFunSuite {
     def run(): Seq[Seq[Any]] =
       graft.SparkEntry.queries("stream_scd2_apply")(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.scd2.mft", "11")
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.scd2.mft")
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run())
     val single = run()
     val batch = graft.SparkEntry.queries("scd2_build")(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -138,9 +129,7 @@ class StreamSourceSpec extends AnyFunSuite {
     def run(): Seq[Seq[Any]] =
       graft.SparkEntry.queries("stream_topk")(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.topk.mft", "11")
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.topk.mft")
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run())
     val single = run()
     assert(multi == single)
     assert(multi.nonEmpty)
@@ -160,9 +149,7 @@ class StreamSourceSpec extends AnyFunSuite {
     def run(): Seq[Seq[Any]] =
       graft.SparkEntry.queries("stream_asof_enrich")(spark, sf)
         .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.asofStream.mft", "11")
-    val multi = try run()
-      finally spark.conf.unset("spark.graft.asofStream.mft")
+    val multi = engine.Core.withConfs(spark)(Mft -> "11")(run())
     val single = run()
     assert(multi == single)
     assert(multi.nonEmpty)
@@ -171,6 +158,25 @@ class StreamSourceSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq
     assert(multi == batch,
       "streaming as-of enrichment diverged from batch join_asof")
+  }
+
+  test("the trigger-size override splits a sized source and leaves an " +
+      "unsized one in one trigger") {
+    // the decomposition tests above compare a run under the override
+    // with the default run; if the override were ignored, both would be
+    // single-trigger and those tests would check nothing
+    val sf = "/root/testdata/sf0.001"
+    val recorder = graft.OpRecorder.attach(spark)
+    // neither query runs a no-data trigger: the upsert fold is
+    // stateless, and a complete-mode aggregation evicts nothing
+    def triggers(q: String, sink: String): Int = {
+      val (_, rec) = recorder.measure(engine.Core.withConfs(spark)(Mft -> "11")(
+        graft.SparkEntry.queries(q)(spark, sf).collect()))
+      rec.triggers.count(_.query == sink)
+    }
+    assert(triggers("stream_upsert_sink", "upsert_fold") >= 3)
+    // stream_watermark_late's oracle holds only for a single trigger
+    assert(triggers("stream_watermark_late", "graft_wm_sink") == 1)
   }
 
   test("ordered publish yields >maxFilesPerTrigger contiguous-range files") {

@@ -310,7 +310,7 @@ class StreamingSpec extends AnyFunSuite {
     val base = q.fn(spark, sf).collect().map(_.toString).sorted.toSeq
     assert(base.nonEmpty)
     val alt = engine.Core.withConfs(spark)(
-        "spark.graft.merge.filesPerTrigger" -> "32")(
+        engine.stream.StreamQueries.MaxFilesPerTriggerKey -> "32")(
       q.fn(spark, sf).collect().map(_.toString).sorted.toSeq)
     assert(alt == base, "merge result depends on files per trigger")
 
