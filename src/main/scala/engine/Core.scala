@@ -137,17 +137,31 @@ object Core {
   /** Round a double column to 4 dp — the t2 hash-determinism discipline. */
   def r4(c: Column): Column = round(c, 4)
 
-  /** Shuffle width and state-store count of the engine's small frames:
-    * stateful streams, micro-batch trigger bodies and the id-pair or
-    * top-k-scale iterations (graph rounds, the ANN recall report,
-    * connected components). Each exchange and each state store costs
-    * task scheduling, and each store a WAL write and a commit per
-    * trigger, whatever the data's width. The merge stream, measured on
-    * an earlier 32-core box: 16 stores ≈ 12.6-13.8 s, 8 ≈ 6.4 s, 4 ≈
-    * 6.4 s, so 8 sits at the commit-cost floor with parallelism to
-    * spare. A stream's store count is fixed for the life of its
-    * checkpoint; a cluster sets this per job. */
-  val SmallFrameWidth = 8
+  /** Shuffle width and state-store count of the engine's small frames in
+    * session `s`: stateful streams, micro-batch trigger bodies and the
+    * id-pair or top-k-scale iterations (graph rounds, the ANN recall
+    * report, connected components). Each exchange and each state store
+    * costs task scheduling, and each store a WAL write and a commit per
+    * trigger, whatever the data's width.
+    *
+    * min(8, cores). The cap: on a 32-core box the merge stream read
+    * 16 stores ≈ 12.6-13.8 s, 8 ≈ 6.4 s and 4 ≈ 6.4 s, so 8 sits at the
+    * commit-cost floor with parallelism to spare. The cores: stores past
+    * the session's task slots cannot commit at once, they queue. On a
+    * 4-core box the merge stream's summed state commit read 1.28 s with
+    * 8 stores, 0.74 s with 4 and 0.10 s with 1, and warm 2.46, 2.17 and
+    * 2.30 s: one store serializes the fold onto one core. Bench and
+    * Verify (32 cores by default) get 8; a 4-core session gets 4.
+    *
+    * A stream's store count is fixed for the life of its checkpoint;
+    * every stream here runs under a fresh one
+    * ([[engine.stream.StreamQueries.runToCompletion]]), so no run meets
+    * a width recorded under another session. */
+  def smallFrameWidth(s: SparkSession): Int =
+    smallFrameWidthFor(s.sparkContext.defaultParallelism)
+
+  /** [[smallFrameWidth]] of a session with `cores` task slots. */
+  private[engine] def smallFrameWidthFor(cores: Int): Int = math.min(8, cores)
 
   /** Run `body` with `settings` in force on the session `s`, then put
     * each key back as it was: its prior value, or unset when it had

@@ -887,10 +887,10 @@ object LlmQueries {
     // an equi-join + min-combine over (long, long) pairs, and the DF
     // formulation paid ~10 driver-scheduled AQE stage jobs + a full
     // Catalyst re-plan PER ROUND for frames a few thousand rows long —
-    // r21 JobTimer on cluster_dbscan: 90 serialized ~60 ms broadcast/
+    // on cluster_dbscan that was 90 serialized ~60 ms broadcast/
     // stage futures for 233 total tasks, i.e. the loop's cost was
-    // planning, not data (guide §5: driver work is the scale-killer
-    // the executors can't hide). The RDD DAG plans in microseconds,
+    // planning, not data (driver work is the scale-killer the
+    // executors can't hide). The RDD DAG plans in microseconds,
     // keeps the same shuffle structure (edges hash-partitioned once,
     // ever; per-round 16-byte label shuffles), and the per-row work is
     // min() on longs — no per-row serialization-heavy closures. The
@@ -898,7 +898,7 @@ object LlmQueries {
     // sized to edge count; pinned small here because the frames are
     // id-pair scale).
     val part = new org.apache.spark.HashPartitioner(
-      engine.Core.SmallFrameWidth)
+      engine.Core.smallFrameWidth(spark))
     val pairs = pairsDf.select(
       col(pairsDf.columns(0)).cast("long"),
       col(pairsDf.columns(1)).cast("long")).as[(Long, Long)].rdd
@@ -1421,7 +1421,7 @@ object LlmQueries {
   private val graphKCore = Q(
     (s, d) => {
       engine.Core.withConfs(s)("spark.sql.shuffle.partitions" ->
-          engine.Core.SmallFrameWidth.toString) {
+          engine.Core.smallFrameWidth(s).toString) {
         val prs = srpNearDupPairs(s, d, DbscanEps)
           .select(col("va").as("v"), col("vb").as("u"))
         val edges = prs.unionByName(

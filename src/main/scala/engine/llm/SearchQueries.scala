@@ -2200,7 +2200,7 @@ object SearchQueries {
       // cluster_dbscan / graph_k_core conf rationale; a cluster sizes
       // this to edge count in the job conf)
       engine.Core.withConfs(s)("spark.sql.shuffle.partitions" ->
-          engine.Core.SmallFrameWidth.toString) {
+          engine.Core.smallFrameWidth(s).toString) {
       val rawEdges = knnGraphFrame(s, d)
         .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
       // out-degree folded into the persisted edge table ONCE (a window
@@ -2513,21 +2513,21 @@ object SearchQueries {
       // every frame past the rungs' corpus scans is query-scale (top-k
       // lists, the ≤ methods × queries grid) — 32-wide exchanges paid
       // pure task scheduling across 10 rungs (the cluster_dbscan /
-      // graph_pagerank conf rationale; r21 JobTimer: 85 stages / 1312
-      // tasks warm for a 50-row report). Materialized eagerly inside
+      // graph_pagerank conf rationale; at 32 the report ran 85 stages /
+      // 1312 tasks warm for 50 rows). Materialized eagerly inside
       // the scope so the caller's action replays rows, not the plan.
       // AQE off for the report window (the withMicroBatchConfs
       // rationale applied here): with AQE on, every exchange of every
       // rung's serve materialized as its own serialized stage job —
       // ~150 driver futures for top-k-scale frames whose partition
-      // count is already pinned. Measured same-box A/B (MiniBench,
-      // sf0.1): warm 4.8–6.3 s with AQE → 3.4–3.8 s without, cold
-      // flat. Semantics-free (results oracle-gated); the rung threads
-      // plan inside this window by design. Not withMicroBatchConfs:
+      // count is already pinned. Measured at sf0.1: warm 4.8–6.3 s
+      // with AQE → 3.4–3.8 s without, cold flat. Semantics-free
+      // (results oracle-gated); the rung threads plan inside this
+      // window by design. Not withMicroBatchConfs:
       // constraint propagation stays on, so the plans stay as measured.
       engine.Core.withConfs(s)(
           "spark.sql.shuffle.partitions" ->
-            engine.Core.SmallFrameWidth.toString,
+            engine.Core.smallFrameWidth(s).toString,
           "spark.sql.adaptive.enabled" -> "false") {
       // the exact ground truth is consumed TWICE (the hit join and the
       // completeness grid) and Spark does not dedupe common subplans

@@ -80,10 +80,9 @@ object AppendTable {
     val t = new Thread(() =>
       try body catch { case e: Throwable => err.set(e) })
     t.setName(s"graft-bloom-${root.getName}")
-    // occupancy guard (r21 verdict item 9): a clobbered slot would
-    // silently orphan a pending build — never joined, its error
-    // swallowed. Callers settle first by discipline; make the
-    // discipline a guarantee.
+    // occupancy guard: a clobbered slot would silently orphan a pending
+    // build — never joined, its error swallowed. Callers settle first
+    // by discipline; make the discipline a guarantee.
     val prev = pendingBloom.putIfAbsent(root.getCanonicalPath, (t, err))
     if (prev != null)
       throw new IllegalStateException(
@@ -273,8 +272,8 @@ object AppendTable {
     * never do. */
   def readPruned(spark: SparkSession, root: java.io.File,
       schema: StructType, key: String, probe: DataFrame): PrunedRead = {
-    // settle any deferred sidecar build first (r21 advisor): the latest
-    // segment's sidecar is exactly what THIS probe wants to prune with,
+    // settle any deferred sidecar build first: the latest segment's
+    // sidecar is exactly what THIS probe wants to prune with,
     // racing it degrades to always-scan-while-the-build-competes, and a
     // deferred build failure on a store only ever probed here must
     // still rethrow (fail loud, per pendingBloom's contract).
@@ -404,8 +403,8 @@ object AppendTable {
   /** MAINTENANCE: fold every committed segment into one range-clustered
     * segment without changing read results — the small-file remedy for
     * a long-running ingest, whose one-parquet-append-per-trigger layout
-    * otherwise accumulates files without bound (r13 verdict item 6;
-    * the lakehouse `OPTIMIZE` applied to the store layout). The rows
+    * otherwise accumulates files without bound (the lakehouse
+    * `OPTIMIZE` applied to the store layout). The rows
     * are rewritten range-clustered on `clusterKeys` so per-file min/max
     * stats stay narrow and a later keyed probe (the stores are probed
     * by digest / band key) prunes files.

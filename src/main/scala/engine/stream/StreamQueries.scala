@@ -101,7 +101,7 @@ object StreamQueries {
     * reads) under micro-batch planning confs, scoped by
     * [[engine.Core.withConfs]]:
     *
-    *  - `spark.sql.shuffle.partitions` = [[engine.Core.SmallFrameWidth]]:
+    *  - `spark.sql.shuffle.partitions` = [[engine.Core.smallFrameWidth]]:
     *    trigger frames are batch-sized; 32-way exchanges pay 4× the
     *    task-scheduling overhead of the data's actual width;
     *  - constraint propagation OFF: it re-derives the constraint set
@@ -130,7 +130,7 @@ object StreamQueries {
     * them to the trigger loop is the local analogue. */
   private[engine] def withMicroBatchConfs[T](s: SparkSession)(body: => T): T =
     engine.Core.withConfs(s)(
-      "spark.sql.shuffle.partitions" -> engine.Core.SmallFrameWidth.toString,
+      "spark.sql.shuffle.partitions" -> engine.Core.smallFrameWidth(s).toString,
       "spark.sql.constraintPropagation.enabled" -> "false",
       "spark.sql.adaptive.enabled" -> "false")(body)
 
@@ -163,7 +163,7 @@ object StreamQueries {
     * Stateful streams pin the shuffle width at first start (AQE is off
     * for stateful workloads), and every stateful operator then runs one
     * state store per partition, each paying WAL + commit IO per
-    * trigger; the run pins [[engine.Core.SmallFrameWidth]]. */
+    * trigger; the run pins [[engine.Core.smallFrameWidth]]. */
   private def runToMemory(spark: SparkSession, sdf: DataFrame, name: String,
       mode: String = "append", noDataBatches: Boolean = true): DataFrame = {
     spark.catalog.dropTempView(name) // tolerate re-runs within a session
@@ -177,7 +177,7 @@ object StreamQueries {
         "spark.sql.streaming.noDataMicroBatches.enabled" ->
           noDataBatches.toString,
         "spark.sql.shuffle.partitions" ->
-          engine.Core.SmallFrameWidth.toString)(
+          engine.Core.smallFrameWidth(spark).toString)(
       runToCompletion(sdf.writeStream.format("memory").outputMode(mode), name))
     spark.table(name)
   }
@@ -327,8 +327,8 @@ object StreamQueries {
       // StreamingSpec's two-batch MemoryStream test, not by this run.
       // Two stateful operators here (the watermark dedup + the agg): at
       // the session's 32 partitions they paid 64 store commits per
-      // trigger; the small-frame width measured 3.06 -> 2.05 s warm at
-      // sf0.1 (MiniBench A/B, 32 -> 8), with results width-invariant.
+      // trigger; the small-frame width (32 -> 8) measured 3.06 -> 2.05 s
+      // warm at sf0.1, with results width-invariant.
       runToMemory(s, deduped, "graft_dedup_sink", mode = "complete",
         noDataBatches = false)
         .orderBy("user_id")
@@ -342,14 +342,20 @@ object StreamQueries {
     * the same trip summary as the batch pipeline; the oracle is the same
     * arithmetic reconstruction over events.
     *
-    * Scale posture: the log is served as range-partitioned files admitted
-    * a few per trigger (`maxFilesPerTrigger`), so a trigger's per-device
-    * buffer in [[FixAssembler]] is a bounded slice (~batch_rows/devices),
-    * never the whole log; open fixes of devices that go silent are closed
-    * by the assembler's event-time timeout. The single `__wm__` heartbeat
-    * line (1h past the last event) advances the final watermark so every
-    * device's last open fix flushes via timeout — the heartbeat's own fix
-    * is behind the final watermark and is never emitted.
+    * Trigger size: the source admits all of its [[SourceFiles]] files at
+    * once, so the log replays in one data trigger and a no-data sweep.
+    * Each trigger pays a fixed cost in tasks, store commits and planning
+    * (on a 4-core box, one trigger fewer cut perfbench's gps_stream warm
+    * time from 6.8 to 5.4 s), and a smaller file count bounded nothing: every ordered source has 32
+    * files, so any file count is a fixed share of the log. The buffer a
+    * trigger's fold holds per device in [[FixAssembler]] therefore grows
+    * with that device's share of the log; bounding it needs a per-trigger
+    * budget, measured against a log that outgrows it. Open fixes of
+    * devices that go silent are closed by the assembler's event-time
+    * timeout. The single `__wm__` heartbeat line (1h past the last event)
+    * advances the final watermark so every device's last open fix flushes
+    * via timeout — the heartbeat's own fix is behind the final watermark
+    * and is never emitted.
     *
     * The fold reads a 17-column, array-free row per sentence and keys by
     * the `device` column, so the parse computes only what a fix keeps.
@@ -369,17 +375,14 @@ object StreamQueries {
             lit("0000.0000"), lit("N"), lit("00000.0000"), lit("E"),
             lit("000.0"), lit("084.4"), date_format(hbTs, "ddMMyy"),
             lit("003.1"), lit("W"))).as("line"))
-      // the per-trigger buffer bound is O(maxFilesPerTrigger × file size)
-      // — an absolute cap independent of total log length (a 2000-file
-      // production log still admits 16 files per trigger), which is what
-      // keeps FixAssembler's per-device it.toSeq slice bounded at scale
       val src = asFileStream(s, lines.unionByName(heartbeat),
         s"mergev3_${d.replaceAll("[^a-zA-Z0-9]", "_")}",
-        orderedBy = Some("line_no"), maxFilesPerTrigger = Some(16))
+        orderedBy = Some("line_no"), maxFilesPerTrigger = Some(SourceFiles))
       val fixes = FixAssembler.assemble(NmeaFunctions.parseSentences(src))
-      // ~150 devices over Core.SmallFrameWidth stores: assembly
-      // parallelism is capped by device count anyway (~19 devices/store
-      // at 8), and the store count sets per-trigger WAL+commit IO
+      // one state store per shuffle partition, Core.smallFrameWidth of
+      // them: each pays a WAL write and a commit per trigger, and the
+      // fold's parallelism is the store count (150 devices at perfbench's
+      // input, 1500 at sf0.1, spread over 4 or 8 stores)
       val out = runToMemory(s, fixes.toDF(), "graft_merge_sink")
       out.filter(col("device") =!= "__wm__")
         .filter(col("complete"))

@@ -17,19 +17,23 @@ final case class JobRecord(desc: String, wallS: Double, tasks: Long) {
     f"""{"desc":${OpRecord.quote(desc)},"wall_s":$wallS%.3f,"tasks":$tasks}"""
 }
 
-/** One stream trigger: its duration by phase and its state operators'
-  * progress, summed over the trigger's stateful operators. */
+/** One stream trigger: its duration by phase, the rows its sources
+  * admitted, and its state operators' progress, summed over the
+  * trigger's stateful operators. */
 final case class TriggerRecord(query: String, batch: Long, ms: Long,
     addBatchMs: Long, offsetsMs: Long, planningMs: Long, walMs: Long,
-    stateRowsTotal: Long, stateRowsUpdated: Long, stateCommitMs: Long,
-    stateStores: Long, rowsDroppedLate: Long) {
+    inputRows: Long, stateRowsTotal: Long, stateRowsUpdated: Long,
+    stateCommitMs: Long, stateMemoryBytes: Long, stateStores: Long,
+    rowsDroppedLate: Long) {
   def json: String =
     s"""{"query":${OpRecord.quote(query)},"batch":$batch,"ms":$ms,""" +
       s""""add_batch_ms":$addBatchMs,"offsets_ms":$offsetsMs,""" +
       s""""planning_ms":$planningMs,"wal_ms":$walMs,""" +
+      s""""input_rows":$inputRows,""" +
       s""""state_rows_total":$stateRowsTotal,""" +
       s""""state_rows_updated":$stateRowsUpdated,""" +
-      s""""state_commit_ms":$stateCommitMs,"state_stores":$stateStores,""" +
+      s""""state_commit_ms":$stateCommitMs,""" +
+      s""""state_memory_bytes":$stateMemoryBytes,"state_stores":$stateStores,""" +
       s""""rows_dropped_late":$rowsDroppedLate}"""
 }
 
@@ -153,8 +157,9 @@ final class OpRecorder private (sc: SparkContext) extends SparkListener {
       triggers.add(TriggerRecord(Option(p.name).getOrElse("anon"), p.batchId,
         p.batchDuration, d("addBatch"),
         d("latestOffset") + d("getBatch") + d("commitOffsets"),
-        d("queryPlanning"), d("walCommit"), ops.map(_.numRowsTotal).sum,
-        ops.map(_.numRowsUpdated).sum, ops.map(_.commitTimeMs).sum,
+        d("queryPlanning"), d("walCommit"), p.numInputRows,
+        ops.map(_.numRowsTotal).sum, ops.map(_.numRowsUpdated).sum,
+        ops.map(_.commitTimeMs).sum, ops.map(_.memoryUsedBytes).sum,
         ops.map(_.numStateStoreInstances.toLong).sum,
         ops.map(_.numRowsDroppedByWatermark).sum)): Unit
     }

@@ -291,6 +291,34 @@ class CoreSpec extends AnyFunSuite {
       hits.mkString("\n"))
   }
 
+  test("the small-frame width is the session's cores, capped at 8") {
+    // tests run on 4 cores; Bench and Verify default to 32, where more
+    // stores than 8 only add commits
+    assert(Seq(1, 4, 8, 16, 32).map(Core.smallFrameWidthFor) ==
+      Seq(1, 4, 8, 8, 8))
+    val spark = gps.TestSpark.spark
+    assert(Core.smallFrameWidth(spark) ==
+      Core.smallFrameWidthFor(spark.sparkContext.defaultParallelism))
+  }
+
+  test("engine code sizes small frames only through smallFrameWidth") {
+    // a literal width skips the session's core count; the scan reads each
+    // file whole, so a key and its value on separate lines still match
+    val literal = (raw"""spark\.sql\.shuffle\.partitions"\s*(->|,)\s*"\d""" +
+      raw"|HashPartitioner\(\s*\d").r
+    val files = Files.walk(java.nio.file.Paths.get("src/main/scala/engine"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val hits = files.flatMap { f =>
+      val text = new String(Files.readAllBytes(f), "UTF-8")
+      literal.findAllMatchIn(text).map { m =>
+        s"$f:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+      }
+    }
+    assert(hits.isEmpty, "size small frames with Core.smallFrameWidth(s):\n" +
+      hits.mkString("\n"))
+  }
+
   test("no per-query trigger-size key is left") {
     // one setting sizes every sized source's triggers
     // (StreamQueries.MaxFilesPerTriggerKey)

@@ -4,14 +4,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import gps.TestSpark
 
-/** Pins the file layout that the flagship's bounded-trigger posture
-  * depends on. `maxFilesPerTrigger=N` only bounds a trigger if the
-  * published source has MORE than N files — round 3 found a bare
-  * `orderBy` write AQE-coalesced to 4 files, silently turning the
-  * "bounded" stream into one whole-log trigger. */
+/** Pins the file layout that splitting a source into triggers depends
+  * on. `maxFilesPerTrigger=N` only splits a source that has MORE than N
+  * files — a bare `orderBy` write AQE-coalesced to 4 files once turned
+  * a split stream into one whole-log trigger. */
 class StreamSourceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val Mft = engine.stream.StreamQueries.MaxFilesPerTriggerKey
+  private lazy val recorder = TestSpark.recorder
   import spark.implicits._
 
   test("win_sessionize (batch) agrees with stream_session window-for-window") {
@@ -166,7 +166,6 @@ class StreamSourceSpec extends AnyFunSuite {
     // with the default run; if the override were ignored, both would be
     // single-trigger and those tests would check nothing
     val sf = "/root/testdata/sf0.001"
-    val recorder = graft.OpRecorder.attach(spark)
     // neither query runs a no-data trigger: the upsert fold is
     // stateless, and a complete-mode aggregation evicts nothing
     def triggers(q: String, sink: String): Int = {
@@ -177,6 +176,19 @@ class StreamSourceSpec extends AnyFunSuite {
     assert(triggers("stream_upsert_sink", "upsert_fold") >= 3)
     // stream_watermark_late's oracle holds only for a single trigger
     assert(triggers("stream_watermark_late", "graft_wm_sink") == 1)
+  }
+
+  test("the merge stream replays a small log in one data trigger, one " +
+      "state store per session core up to 8") {
+    val (_, rec) = recorder.measure(graft.SparkEntry.queries(
+      "stream_stateful_merge")(spark, "/root/testdata/sf0.01").collect())
+    val trig = rec.triggers.filter(_.query == "graft_merge_sink")
+    // one data trigger, then the no-data sweep that flushes open fixes
+    assert(trig.map(_.inputRows > 0) == Seq(true, false),
+      s"input rows per trigger: ${trig.map(_.inputRows)}")
+    val width = engine.Core.smallFrameWidth(spark)
+    assert(trig.forall(_.stateStores == width),
+      s"state stores ${trig.map(_.stateStores)}, width $width")
   }
 
   test("ordered publish yields >maxFilesPerTrigger contiguous-range files") {

@@ -19,6 +19,11 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The one per-op recorder of the shared session: a recorder's
+    * listeners stay attached for the session's life, so specs share
+    * this one instead of attaching their own. */
+  lazy val recorder: graft.OpRecorder = graft.OpRecorder.attach(spark)
 }
 
 /** Golden-sentence tests — the reference's own documented examples

@@ -307,11 +307,19 @@ class StreamingSpec extends AnyFunSuite {
     // identical fix set (decomposition invariance)
     val sf = "/root/testdata/sf0.001"
     val q = engine.stream.StreamQueries.queries("stream_stateful_merge")
-    val base = q.fn(spark, sf).collect().map(_.toString).sorted.toSeq
+    def run(): (Seq[String], Int) = {
+      val (rows, rec) = TestSpark.recorder.measure(
+        q.fn(spark, sf).collect().map(_.toString).sorted.toSeq)
+      (rows, rec.triggers.count(_.query == "graft_merge_sink"))
+    }
+    val (base, baseTriggers) = run()
     assert(base.nonEmpty)
-    val alt = engine.Core.withConfs(spark)(
-        engine.stream.StreamQueries.MaxFilesPerTriggerKey -> "32")(
-      q.fn(spark, sf).collect().map(_.toString).sorted.toSeq)
+    // 4 of the source's 32 files per trigger: 8 data triggers where the
+    // default admits the whole log in one
+    val (alt, altTriggers) = engine.Core.withConfs(spark)(
+      engine.stream.StreamQueries.MaxFilesPerTriggerKey -> "4")(run())
+    assert(altTriggers > baseTriggers,
+      s"the split ran $altTriggers triggers, the default $baseTriggers")
     assert(alt == base, "merge result depends on files per trigger")
 
     // 6 devices × 5 fixes, device-interleaved, over 3 triggers; the store

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * window that the listener-bus drain closes. */
 class OpRecorderSpec extends AnyFunSuite {
   lazy val spark = gps.TestSpark.spark
-  lazy val recorder = OpRecorder.attach(spark)
+  lazy val recorder = gps.TestSpark.recorder
 
   /** A batch query with one shuffle, run under job description `desc`.
     * `collect`, unlike [[Eval.rows]]'s observation, returns without
@@ -69,6 +69,8 @@ class OpRecorderSpec extends AnyFunSuite {
     assert(batches.size == 2)
     assert(rec.triggers.map(_.batch) == batches)
     assert(rec.triggers.forall(t => t.query == "rec_state" && t.stateStores > 0))
+    assert(rec.triggers.map(_.inputRows) == Seq(3L, 2L))
+    assert(rec.triggers.forall(_.stateMemoryBytes > 0))
     assert(rec.triggers.map(_.stateRowsTotal).last == 4)
     assert(rec.json.contains("\"add_batch_ms\":"))
   }
