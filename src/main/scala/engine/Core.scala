@@ -283,48 +283,6 @@ object Core {
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
-  /** Run independent Spark actions CONCURRENTLY from sibling threads and
-    * wait for all (guide §2.6: actions are only sequential because the
-    * driver calls them sequentially). For per-trigger sinks that derive
-    * several independent O(batch) tables from one materialized segment —
-    * the trigger then pays max(job) instead of Σ(job), and the later
-    * jobs' tasks back-fill executors the first job's tail frees. Threads
-    * are created HERE so they inherit the caller's job
-    * description/group (SparkContext local properties are inheritable at
-    * thread creation). The first failure propagates after all bodies
-    * finish — a crashed sibling must not strand a half-written store
-    * behind an exception the caller never sees. */
-  def inParallel(bodies: (() => Unit)*): Unit = {
-    if (bodies.sizeIs <= 1) { bodies.foreach(_.apply()); return }
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val ts = bodies.tail.map { b =>
-      val t = new Thread(() =>
-        try b() catch { case e: Throwable => errs.add(e): Unit })
-      t.start(); t
-    }
-    try bodies.head.apply()
-    catch { case e: Throwable => errs.add(e): Unit }
-    ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
-  }
-
-  /** [[inParallel]] gated to at most `maxConc` bodies RUNNING at once.
-    * For fan-outs whose cold path is heavyweight (each body may train a
-    * model / build an index before its cheap serve): unbounded fan-out
-    * turns N one-time builds into N concurrent memory peaks + driver
-    * contention (r21: ann_recall_report's 10 rungs at full width took
-    * 117 s cold in the bench's heap state vs ~18 s serial), while the
-    * WARM wins the fan-out exists for need only a few lanes. Threads
-    * still spawn eagerly (inheriting the caller's job group); the
-    * semaphore bounds concurrency, not creation. */
-  def inParallelBounded(maxConc: Int)(bodies: (() => Unit)*): Unit = {
-    val sem = new java.util.concurrent.Semaphore(maxConc)
-    inParallel(bodies.map(b => () => {
-      sem.acquire()
-      try b() finally sem.release()
-    }): _*)
-  }
-
   /** PROBE-ONLY work counters (r20 verdict item 2): the scaleprobe's
     * replica-physics adjudication ("the candidate-pair set itself grows
     * ~scale² per clique — result-set growth, not a plan regression")

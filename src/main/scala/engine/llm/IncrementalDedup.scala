@@ -142,13 +142,6 @@ object IncrementalDedup {
       // task-count-bound, at this sf)
       withMicroBatchConfs(s) {
         runToCompletion(src.writeStream.foreachBatch(mergeBatch), "incr_minhash")
-        // settle the LAST trigger's deferred sidecar build before the
-        // serve read: the store must leave this run complete (the
-        // sidecar is what the NEXT nightly run probes with), a build
-        // failure must fail THIS op, and the build's Spark job must not
-        // bleed past the op's own window. Inside the conf scope, so the
-        // build plans under the settings its trigger ran under.
-        engine.stream.AppendTable.settle(store)
       }
       val kept = engine.stream.AppendTable.read(s, store, storeSchema)
         .filter(col("kept"))
@@ -505,9 +498,6 @@ object IncrementalDedup {
         maxFilesPerTrigger = Some(SourceFiles))
       withMicroBatchConfs(s) {
         runToCompletion(src.writeStream.foreachBatch(mergeBatch), "incr_exact")
-        // settle the last trigger's deferred sidecar build before serve,
-        // inside the conf scope (see dedupIncremental)
-        engine.stream.AppendTable.settle(store)
       }
       val kept = engine.stream.AppendTable.read(s, store, storeSchema)
         .filter(col("kept"))

@@ -2493,6 +2493,28 @@ object SearchQueries {
       FROM ms2 QUALIFY rank <= $MrlTopK ORDER BY qid, rank"""))
 
   // ------------------------------------------- B53f ann_recall_report
+  /** Runs `bodies` with at most `lanes` of them at once and waits for
+    * all; the first failure rethrows after every body has finished, so
+    * a crashed lane never leaves the others running unseen. One lane runs
+    * them in order on the caller's thread. Threads are created here, so
+    * they inherit the caller's job description. Used only by
+    * [[annRecallReport]]'s rung fan-out. */
+  private def inLanes(lanes: Int)(bodies: Seq[() => Unit]): Unit = {
+    if (lanes <= 1) { bodies.foreach(_.apply()); return }
+    val sem = new java.util.concurrent.Semaphore(lanes)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val ts = bodies.map { b =>
+      val t = new Thread(() => {
+        sem.acquire()
+        try b() catch { case e: Throwable => errs.add(e): Unit }
+        finally sem.release()
+      })
+      t.start(); t
+    }
+    ts.foreach(_.join())
+    if (!errs.isEmpty) throw errs.peek()
+  }
+
   /** B53f: in-engine retrieval QA — recall@5 of every approximate
     * search rung (SRP-ANN, IVF, PQ-ADC, Matryoshka) against the exact
     * brute-force top-5, per query and per method. The eval harness a
@@ -2584,28 +2606,23 @@ object SearchQueries {
       // The ten rungs are mutually independent serving queries (disjoint
       // or memo-guarded index builds; every shared sub-frame sits behind
       // a keyed/once cache), so each top-k frame — ≤ queries × topK rows
-      // — is materialized on a sibling thread (guide §2.6): the report
-      // pays max(rung) + the grid joins instead of Σ(rung).
-      // checkpointFresh per rung also severs the 10 corpus-scan subtrees
-      // from the final grid plan, which the optimizer re-planned as one
-      // 10-branch union. BOUNDED and CORE-ADAPTIVE (r21 verdict item 4):
-      // cold, each rung trains its index/codebook first, and 10
-      // concurrent builds thrashed the bench heap (117 s t1 vs ~18 s
-      // serial); a FIXED 4 lanes then oversubscribed small masters —
-      // 4 lanes × multi-stage index builds on 8 threads measured 14.3 s
-      // vs 6.9 s for the serial form at 32 threads, a local[32]-shaped
-      // tuning. Lanes scale with the master's cores (cores/4, capped at
-      // the measured 4-lane sweet spot, floor 1 = serial on tiny
-      // masters); the warm overlap the fan-out exists for only needs a
-      // few lanes.
+      // — is materialized in one of a few lanes. checkpointFresh per
+      // rung also severs the 10 corpus-scan subtrees from the final grid
+      // plan, which the optimizer re-planned as one 10-branch union.
+      // Lanes scale with the master's cores (cores/4, capped at 4, so a
+      // master under 8 cores runs the rungs in order): cold, each rung
+      // trains its index or codebook first, and 10 concurrent builds
+      // thrashed the heap (117 s t1 against ~18 s serial), and a fixed
+      // 4 lanes on an 8-thread master took 14.3 s where the serial form
+      // took 6.9 s on 32 threads. Warm, the lanes pay: at local[32] on 4
+      // cores t2 read 6.5-8.6 s with 4 lanes against 11.2-12.3 s in order.
       val lanes = math.max(1, math.min(4,
         s.sparkContext.defaultParallelism / 4))
       val rungTop = new Array[DataFrame](rungs.size)
-      engine.Core.inParallelBounded(lanes)(rungs.zipWithIndex.map {
-        case ((m, f), i) =>
-          () => rungTop(i) = engine.Core.checkpointFresh(
-            f().select(lit(m).as("method"), col("qid"), col("cid")))
-      }: _*)
+      inLanes(lanes)(rungs.zipWithIndex.map { case ((m, f), i) =>
+        () => rungTop(i) = engine.Core.checkpointFresh(
+          f().select(lit(m).as("method"), col("qid"), col("cid")))
+      })
       val hits = rungTop.reduce(_ unionAll _)
         .join(brute, Seq("qid", "cid"), "left")
         .groupBy(col("method"), col("qid"))
@@ -2833,29 +2850,22 @@ object SearchQueries {
 
   /** The DATA half of [[commitIndexSegment]]: write one segment's
     * postings + df/stats deltas, no manifest touch. Segment data dirs
-    * are disjoint, so several segments' writes may run concurrently
-    * (the 4-slice maintenance scaffolding does); only the manifest
-    * append below is single-writer. */
+    * are disjoint; only the manifest append below is single-writer. */
   private def writeIndexSegmentData(sp: SparkSession,
       idxRoot: java.io.File, segName: String, segIn: DataFrame): Unit = {
     val segDir = new java.io.File(idxRoot, s"segments/$segName")
     val pDir = new java.io.File(segDir, "postings")
     segIn.write.mode("overwrite").parquet(pDir.getPath)
     // derive the deltas from the segment's own parquet — one extra
-    // O(batch) scan instead of recomputing the tokenize+shuffle chain.
-    // The two deltas are independent O(batch) jobs over the same
-    // materialized segment: run them concurrently (Core.inParallel) so
-    // the trigger pays max(dfs, stats), not the sum — on the ingest
-    // path this is per-trigger wall time (guide §2.6).
+    // O(batch) scan instead of recomputing the tokenize+shuffle chain
     val segPosts = sp.read.parquet(pDir.getPath)
-    engine.Core.inParallel(
-      () => segPosts.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .write.mode("overwrite")
-        .parquet(new java.io.File(segDir, "dfs").getPath),
-      () => segPosts.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_sum"))
-        .write.mode("overwrite")
-        .parquet(new java.io.File(segDir, "stats").getPath))
+    segPosts.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      .write.mode("overwrite")
+      .parquet(new java.io.File(segDir, "dfs").getPath)
+    segPosts.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_sum"))
+      .write.mode("overwrite")
+      .parquet(new java.io.File(segDir, "stats").getPath)
   }
 
   /** The MANIFEST half of [[commitIndexSegment]]: list an
@@ -2869,7 +2879,7 @@ object SearchQueries {
     // batch id: a compaction also advances the counter, so an ingest
     // resuming after one could present a batch id equal to the current
     // version — and commitDir's idempotent-replay early return would
-    // silently skip listing the batch's segment (r14 advisor). Replay
+    // silently skip listing the batch's segment. Replay
     // idempotence for THIS batch id is the `cur.contains(segName)`
     // check above, which is what actually identifies a replay.
     val vid = engine.stream.VersionedTable.currentDir(idxRoot)
@@ -2911,27 +2921,14 @@ object SearchQueries {
       .map(_.stripPrefix("seg-c").toLong).maxOption.getOrElse(-1L) + 1
     val folded = s"seg-c$gen"
     val (posts, _, _) = readSegIndex(s, idxRoot)
-    val segDir = new java.io.File(idxRoot, s"segments/$folded")
-    val pDir = new java.io.File(segDir, "postings")
     // data-sized range partitioning (no explicit count — AQE coalesces
     // small folds to ~1 file): a pinned 1 was a single-threaded sort of
-    // the ENTIRE index, measured 12.9× past linear at the 100× probe
-    // (r18) — the fold is the op that must scale with the store. The
-    // ranges stay global across files, so term-range zone-map pruning
-    // is unchanged.
-    posts.repartitionByRange(col("term"), col("doc_id"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode("overwrite").parquet(pDir.getPath)
-    val segPosts = s.read.parquet(pDir.getPath)
-    // independent O(fold) delta jobs — concurrent, as in commitIndexSegment
-    engine.Core.inParallel(
-      () => segPosts.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .write.mode("overwrite")
-        .parquet(new java.io.File(segDir, "dfs").getPath),
-      () => segPosts.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_sum"))
-        .write.mode("overwrite")
-        .parquet(new java.io.File(segDir, "stats").getPath))
+    // the ENTIRE index, measured 12.9× past linear at the 100× probe.
+    // The ranges stay global across files, so term-range zone-map
+    // pruning is unchanged.
+    writeIndexSegmentData(s, idxRoot, folded,
+      posts.repartitionByRange(col("term"), col("doc_id"))
+        .sortWithinPartitions(col("term"), col("doc_id")))
     val vid = engine.stream.VersionedTable.currentDir(idxRoot)
       .map(_.getName.stripPrefix("v").toLong + 1).getOrElse(0L)
     engine.stream.VersionedTable.commitDir(idxRoot, vid) { dir =>
@@ -2968,20 +2965,13 @@ object SearchQueries {
       val allPosts = bm25Postings(docs(s, d),
         Some(engine.Core.fpKey("bm25posts", d, "documents")))
       val maxId = corpus.agg(max(col("doc_id"))).head.getLong(0)
-      // the 4 slice ingests are data-independent (disjoint segment
-      // dirs): write all segment data concurrently (guide §2.6 — the
-      // scaffolding pays ~max(slice), not Σ), then list the segments
-      // in manifest order through the single-writer manifest append —
-      // identical on-disk layout to the sequential commits
-      val slices = (0 until 4).map { i =>
+      (0 until 4).foreach { i =>
         val lo = (maxId + 1) * i / 4
         val hi = (maxId + 1) * (i + 1) / 4
-        s"seg-$i" -> allPosts
-          .filter(col("doc_id") >= lo && col("doc_id") < hi)
+        writeIndexSegmentData(s, idxRoot, s"seg-$i",
+          allPosts.filter(col("doc_id") >= lo && col("doc_id") < hi))
+        appendSegmentManifest(idxRoot, s"seg-$i")
       }
-      engine.Core.inParallel(slices.map { case (nm, p) =>
-        () => writeIndexSegmentData(s, idxRoot, nm, p) }: _*)
-      slices.foreach { case (nm, _) => appendSegmentManifest(idxRoot, nm) }
       val segBefore = idxSegments(idxRoot).size
       compactIndexSegments(s, idxRoot)
       val segAfter = idxSegments(idxRoot).size
@@ -3212,8 +3202,10 @@ object SearchQueries {
     * hybrid's IVF posting append) feed only the SERVE phase and later
     * maintenance folds — never the next trigger's screens — so they run
     * on a sibling thread, overlapped by the next trigger's screen work
-    * (guide §2.6: per-trigger wall time is the sum of sequential driver
-    * actions). `settle` at the next trigger's start serializes the
+    * (per-trigger wall time is the sum of sequential driver actions).
+    * Beside [[inLanes]], this is the only place engine code starts a
+    * thread; CoreSpec's source scan pins that. `settle` at the next
+    * trigger's start serializes the
     * single-writer manifest chain (and keeps ONE commit in flight);
     * `settle` before serve makes the stores visible to the readout; a
     * deferred failure rethrows at settle — fail loud, never a silently
@@ -3241,7 +3233,7 @@ object SearchQueries {
       val t = new Thread(() =>
         try body catch { case e: Throwable => err.set(e) })
       t.setName("graft-online-commit")
-      // occupancy guard (r21 verdict item 9): overwriting a live slot
+      // occupancy guard: overwriting a live slot
       // would orphan the pending commit — never joined, its failure
       // swallowed, the single-writer manifest chain broken. Callers
       // settle first by discipline; enforce it before starting the
@@ -3377,17 +3369,11 @@ object SearchQueries {
           engine.stream.StreamQueries.runToCompletion(
             src.writeStream.foreachBatch(mergeBatch), "online_ingest")
           // the LAST trigger's deferred index commit must land before
-          // the serve readout (rethrows its failure), and so must the
-          // last trigger's deferred Bloom-sidecar builds (the stores
-          // leave the run complete; a build failure fails the op; no
-          // job bleed past the op's window). Settled INSIDE the conf
-          // window: the deferred threads plan batch-sized frames, and
+          // the serve readout (rethrows its failure). Settled inside the
+          // conf scope: the commit thread plans batch-sized frames, and
           // settling after the restore let a still-running commit plan
-          // under whatever the session restored to — schedule-dependent
-          // plans.
+          // under whatever the session restored to.
           commits.settle()
-          engine.stream.AppendTable.settle(dgStore)
-          engine.stream.AppendTable.settle(sigStore)
         }
       } finally commits.quietJoin() // failure path: join without masking
       // 4. serve from the CURRENT index version — the merged segment
@@ -3417,9 +3403,8 @@ object SearchQueries {
           .select(lit(stage).as("stage"), col("n").cast("long").as("n"))
       // stages 5 and 6 aggregate the SAME ans frame — as two union
       // branches they executed the whole bm25Rank serve chain twice
-      // (Spark does not dedupe common subplans across branches, the r13
-      // lesson); ONE agg producing both rows runs it once (§2.4:
-      // don't compute things you already computed)
+      // (Spark does not dedupe common subplans across branches); ONE
+      // agg producing both rows runs it once
       val ans56 = ans
         .agg(count(lit(1)).cast("long").as("a5"),
           coalesce(sum(col("ms")), lit(0L)).cast("long").as("a6"))
@@ -3570,10 +3555,9 @@ object SearchQueries {
           .filter(!col("kept")).select(col("vec_id").as("doc_id"))
         val keptB = nearKeptB.join(vecDroppedB, Seq("doc_id"), "left_anti")
         // 4a + 4b DEFERRED (the pipelineOnline rationale): both
-        // index-side commits feed only serve/maintenance, and they
-        // are mutually independent — run them CONCURRENTLY on the
-        // commit thread (Core.inParallel), overlapped by the next
-        // trigger's screens. The segment reads inside target this
+        // index-side commits feed only serve/maintenance, so they run
+        // one after the other on the commit thread, overlapped by the
+        // next trigger's screens. The segment reads inside target this
         // batch's own store segments, which later appends never
         // rewrite.
         val vk = engine.stream.AppendTable
@@ -3584,10 +3568,10 @@ object SearchQueries {
         // pipelineOnline's mergeBatch
         val survivors = stage("index")(engine.Core.checkpointFresh(
           b.join(keptB, Seq("doc_id"), "leftsemi")))
-        commits.defer(engine.Core.inParallel(
+        commits.defer {
           // 4a. BM25 posting segment over the final survivors (O(batch))
-          () => stage("index")(
-            commitIndexSegment(sp, idxRoot, batchId, survivors)),
+          stage("index")(
+            commitIndexSegment(sp, idxRoot, batchId, survivors))
           // 4b. IVF posting append: this batch's surviving vectors,
           // broadcast-codebook argmax cells, cell-clustered at rest so
           // a probe's cell filter prunes row groups.
@@ -3600,11 +3584,12 @@ object SearchQueries {
           // file ORDER is irrelevant to a cent_id equi-probe). The
           // off-ingest maintenance fold (AppendTable.compact) keeps
           // range clustering.
-          () => stage("ivf")(engine.stream.AppendTable.append(
+          stage("ivf")(engine.stream.AppendTable.append(
             assignCells(vk)
               .repartition(col("cent_id"))
               .sortWithinPartitions(col("cent_id")),
-            vpostStore, batchId))))
+            vpostStore, batchId))
+        }
       }
       // 2 "nightly batches" by default, as pipeline_online — the
       // multi-trigger composition is the subject; SearchSpec pins the
@@ -3617,12 +3602,8 @@ object SearchQueries {
           engine.stream.StreamQueries.runToCompletion(
             src.writeStream.foreachBatch(mergeBatch), "onlineh_ingest")
           // the LAST trigger's deferred commits must land before serve,
-          // and so must its deferred Bloom-sidecar builds — settled
-          // INSIDE the conf window so the deferred threads' batch-sized
-          // plans never race the conf restore (see pipelineOnline)
+          // settled inside the conf scope as in pipelineOnline
           commits.settle()
-          engine.stream.AppendTable.settle(dgStore)
-          engine.stream.AppendTable.settle(sigStore)
         }
       } finally commits.quietJoin() // failure path: join without masking
       // 5. SERVE hybrid RRF from the online stores, under micro-batch

@@ -49,56 +49,6 @@ object BloomSpec {
   */
 object AppendTable {
 
-  /** Pending DEFERRED Bloom-sidecar builds, keyed by canonical store
-    * root. [[append]] publishes the segment (write + manifest) and lets
-    * the sidecar build — a separate Spark job that only accelerates
-    * FUTURE probes — run on a sibling thread, overlapping the trigger's
-    * later stages (guide §2.6: per-trigger wall time is the sum of
-    * sequential driver actions). Every sidecar-dependent operation
-    * ([[readPruned]], [[purgeKeys]], [[compact]], [[destroy]], and the
-    * next [[append]] to the same store) settles the pending build first,
-    * so no reader can observe a missing-or-torn sidecar and the
-    * single-writer ordering is preserved; plain [[read]]/[[readSegment]]
-    * never touch sidecars and need not wait. The sidecar file itself is
-    * written tmp + atomic rename as defence in depth. A build failure
-    * rethrows at settle — fail loud, never a silently bare segment. */
-  private val pendingBloom =
-    new java.util.concurrent.ConcurrentHashMap[String, (Thread,
-      java.util.concurrent.atomic.AtomicReference[Throwable])]()
-
-  private def settleBloom(root: java.io.File): Unit = {
-    val p = pendingBloom.remove(root.getCanonicalPath)
-    if (p != null) {
-      p._1.join()
-      val e = p._2.get()
-      if (e != null) throw e
-    }
-  }
-
-  private[stream] def deferBloom(root: java.io.File)(body: => Unit): Unit = {
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val t = new Thread(() =>
-      try body catch { case e: Throwable => err.set(e) })
-    t.setName(s"graft-bloom-${root.getName}")
-    // occupancy guard: a clobbered slot would silently orphan a pending
-    // build — never joined, its error swallowed. Callers settle first
-    // by discipline; make the discipline a guarantee.
-    val prev = pendingBloom.putIfAbsent(root.getCanonicalPath, (t, err))
-    if (prev != null)
-      throw new IllegalStateException(
-        s"deferBloom: a sidecar build is already pending for $root — " +
-        "settle it first (single-writer contract)")
-    t.start()
-  }
-
-  /** Settle any pending deferred sidecar build for `root` — the public
-    * teardown hook for ops whose LAST append has no later
-    * sidecar-dependent access to settle through (the serve/read phase
-    * never probes): without it the build's Spark job could still be in
-    * flight when the op returns, bleeding into whatever the caller
-    * times next. Rethrows a deferred build failure (fail loud). */
-  def settle(root: java.io.File): Unit = settleBloom(root)
-
   private def manifest(root: java.io.File): java.io.File =
     new java.io.File(root, "MANIFEST")
 
@@ -176,14 +126,11 @@ object AppendTable {
     * would duplicate its rows.
     *
     * `bloom`: optionally front the segment with a Bloom sidecar over its
-    * probe-key values ([[BloomSpec]]). The build is DEFERRED to a
-    * sibling thread (see [[pendingBloom]]) — the manifest may briefly
-    * list a segment whose sidecar is still being written; that is safe
-    * because readers treat a missing sidecar as always-scan and every
-    * sidecar-dependent access settles the build first. */
+    * probe-key values ([[BloomSpec]]), built before `append` returns. The
+    * manifest lists the segment a moment before its sidecar lands; a
+    * concurrent reader treats the missing sidecar as always-scan. */
   def append(df: DataFrame, root: java.io.File, id: Long,
       bloom: Option[BloomSpec] = None): Unit = {
-    settleBloom(root) // single-writer ordering across deferred builds
     root.mkdirs()
     val seg = s"seg-$id"
     if (id <= foldedHighWater(root) || segments(root).contains(seg)) return
@@ -191,14 +138,7 @@ object AppendTable {
     val cur = segments(root)
     if (!cur.contains(seg))
       writeManifest(root, id.toString, cur :+ seg, foldedHighWater(root))
-    // the sidecar build is its own Spark job that only benefits FUTURE
-    // probes — defer it to a sibling thread so the caller's next stage
-    // overlaps it; settled before any sidecar-dependent access (above).
-    // Listing the segment before its sidecar lands is safe: readers
-    // treat a missing sidecar as always-scan, and the atomic rename in
-    // writeBloom means no reader can ever see a torn sidecar file.
-    bloom.foreach(b =>
-      deferBloom(root)(writeBloom(df.sparkSession, root, seg, b)))
+    bloom.foreach(b => writeBloom(df.sparkSession, root, seg, b))
   }
 
   /** Per-segment Bloom sidecar file (`_BLOOM.<key>` inside the segment
@@ -238,8 +178,8 @@ object AppendTable {
     // Cost is 1.44·log2(1/fpp) bits/key (≈5 bytes/key at n=1e6): the
     // sidecar stays orders of magnitude smaller than its segment.
     val bf = keys.stat.bloomFilter("k", n, math.max(0.01 / n, 1e-12))
-    // tmp + atomic rename: with deferred builds a probe may race this
-    // write — it must observe a complete sidecar or none at all
+    // tmp + atomic rename: a reader or a crash must observe a complete
+    // sidecar or none at all
     val dest = bloomFile(root, seg, bloom.key)
     val tmp = new java.io.File(dest.getPath + ".tmp")
     val out = new java.io.FileOutputStream(tmp)
@@ -272,12 +212,6 @@ object AppendTable {
     * never do. */
   def readPruned(spark: SparkSession, root: java.io.File,
       schema: StructType, key: String, probe: DataFrame): PrunedRead = {
-    // settle any deferred sidecar build first: the latest segment's
-    // sidecar is exactly what THIS probe wants to prune with,
-    // racing it degrades to always-scan-while-the-build-competes, and a
-    // deferred build failure on a store only ever probed here must
-    // still rethrow (fail loud, per pendingBloom's contract).
-    settleBloom(root)
     val segs = segments(root)
     if (segs.isEmpty) return PrunedRead(read(spark, root, schema), 0, 0)
     val (hit, bare) = bloomCandidates(spark, root, segs, key, probe)
@@ -369,7 +303,6 @@ object AppendTable {
       schema: StructType, key: String, keys: DataFrame,
       bloom: Option[BloomSpec] = None): (Int, Int) = {
     import org.apache.spark.sql.functions.col
-    settleBloom(root)
     val segs = segments(root)
     if (segs.isEmpty) return (0, 0)
     val (hit, bare) = bloomCandidates(spark, root, segs, key, keys)
@@ -434,7 +367,6 @@ object AppendTable {
       clusterKeys: Seq[String], nFiles: Int = 0,
       bloom: Option[BloomSpec] = None): Unit = {
     import org.apache.spark.sql.functions.col
-    settleBloom(root)
     val segs = segments(root)
     if (segs.size <= 1) return
     val gen = segs.filter(_.startsWith("seg-c"))
@@ -471,19 +403,5 @@ object AppendTable {
   }.sum
 
   /** Remove the table entirely (fresh-run reset). */
-  def destroy(root: java.io.File): Unit = {
-    // join (never delete under a running sidecar build) but do NOT
-    // rethrow a deferred failure: the table is being deleted, so a
-    // stale build error is moot — rethrowing here would poison the
-    // NEXT fresh run of an op whose previous invocation died after
-    // deferring (the fail-loud path is settle()/the dependent ops)
-    val p = pendingBloom.remove(root.getCanonicalPath)
-    if (p != null) {
-      p._1.join()
-      Option(p._2.get()).foreach(e => System.err.println(
-        s"[AppendTable] discarding deferred sidecar failure on destroy " +
-        s"of $root: ${e.getMessage}"))
-    }
-    deleteRecursively(root)
-  }
+  def destroy(root: java.io.File): Unit = deleteRecursively(root)
 }

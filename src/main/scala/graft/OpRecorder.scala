@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.SparkContext
 import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
@@ -70,14 +69,17 @@ object OpRecord {
 }
 
 /** The one listener of the dev mains: a `SparkListener` plus a
-  * `StreamingQueryListener`, attached once per session with [[OpRecorder.attach]].
+  * `StreamingQueryListener`, attached once per session with [[OpRecorder.attach]]
+  * and removed with [[detach]].
   *
   * [[measure]] runs one op and returns its [[OpRecord]]. The listener bus
   * is asynchronous, so a job's last task-end events and a stream's last
   * progress event can arrive after the action returned; `measure` drains
   * the bus before it resets the counters and again after the op, so a
   * record holds exactly the events its op caused. */
-final class OpRecorder private (sc: SparkContext) extends SparkListener {
+final class OpRecorder private (spark: SparkSession) extends SparkListener {
+  private val sc = spark.sparkContext
+
   private final class Job(val desc: String, val start: Long) {
     @volatile var end: Long = -1L
     val tasks = new AtomicLong
@@ -112,6 +114,12 @@ final class OpRecorder private (sc: SparkContext) extends SparkListener {
       stages.get, tasks.get, failures.get, shuffle.get, spill.get,
       taskMsSum.get, taskMsMax.get, js.sortBy(-_.wallS).take(3),
       triggers.asScala.toSeq))
+  }
+
+  /** Stops listening: removes both listeners [[OpRecorder.attach]] added. */
+  def detach(): Unit = {
+    sc.removeSparkListener(this)
+    spark.streams.removeListener(streams)
   }
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -169,7 +177,7 @@ final class OpRecorder private (sc: SparkContext) extends SparkListener {
 object OpRecorder {
   /** A recorder listening to `spark`'s jobs and streams. */
   def attach(spark: SparkSession): OpRecorder = {
-    val r = new OpRecorder(spark.sparkContext)
+    val r = new OpRecorder(spark)
     spark.sparkContext.addSparkListener(r)
     spark.streams.addListener(r.streams)
     r

@@ -242,21 +242,21 @@ class CoreSpec extends AnyFunSuite {
   }
 
   /** Lines of the Scala sources under `root` that match `call`, outside
-    * the body of the method whose definition line contains `defn` in the
-    * file named `home`. */
+    * the bodies of the definitions whose first line contains one of
+    * `defns` in the file named `home`. */
   private def hitsOutside(root: String, call: scala.util.matching.Regex,
-      home: String, defn: String): Seq[String] = {
+      home: String, defns: String*): Seq[String] = {
     val files = Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.nonEmpty, s"no sources under $root")
     files.flatMap { f =>
       val lines = Files.readAllLines(f).asScala.toSeq
-      val helper = if (f.getFileName.toString == home) {
+      val helper = if (f.getFileName.toString == home) defns.flatMap { defn =>
         val from = lines.indexWhere(_.contains(defn))
         assert(from >= 0, s"$defn not found in $home")
         val to = lines.indexWhere(_.startsWith("  }"), from)
         from to to
-      } else Range(0, 0)
+      } else Seq.empty
       lines.zipWithIndex.collect {
         case (l, i) if call.findFirstIn(l).isDefined && !helper.contains(i) =>
           s"$f:${i + 1}: ${l.trim}"
@@ -288,6 +288,17 @@ class CoreSpec extends AnyFunSuite {
       raw"checkpointLocation|AvailableNow\(\)".r,
       "StreamQueries.scala", "def runToCompletion(")
     assert(hits.isEmpty, "run streams with StreamQueries.runToCompletion:\n" +
+      hits.mkString("\n"))
+  }
+
+  test("engine code starts a thread only in DeferredCommit and " +
+      "ann_recall_report's lanes") {
+    // every sibling thread plans under whatever settings another thread
+    // has scoped at that moment; the online capstones' deferred index
+    // commit and the recall report's rung lanes are the overlaps kept
+    val hits = hitsOutside("src/main/scala/engine", raw"new Thread\(".r,
+      "SearchQueries.scala", "final class DeferredCommit", "def inLanes(")
+    assert(hits.isEmpty, "run engine work on the caller's thread:\n" +
       hits.mkString("\n"))
   }
 
@@ -324,7 +335,7 @@ class CoreSpec extends AnyFunSuite {
     // (StreamQueries.MaxFilesPerTriggerKey)
     val hits = hitsOutside("src",
       raw"spark\.graft\.[\w.]*(\.mft|filesPerTrigger)\b".r,
-      home = "", defn = "") // no file is exempt
+      home = "") // no file is exempt
     assert(hits.isEmpty, "per-query trigger-size keys:\n" + hits.mkString("\n"))
   }
 }

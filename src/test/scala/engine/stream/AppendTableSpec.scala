@@ -131,30 +131,19 @@ class AppendTableSpec extends AnyFunSuite {
     }
   }
 
-  test("deferBloom refuses a second deferred build on an unsettled " +
-      "store; settle() is the public teardown hook") {
+  test("append with a BloomSpec leaves its _BLOOM.<key> sidecar on disk " +
+      "when it returns") {
     val root = new java.io.File(
       s"${engine.Core.scratchRoot}/graft_appendtable_spec_${java.util.UUID.randomUUID}")
     try {
-      root.mkdirs()
-      // occupancy guard (r21 verdict item 9): a second defer without a
-      // settle would silently orphan the first build — it must throw
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      AppendTable.deferBloom(root) { gate.await() }
-      val e = intercept[IllegalStateException] {
-        AppendTable.deferBloom(root) { () }
-      }
-      assert(e.getMessage.contains("already pending"))
-      gate.countDown()
-      AppendTable.settle(root) // joins the pending build, no error
-      // a deferred build FAILURE rethrows at the public settle — the
-      // fail-loud half of the pendingBloom contract for stores whose
-      // last access is a plain read (no sidecar-dependent op to settle
-      // through)
-      AppendTable.deferBloom(root) { throw new RuntimeException("boom") }
-      val f = intercept[RuntimeException] { AppendTable.settle(root) }
-      assert(f.getMessage == "boom")
-      AppendTable.settle(root) // settled slots are cleared: idempotent
+      val df = (0 until 20).map(j => (j.toLong, s"dg-$j")).toDF("id", "dg")
+      AppendTable.append(df, root, 0L, Some(BloomSpec.column("dg")))
+      // no settle, no sleep: the sidecar is complete the moment append
+      // returns, and no tmp file is left beside it
+      val seg = new java.io.File(root, "seg-0")
+      assert(new java.io.File(seg, "_BLOOM.dg").isFile,
+        "append returned before its sidecar landed")
+      assert(!new java.io.File(seg, "_BLOOM.dg.tmp").exists())
     } finally {
       AppendTable.destroy(root)
     }

@@ -112,9 +112,12 @@ class OpRecorderSpec extends AnyFunSuite {
       assert(rec2.jobs == alone2.jobs && rec2.tasks == alone2.tasks)
       assert(rec2.topJobs.map(_.desc).forall(_ == "second"))
     } finally {
-      spark.sparkContext.removeSparkListener(late)
+      late.detach()
       spark.sparkContext.removeSparkListener(slowJobs)
       spark.streams.removeListener(slowStreams)
     }
+    // a detached recorder hears nothing more: a later stream adds no trigger
+    val (_, after) = late.measure(stream("rec_detached"))
+    assert(after.triggers.isEmpty && after.jobs == 0)
   }
 }
