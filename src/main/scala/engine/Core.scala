@@ -283,33 +283,6 @@ object Core {
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
-  /** PROBE-ONLY work counters (r20 verdict item 2): the scaleprobe's
-    * replica-physics adjudication ("the candidate-pair set itself grows
-    * ~scale² per clique — result-set growth, not a plan regression")
-    * must be a NUMBER in the artifact, not a flag-note narrative. When
-    * `spark.graft.probe.counters=true` (set ONLY by ScaleProbe — the
-    * bench and oracle paths never pay this), instrumented ops count
-    * their internal candidate/edge frames here; ScaleProbe drains the
-    * registry per op into the artifact. The count() is an extra job
-    * over a frame the op already built — probe-only cost by the conf
-    * gate. */
-  private val probeCounters =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  def probeCountersEnabled(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.probe.counters", "false") == "true"
-  def probeCount(s: SparkSession, key: String)(df: => DataFrame): Unit =
-    if (probeCountersEnabled(s))
-      probeCounters.merge(key, df.count(), (a, b) => a + b): Unit
-  def probeCountAdd(s: SparkSession, key: String, n: => Long): Unit =
-    if (probeCountersEnabled(s))
-      probeCounters.merge(key, n, (a, b) => a + b): Unit
-  def drainProbeCounters(): Map[String, Long] = {
-    val snap = scala.jdk.CollectionConverters
-      .MapHasAsScala(probeCounters).asScala.toMap
-    probeCounters.clear()
-    snap
-  }
-
   /** Register a scratch dir for deletion when the owning SparkSession's
     * context stops. For run-UUID-scoped state dirs whose RESULT frame is
     * lazy (a parquet scan of the dir): the dir can't be destroyed inside

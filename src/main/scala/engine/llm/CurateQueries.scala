@@ -798,10 +798,11 @@ object CurateQueries {
       // `text` per token row (the pre-r20 shape) multiplies the symbol
       // frame's bytes by document length, and the per-doc collect_list
       // agg's sort fallback then ships doc-length payload per SYMBOL row
-      // — the scaleprobe100 superlinear flag (us_per_row 2.41× vs 30×:
-      // the 30× replica's agg fit the hash buffer, the 100× one spilled
-      // to sort with text aboard). The original text re-attaches below
-      // via ONE doc-cardinality join, co-partitioned on doc_id.
+      // — measured super-linear on a 100× replicated corpus (µs per row
+      // 2.41× the 30× run's: the 30× replica's agg fit the hash buffer,
+      // the 100× one spilled to sort with text aboard). The original text
+      // re-attaches below via ONE doc-cardinality join, co-partitioned on
+      // doc_id.
       val th = docs(s, d).repartition(col("doc_id"))
         .select(col("doc_id"),
           posexplode(tokens(col("text"))).as(Seq("p", "word")))

@@ -357,9 +357,6 @@ object IncrementalDedup {
         val candStoreV = cbandsOf(bcls).as("n")
           .join(cbandsOf(scls).as("o"),
             col("n.band") === col("o.band") && col("n.bv") === col("o.bv"))
-        // probe-only SRP band-collision counter (r20 verdict item 2,
-        // the minhashScreenBatch twin) — never paid by bench/oracle
-        engine.Core.probeCount(sp, "vec_candidate_pairs")(candStoreV)
         val hitStore = candStoreV
           .filter(dot(col("n.u"), col("o.u")) >= 0.45)
           .select(col("n.u").as("u"), col("n.code").as("code"))
@@ -373,7 +370,6 @@ object IncrementalDedup {
           .select(col("pu"), col("pmn"),
             col("bb.band").as("band"), col("bb.bv").as("bv"))
         val candBatchV = cbandsOf(bcls).join(pb, Seq("band", "bv"))
-        engine.Core.probeCount(sp, "vec_candidate_pairs")(candBatchV)
         val mB = candBatchV
           .filter(dot(col("u"), col("pu")) >= 0.45)
           .groupBy(col("u"), col("code"))

@@ -1320,13 +1320,6 @@ object LlmQueries {
           .select(col("va").as("v"), col("vb").as("u"))
         val edges = prs.unionByName(prs.select(col("u").as("v"), col("v").as("u")))
           .repartition(col("v")).localCheckpoint()
-        // probe-only ε-graph counters (r20 verdict item 2): the
-        // scaleprobe's "edges-per-point stays ~scale" adjudication as
-        // measured numbers — counts over the just-checkpointed frame,
-        // never paid by bench/oracle paths
-        engine.Core.probeCount(s, "epsilon_edges")(edges)
-        engine.Core.probeCount(s, "epsilon_points")(
-          edges.select(col("v")).distinct())
         val core = edges.groupBy(col("v")).agg(count(lit(1)).as("dg"))
           .filter(col("dg") >= DbscanMinPts).select(col("v"))
           .localCheckpoint()

@@ -1816,12 +1816,13 @@ object SearchQueries {
     * point the oracle replays — the dedup_semantic contract). The scale
     * recipe is k ∝ √N (cells AND cell size grow as √N, balancing the
     * O(N·k) assignment against the O(N·⟨cell⟩) pair enumeration —
-    * total O(N^1.5), vs quadratic at any FIXED k); ScaleProbe applies
-    * exactly this, and the r14 probe measured the fixed-16 build
-    * super-linear at 30× (6.15× at 3× data) vs linear under the √N
-    * recipe. At 100 TB the coarse quantizer goes hierarchical
-    * (IVF-HNSW / two-level k-means), which refines this same blocking
-    * without changing the within-cell exact-verify core. */
+    * total O(N^1.5), vs quadratic at any FIXED k). A replicated 30×
+    * corpus (round 14) measured the fixed-16 build super-linear (6.15×
+    * at 3× data) and linear under the √N recipe; a scaled run sets the
+    * key as a `-D` property (README, "Scale sanity"). At 100 TB the
+    * coarse quantizer goes hierarchical (IVF-HNSW / two-level k-means),
+    * which refines this same blocking without changing the within-cell
+    * exact-verify core. */
   private[engine] def knnGraphFrame(s: SparkSession, d: String): DataFrame = {
     // SESSION-keyed (lesson 24: a deterministic corpus-scale encode is a
     // model artifact, not query work): the ranked edge table is the
@@ -1830,9 +1831,8 @@ object SearchQueries {
     // blockedKnnRecall), each of which re-ran the assignment +
     // within-cell pair verify per bench run. The frame is (long, long,
     // double, int) × N·K — id-table scale, orders of magnitude under
-    // its source. Key includes the cell-count conf: ScaleProbe re-runs
-    // under √N-scaled spark.graft.knng.k and must not read the 16-cell
-    // artifact.
+    // its source. Key includes the cell-count conf: a run under a
+    // √N-scaled spark.graft.knng.k must not read the 16-cell artifact.
     val cells = s.conf.get("spark.graft.knng.k", "16").toInt
     engine.ScratchCache.persistKeyed(
       engine.Core.fpKey(s"knng_edges_c$cells", d, "embeddings"))(
@@ -1851,12 +1851,10 @@ object SearchQueries {
     * sample `vec_id % sampleMod == 0` — r14 verdict item 5: the √N
     * cell recipe's recall trade was asserted from the SemDeDup
     * literature; this measures it in-engine at whatever (corpus, k)
-    * point the session confs select. ScaleProbe reports it at BOTH the
-    * oracle-pinned 16 cells and the √N-scaled count on the 10×
-    * corpus; SearchSpec pins small-scale floors at two k points. The
-    * exact side is a broadcast-sample nested-loop over the corpus
-    * (|sample| · N dots — a QA readout's budget, not a serving
-    * path). */
+    * point the session confs select. SearchSpec pins small-scale
+    * floors at two k points. The exact side is a broadcast-sample
+    * nested-loop over the corpus (|sample| · N dots — a QA readout's
+    * budget, not a serving path). */
   def blockedKnnRecall(s: SparkSession, d: String, sampleMod: Int)
       : Double = {
     val e = LlmQueries.unitCorpus(s, d)
@@ -3177,12 +3175,6 @@ object SearchQueries {
           col("n.j") === col("o.j") && col("n.bk") === col("o.bk") &&
             col("o.doc_id") < col("n.doc_id"))
         .select(col("o.doc_id").as("da"), col("n.doc_id").as("db"))
-      // probe-only (spark.graft.probe.counters, r20 verdict item 2):
-      // the measured minhash band-collision candidate count, so the
-      // scaleprobe's replica-clique adjudication is a number in the
-      // artifact — costs one extra job over these frames, never paid
-      // by the bench/oracle paths
-      engine.Core.probeCount(sp, "candidate_pairs")(cand)
       val sigOnly = (t: DataFrame) => t.select(col("doc_id"), col("g"))
       val dropped = cand
         .join(sigOnly(prevSig).unionByName(sigOnly(sig))

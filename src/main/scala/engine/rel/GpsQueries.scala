@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import engine.Core.{t, r4}
 import engine.Q
 import gps.parse.{NmeaFunctions, NmeaSynth}
-import gps.assemble.FixAssembly
 import gps.stream.FixAssembler
 
 /** The GPS/NMEA operator surface — the reference's actual domain
@@ -67,7 +66,7 @@ object GpsQueries {
     (s, d) => {
       val fixes = FixAssembler.assemble(
         NmeaFunctions.parseSentences(NmeaSynth.readLog(s, d))).toDF()
-      FixAssembly.qualityFilter(fixes, minSats = 5, maxHdop = 8.0)
+      FixAssembler.qualityFilter(fixes, minSats = 5, maxHdop = 8.0)
         .select(col("device"),
           date_format(date_trunc("hour", col("fix_time")), "yyyy-MM-dd HH:00")
             .as("hour"),

@@ -1,19 +1,11 @@
 package gps.assemble
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 import gps.stream.FixAssembler
 
-/** Batch GPS-fix assembly — the reference's stateful merge
-  * (`$Nmea[$CurrentUTC][field] = value`, class.nmea.parser.php:173-187
-  * etc.), run by [[gps.stream.FixAssembler]]'s per-device fold over a
-  * batch frame, plus the quality gate the reference declares but never
-  * applies.
-  *
-  * Fixes are keyed by the run of the carried utc, not by time-of-day
-  * alone (the reference's midnight collision, SURVEY.md §1.5.9);
-  * incomplete fixes (GoodEnough :126-129) are dropped, not leaked forever
-  * (:18).
+/** Batch GPS-fix assembly as a DataFrame: [[gps.stream.FixAssembler]]'s
+  * per-device fold over a batch frame. perfbench's harness times it as
+  * its `assemble` layer.
   */
 object FixAssembly {
 
@@ -21,14 +13,4 @@ object FixAssembly {
     * GoodEnough fix. */
   def assemble(parsed: DataFrame): DataFrame =
     FixAssembler.assemble(parsed).toDF()
-
-  /** The declared-but-never-applied quality filter (:13, :40-77), applied:
-    * minSats ≤ numsat, hdop ≤ maxHdop, vdop ≤ maxVdop (null DOP passes,
-    * matching "no data ⇒ no objection"). */
-  def qualityFilter(fixes: DataFrame, minSats: Int = 4, maxHdop: Double = 10,
-      maxVdop: Double = 10): DataFrame =
-    fixes.filter(
-      (col("numsat").isNull || col("numsat") >= minSats) &&
-      (col("hdop").isNull || col("hdop") <= maxHdop) &&
-      (col("vdop").isNull || col("vdop") <= maxVdop))
 }

@@ -16,6 +16,13 @@ import org.apache.spark.sql.functions._
   */
 object NmeaFunctions {
 
+  /** Sentence families the reference dispatches on
+    * (class.nmea.parser.php:106-111); [[parseSentences]] drops every
+    * other type. Sorted, so FixAssembler's type bitmask lists a fix's
+    * families in this order. */
+  val SentenceTypes: Seq[String] =
+    Seq("GPGGA", "GPGLL", "GPGSA", "GPGSV", "GPRMC", "GPVTG")
+
   /** Sentence tag: chars 2..6, uppercased/trimmed
     * (SetNmeaType, class.nmea.parser.php:137-140). */
   def sentenceType(line: Column): Column =
@@ -202,7 +209,7 @@ object NmeaFunctions {
     val passthrough = df.columns.filter(_ != "line").map(col).toSeq
     val typed = df
       .withColumn("stype", sentenceType(col("line")))
-      .filter(col("stype").isin(gps.model.GpsFix.SentenceTypes: _*))
+      .filter(col("stype").isin(SentenceTypes: _*))
       .filter(checksumValid(col("line"), lenient))
       // materialize the split ONCE as its own column: ~40 downstream
       // references (several under interpreted HOF subtrees where CSE

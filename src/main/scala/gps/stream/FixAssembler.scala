@@ -3,7 +3,7 @@ package gps.stream
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, size, when}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import gps.model.GpsFix.SentenceTypes
+import gps.parse.NmeaFunctions.SentenceTypes
 
 /** One parsed NMEA sentence, narrowed to the fields a [[StreamFix]] is built
   * from: [[FixAssembler.assemble]] selects these from the output of
@@ -55,7 +55,7 @@ case class StreamFix(
   * downstream instead of accumulating forever (the reference never evicts —
   * SURVEY.md §4.2). `current.n_sats_view` holds the satellites counted so
   * far; `types` is the open fix's sentence-type flag set (:173 etc.) as a
-  * bitmask over [[gps.model.GpsFix.SentenceTypes]]. */
+  * bitmask over [[gps.parse.NmeaFunctions.SentenceTypes]]. */
 case class FixBuffer(current: Option[ParsedSentence], maxLineNo: Long,
     types: Int)
 
@@ -66,7 +66,10 @@ case class FixBuffer(current: Option[ParsedSentence], maxLineNo: Long,
   * open fix closes it (emit), mirroring ParseLine's behavior one-to-one
   * while scaling across devices/executors. Batch and stream differ only
   * in how a device's sentences reach the fold and when its last fix is
-  * flushed (see [[FixAssembler.assemble]]).
+  * flushed (see [[FixAssembler.assemble]]). Fixes are keyed by the run of
+  * the carried utc, not by time-of-day alone (the reference's midnight
+  * collision, SURVEY.md §1.5.9); incomplete fixes (GoodEnough :126-129)
+  * are dropped, not leaked forever (:18).
   *
   * The typed boundary is kept flat. The fold reads only the 17 columns of
   * [[ParsedSentence]], so Catalyst prunes every other parse column (GSA's
@@ -281,4 +284,14 @@ object FixAssembler {
       narrow.groupBy(col("device")).as[String, ParsedSentence]
         .flatMapSortedGroups(col("line_no"))(foldBatch)
   }
+
+  /** The declared-but-never-applied quality filter (:13, :40-77), applied:
+    * minSats ≤ numsat, hdop ≤ maxHdop, vdop ≤ maxVdop (null DOP passes,
+    * matching "no data ⇒ no objection"). */
+  def qualityFilter(fixes: DataFrame, minSats: Int = 4, maxHdop: Double = 10,
+      maxVdop: Double = 10): DataFrame =
+    fixes.filter(
+      (col("numsat").isNull || col("numsat") >= minSats) &&
+      (col("hdop").isNull || col("hdop") <= maxHdop) &&
+      (col("vdop").isNull || col("vdop") <= maxVdop))
 }

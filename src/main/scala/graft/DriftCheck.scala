@@ -2,10 +2,10 @@ package graft
 
 /** Per-query bench-band drift gate.
   *
-  * The corpus-growth ratios in ScaleProbe cannot catch a PER-ROW
-  * constant blowup: multimodal_align's defect was quadratic in document
-  * LENGTH, not corpus size, so on replicated same-length docs its
-  * 10×-probe ratio stayed perfectly linear while every single row cost
+  * Corpus-growth ratios cannot catch a PER-ROW constant blowup:
+  * multimodal_align's defect was quadratic in document LENGTH, not
+  * corpus size, so on a replicated same-length 10× corpus its time
+  * ratio stayed perfectly linear while every single row cost
   * ~80 ms — only the absolute bench number moved (0.23 s under the
   * count()-era harness, 156.5 s under honest Eval.rows timing). The
   * class-closing gate is therefore a BAND ON THE BENCH ITSELF: compare
@@ -96,52 +96,9 @@ object DriftCheck {
     (med, cleared)
   }
 
-  /** Per-op (sec, us_per_row) from a committed scaleprobe artifact.
-    * Same tolerant flat-regex discipline as
-    * [[readQueries]] — the file is machine-written by ScaleProbe. */
-  def readProbe(path: String): Map[String, (Double, Double)] = {
-    val f = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isRegularFile(f)) return Map.empty
-    val txt = java.nio.file.Files.readString(f)
-    ("""\"([a-z0-9_]+)\": \{\"sec\": ([0-9.]+), \"rows\": [0-9]+""" +
-      """.*?\"us_per_row\": ([0-9.]+)""").r
-      .findAllMatchIn(txt)
-      .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble))
-      .toMap
-  }
-
-  /** Probe-artifact per-row-cost band: the bench
-    * band sees absolute seconds within the bench; the probe's
-    * `us_per_row` is the number a slow CROSS-ROUND per-row-cost creep
-    * moves (the within-round vs10x/vs30x ratios only see growth across
-    * scales inside one round). Same 3×-past-floor discipline: flag when
-    * the per-row cost grew > [[DriftBand]]× AND the op's current
-    * absolute time is past [[AbsFloorSec]] (a sub-second op's per-row
-    * cost is scheduler noise). Flagged (op, prevUs, curUs, ratio). */
-  def checkProbe(prev: Map[String, (Double, Double)],
-      cur: Map[String, (Double, Double)])
-      : Seq[(String, Double, Double, Double)] =
-    cur.toSeq.flatMap { case (q, (cSec, cUs)) =>
-      prev.get(q).map(_._2)
-        .filter(pUs => pUs > 0 && cUs > 0 && cUs / pUs > DriftBand &&
-          cSec > AbsFloorSec)
-        .map(pUs => (q, pUs, cUs, cUs / pUs))
-    }.sortBy(-_._4)
-
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("--probe")) {
-      require(args.length == 3,
-        "usage: DriftCheck --probe <prev_scaleprobe.json> <cur_scaleprobe.json>")
-      val flags = checkProbe(readProbe(args(1)), readProbe(args(2)))
-      if (flags.isEmpty)
-        println("PROBE DRIFT none (band " + DriftBand + "x on us_per_row)")
-      else flags.foreach { case (q, p, c, r) =>
-        println(f"PROBE DRIFT $q: $p%.2f -> $c%.2f us/row ($r%.1fx, band ${DriftBand}%.1fx)")
-      }
-      return
-    }
     require(args.length == 2,
-      "usage: DriftCheck <prev_bench.json> <cur_bench.json> | --probe <prev> <cur>")
+      "usage: DriftCheck <prev_bench.json> <cur_bench.json>")
     val flags = check(readQueries(args(0)), readQueries(args(1)))
     if (flags.isEmpty) println("DRIFT none (band " + DriftBand + "x)")
     else flags.foreach { case (q, p, c, r) =>

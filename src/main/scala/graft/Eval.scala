@@ -2,17 +2,16 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The ONE timed action shared by Bench, ScaleProbe, SkewProbe and
-  * TriggerProbe: evaluate EVERY output column through the built-in
-  * noop sink and return the row count from an [[org.apache.spark.sql
-  * .Observation]] riding the same execution.
+/** Bench's timed action: evaluate EVERY output column through the
+  * built-in noop sink and return the row count from an
+  * [[org.apache.spark.sql.Observation]] riding the same execution.
   *
   * `.count()` lets Catalyst prune all output columns and then eliminate
   * whole subtrees that only feed pruned columns: a distinct-keyed flag
   * join (dedup_semantic's `kept` left join) vanishes under count(), so
   * a count()-timed run times the cell assignment but never the
-  * within-cell pair verification — the skew probe's capped and uncapped
-  * hot-cell runs then time identically because neither runs the pairs.
+  * within-cell pair verification — a capped and an uncapped hot-cell
+  * run then time identically because neither runs the pairs.
   * count() also drops the final ORDER BY. The noop sink materializes every
   * output row with all columns — the work a user collecting the result
   * pays — while writing nothing; the observed count(1) makes the row

@@ -33,16 +33,4 @@ object SparkEntry {
     all.collect { case (k, q) if q.oracle.isDefined =>
       k -> q.oracle.get.replaceAll("\\s+", " ").trim
     }
-
-  /** The ONE canonical measured-run order, used by BOTH Bench and
-    * ScaleProbe: stateful streaming + cross-run stores first on a fresh
-    * heap, the rest alphabetical. Sharing the key is load-bearing — ops
-    * that build session-keyed caches (the simhash pair table, the
-    * shingle frame) must attribute the one-time build to the SAME op in
-    * both artifacts, or probe÷bench per-op ratios compare different
-    * cache states (r11: a 20× phantom growth from exactly this skew). */
-  def benchOrderKey(name: String): (Int, String) =
-    (if (name.startsWith("stream_") || name == "dedup_incremental" ||
-       name == "pipeline_online" || name == "pipeline_online_hybrid") 0
-     else 1, name)
 }

@@ -18,11 +18,11 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     engine.Core.pinOracleSession(spark)
-    // Oracle runs happen at the PINNED operating points: the scale knobs
-    // ScaleProbe sets (√N cell counts) parameterize the ENGINE, but the
-    // DuckDB oracles hard-pin the 16-cell replay — a conf inherited from
-    // an earlier run in the same session would report false mismatches
-    // on correct results. Clear them up front so the
+    // Oracle runs happen at the PINNED operating points: the √N cell
+    // counts a scaled run sets (as `-D` properties, see ScaleCorpus)
+    // parameterize the ENGINE, but the DuckDB oracles hard-pin the
+    // 16-cell replay — an inherited setting would report false
+    // mismatches on correct results. Clear them up front so the
     // oracle comparison can never diverge from the replayed SQL.
     Seq("spark.graft.knng.k", "spark.graft.semdedup.k")
       .foreach(spark.conf.unset)

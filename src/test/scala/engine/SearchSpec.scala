@@ -600,8 +600,7 @@ class SearchSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // recall@3 sits ≈ 0.26 at k=16 and ≈ 0.26 at k=32 (sf0.001,
     // sample mod 3) — the documented isotropic-data ceiling (clustered
     // real embeddings sit far higher); more cells can only shrink
-    // cells, so recall must not RISE materially with k. ScaleProbe
-    // writes the same readout for the 10× corpus into scaleprobe.json.
+    // cells, so recall must not RISE materially with k.
     def at(k: Int): Double = {
       spark.conf.set("spark.graft.knng.k", k.toString)
       try SearchQueries.blockedKnnRecall(spark, sf, 3)

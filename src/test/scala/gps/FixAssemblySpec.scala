@@ -2,7 +2,7 @@ package gps
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import gps.assemble.FixAssembly
+import gps.stream.FixAssembler
 import gps.parse.{NmeaFunctions => NF}
 
 /** End-to-end golden stream (FIXTURES.md §2): multi-sentence groups,
@@ -44,8 +44,8 @@ class FixAssemblySpec extends AnyFunSuite {
     ("B", 2L, ck("GPGGA,120000,5000.0000,S,00100.0000,W,1,05,2.0,10.0,M,1.0,M,,")),
     ("B", 3L, ck("GPRMC,120000,A,5000.0000,S,00100.0000,W,005.0,010.0,150324,001.0,E")))
 
-  private def assemble(ls: Seq[(String, Long, String)]) = FixAssembly.assemble(
-    NF.parseSentences(ls.toDF("device", "line_no", "line")))
+  private def assemble(ls: Seq[(String, Long, String)]) = FixAssembler.assemble(
+    NF.parseSentences(ls.toDF("device", "line_no", "line"))).toDF()
 
   lazy val fixes = assemble(lines).collect()
 
@@ -88,7 +88,7 @@ class FixAssemblySpec extends AnyFunSuite {
   }
 
   test("quality filter drops low-sat fixes (intended :13,:40-77 semantics)") {
-    val gated = FixAssembly.qualityFilter(assemble(lines), minSats = 6)
+    val gated = FixAssembler.qualityFilter(assemble(lines), minSats = 6)
     // device B has numsat=5 → dropped
     assert(gated.select("device").as[String].collect().toSet == Set("A"))
   }

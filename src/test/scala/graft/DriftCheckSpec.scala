@@ -84,18 +84,4 @@ class DriftCheckSpec extends AnyFunSuite {
     val p = tmpFile("""{"metric":"total","value":1.0,"queries":{"a":0.""")
     assert(DriftCheck.readQueries(p).isEmpty)
   }
-
-  test("readProbe picks us_per_row, never a us_per_row_prev sibling") {
-    val p = tmpFile(
-      """{"ops": {"op_a": {"sec": 1.5, "rows": 100, """ +
-      """"us_per_row_prev": 99.0, "us_per_row": 3.25}, """ +
-      """"op_b": {"sec": 0.5, "rows": 10, "us_per_row": 50.0}}}""")
-    val m = DriftCheck.readProbe(p)
-    assert(m("op_a") == ((1.5, 3.25)), s"got ${m.get("op_a")}")
-    assert(m("op_b") == ((0.5, 50.0)))
-  }
-
-  test("readProbe on a missing file returns empty") {
-    assert(DriftCheck.readProbe("/nonexistent/probe.json").isEmpty)
-  }
 }
