@@ -79,27 +79,19 @@ object Core {
               if e.getCondition != null &&
                 e.getCondition.contains("PARQUET_TYPE_ILLEGAL") =>
             val key = "spark.sql.legacy.parquet.nanosAsLong"
-            // scratch key = path + source length + mtime: a regenerated
-            // events.parquet at the same path (the doc'd testdata drift)
-            // gets a FRESH normalization instead of silently serving the
-            // previous generation's rows from the old scratch copy
-            val srcMeta = {
-              val f = new java.io.File(s"$dir/$name.parquet")
-              val parts = if (f.isDirectory)
-                f.listFiles().sortBy(_.getName).toSeq else Seq(f)
-              parts.map(p => s"${p.getName}:${p.length}:${p.lastModified}")
-                .mkString(",")
-            }
-            // scratch name = stable path-hash prefix + meta-hash suffix:
-            // the prefix lets a fresh normalization find and delete the
-            // superseded generations of the SAME source (r12 advisor —
-            // keying on the combined digest alone accumulated one
-            // scratch copy per testdata regeneration, unboundedly)
+            // scratch name = stable path-hash prefix + a hash of the
+            // source's fingerprint: a regenerated events.parquet at the
+            // same path (the doc'd testdata drift) gets a FRESH
+            // normalization instead of silently serving the previous
+            // generation's rows, and the prefix lets it find and delete
+            // the superseded generations of the SAME source (keying on the
+            // combined digest alone would accumulate one scratch copy per
+            // testdata regeneration, unboundedly)
             def md5hex(x: String) = java.security.MessageDigest
               .getInstance("MD5").digest(x.getBytes("UTF-8"))
               .map("%02x".format(_)).mkString
             val pathH = md5hex(s"$dir/$name").take(16)
-            val metaH = md5hex(srcMeta).take(16)
+            val metaH = md5hex(srcFingerprint(dir, name)).take(16)
             val scratch = s"$scratchRoot/graft_nanos_norm_${pathH}_$metaH"
             publishOnce(scratch) { tmp =>
               withConfs(spark)(key -> "true")(
@@ -109,7 +101,7 @@ object Core {
             // staging dir is a `<scratch>.tmp.<uuid>` sibling and an
             // in-callback sweep would delete its own data pre-move):
             // only exact-shape superseded generations of this source.
-            // SINGLE-PROCESS ASSUMPTION (r13 advisor): the sweep takes
+            // SINGLE-PROCESS ASSUMPTION: the sweep takes
             // no cross-process lock, so it is safe only under the
             // repo's sequential-runs convention (memory: bench/verify
             // never run concurrently). The age guard below is defense
@@ -240,7 +232,7 @@ object Core {
     * mtimes) for driver-side model memo keys: a cache keyed by corpus
     * DIR alone serves a stale model if the corpus is regenerated
     * in-place during one JVM session — the same drift the events
-    * scratch-copy key above guards against (r12 advisor). Missing table
+    * scratch-copy key above guards against. Missing table
     * → empty string (the memoized builder will fail on read anyway). */
   def srcFingerprint(dir: String, name: String): String = {
     val f = new java.io.File(s"$dir/$name.parquet")
@@ -258,7 +250,7 @@ object Core {
     * dir alone) — the keyed frames are drain-exempt, so a dir-only key
     * would serve stale cached partitions after an in-place testdata
     * regeneration, exactly the staleness the driver-side model memos
-    * already guard against (r13 advisor). */
+    * already guard against. */
   def fpKey(prefix: String, dir: String, table: String): String =
     s"$prefix:$dir#${srcFingerprint(dir, table)}"
 
@@ -287,17 +279,28 @@ object Core {
     * context stops. For run-UUID-scoped state dirs whose RESULT frame is
     * lazy (a parquet scan of the dir): the dir can't be destroyed inside
     * the query builder — the caller hasn't executed the plan yet — but
-    * must not leak on tmpfs either (no OS aging there; r18 advisor on
-    * merge_into). Session stop is the first point the engine knows no
-    * plan can still read the dir. Idempotent per dir; the age-guarded
-    * sibling sweeps stay as backstop for crashed JVMs. */
+    * must not leak on tmpfs either (no OS aging there). Session stop is
+    * the first point the engine knows no plan can still read the dir.
+    * One listener per context deletes every dir registered on it, so a
+    * caller that runs n times adds one listener, not n. Idempotent per
+    * dir; the age-guarded sibling sweeps stay as backstop for crashed
+    * JVMs. */
   def cleanupAtSessionStop(spark: SparkSession, dir: java.io.File): Unit =
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
+    stopCleanup.computeIfAbsent(spark.sparkContext, sc => {
+      val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          deleteRecursively(dir)
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+          stopCleanup.remove(sc)
+          dirs.forEach(d => deleteRecursively(d))
+        }
       })
+      dirs
+    }).add(dir): Unit
+
+  /** The dirs [[cleanupAtSessionStop]] deletes, per live context. */
+  private val stopCleanup = new java.util.concurrent.ConcurrentHashMap[
+    org.apache.spark.SparkContext, java.util.Set[java.io.File]]()
 
   /** Per-published-directory JVM monitors: `FileChannel.lock` throws
     * OverlappingFileLockException when two threads of ONE JVM contend for
@@ -371,9 +374,9 @@ object Core {
   * session — persist lifetime is one query, not one SparkSession. */
 object ScratchCache {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  // insertion/access-ordered: head = coldest, for the cap eviction below
-  private val keyed =
-    scala.collection.mutable.LinkedHashMap.empty[String, DataFrame]
+  private val keyed = scala.collection.mutable.HashMap.empty[String, DataFrame]
+  private val keyMonitors =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
   def persist(df: DataFrame): DataFrame = synchronized {
     val p = df.persist(); frames += p; p
   }
@@ -385,105 +388,23 @@ object ScratchCache {
     * pipeline materializes a signature table once and feeds every
     * downstream dedup stage from it. Exempt from [[drain]] (lifetime =
     * session); the frames are id+hash tables, orders of magnitude
-    * smaller than their source text.
+    * smaller than their source text. A keyed frame stays only where a
+    * later op of one pass reads it: a frame read by one op alone is that
+    * op's [[persist]], since a pipeline pass never runs an op twice.
     *
-    * BOUNDED (r20 verdict item 7): the registry is a size-accounted LRU.
-    * A long-lived session touching many corpora would otherwise grow
-    * storage memory monotonically (one PQ code table is ~25 MB per
-    * operating point) until the block manager starts evicting blocks
-    * IMPLICITLY — the exact disk-store pathology lesson 22 measured.
-    * When the session's total cached-block footprint exceeds
-    * `spark.graft.keyed.capBytes` (default 8 GiB), the coldest keyed
-    * frames are unpersisted explicitly (newest always survives); a later
-    * request for an evicted key re-derives it from the parquet inputs. */
-  /** Per-key build monitors: the frame BUILD (the by-name `df`, which
-    * may run whole Spark jobs — index training, ground-truth scans)
-    * must not run under the registry's global lock. Holding the global
-    * monitor across a multi-second build convoys every other
-    * persistKeyed caller behind it (r21: ann_recall_report's parallel
-    * rungs collapsed to serial-plus-contention on the cold path), and
-    * nests the global lock inside builder-owned locks — a cross-lock
-    * cycle waiting to happen. Same-key callers still serialize (one
-    * build, everyone else reuses); different keys build concurrently. */
-  private val keyMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+    * Builds hold a per-key monitor, never the registry's lock: the
+    * by-name `df` may run whole Spark jobs, and ann_recall_report's rung
+    * lanes build different keys at once (at local[32], `eu` beside
+    * `srp16`, and `ivfrank_np4` beside `ivfrank_np8`). Same-key callers
+    * serialize (one build, everyone else reuses). */
   def persistKeyed(key: String)(df: => DataFrame): DataFrame =
     keyMonitors.computeIfAbsent(key, _ => new Object).synchronized {
-      val hit = this.synchronized {
-        val h = keyed.remove(key)
-        h.foreach(f => keyed.put(key, f)) // bump to most-recently-used
-        h
-      }
-      hit.getOrElse {
-        val p = df.persist() // build OUTSIDE the global lock
-        this.synchronized {
-          // a racing same-key build (possible only if this key's monitor
-          // was recycled) must not clobber the registered frame — the
-          // loser's persist would leak with no reference to unpersist
-          keyed.get(key) match {
-            case Some(existing) =>
-              p.unpersist(): Unit
-              existing
-            case None =>
-              builtLog += key
-              keyed.put(key, p): Unit
-              evictOverCap(p.sparkSession)
-              p
-          }
-        }
+      synchronized(keyed.get(key)).getOrElse {
+        val p = df.persist()
+        synchronized { builtLog += key; keyed.put(key, p) }
+        p
       }
     }
-  /** BOUNDED registry (r20 verdict item 7): when the session's total
-    * cached-block footprint exceeds `spark.graft.keyed.capBytes`
-    * (default 8 GiB), unpersist the coldest keyed frames (newest always
-    * survives); a later request for an evicted key re-derives it from
-    * the parquet inputs. Without the cap a long-lived session touching
-    * many corpora grows storage memory monotonically (one PQ code table
-    * is ~25 MB per operating point) until the block manager evicts
-    * blocks IMPLICITLY — the disk-store pathology lesson 22 measured.
-    * The footprint is measured across ALL cached blocks (keyed frames,
-    * intra-query persists, live localCheckpoints): the cap protects the
-    * session's storage memory as a whole, and the keyed registry is the
-    * only pool with session lifetime to shed from. Caller must hold the
-    * global lock. */
-  /** The cached-RDD ids behind a persisted frame: the optimized plan
-    * (which runs AFTER cache substitution) exposes the
-    * InMemoryRelation(s) whose column-buffer RDDs hold the frame's
-    * blocks. Used to charge the keyed cap against the KEYED pool only. */
-  private def cachedRddIds(df: DataFrame): Seq[Int] =
-    try df.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        r.cacheBuilder.cachedColumnBuffers.id
-    } catch { case _: Throwable => Nil }
-
-  private def evictOverCap(s: SparkSession): Unit = {
-    val cap = s.conf.get("spark.graft.keyed.capBytes",
-      (8L << 30).toString).toLong
-    // KEYED-POOL ACCOUNTING (r21 advisor): the cap is charged against
-    // the keyed frames' OWN block footprint, never the session total —
-    // the old ALL-blocks measure meant that when transient intra-query
-    // persists / live localCheckpoints alone exceeded the cap, every
-    // insert stripped the ENTIRE keyed registry (except the newest) for
-    // zero footprint relief: silent cross-op reuse thrash. Now external
-    // pressure leaves the registry alone (only the block manager's own
-    // eviction can touch those blocks), and genuinely keyed-owned
-    // pressure sheds coldest-first exactly as before. The evicted key's
-    // build monitor is kept (keyMonitors): removing it could let two
-    // threads build the same key concurrently and leak the loser's
-    // persist — the map is bounded by the distinct keys a session ever
-    // touches.
-    def keyedFootprint(): Long = {
-      val ids = keyed.valuesIterator.flatMap(cachedRddIds).toSet
-      s.sparkContext.getRDDStorageInfo
-        .filter(i => ids.contains(i.id))
-        .map(i => i.memSize + i.diskSize).sum
-    }
-    while (keyed.size > 1 && keyedFootprint() > cap) {
-      val (k, f) = keyed.head // coldest
-      keyed.remove(k): Unit
-      f.unpersist(blocking = true): Unit
-    }
-  }
   /** Keys first REGISTERED (hence first materialized, and paid for)
     * since the last call, and the names of dirs [[Core.publishOnce]]
     * wrote — the bench drains this per timing window to attribute
@@ -498,7 +419,7 @@ object ScratchCache {
     val r = builtLog.toList; builtLog.clear(); r
   }
   /** Blocking by default: a lazy unpersist leaks block-eviction work into
-    * whatever runs next (r2's bench drifted 2-4x on untouched queries with
+    * whatever runs next (a bench drifted 2-4x on untouched queries with
     * `blocking = false` drains in between). */
   def drain(blocking: Boolean = true): Unit = synchronized {
     frames.foreach(_.unpersist(blocking)); frames.clear()

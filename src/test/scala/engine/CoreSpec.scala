@@ -10,10 +10,11 @@ import scala.jdk.CollectionConverters._
   * serialize and write exactly once; publishes of UNRELATED dirs overlap
   * instead of queueing on a global monitor; a failed produce step
   * deletes its temp dir and leaves no published marker; a publish that
-  * writes logs its dir as built. Also pins the scoping of Core.withConfs
-  * and Core.describe, and by source scans that engine code changes
-  * session settings, sets job descriptions and starts streams through
-  * nothing else. */
+  * writes logs its dir as built. Also pins the keyed registry's hit and
+  * build contract, the one session-stop listener per context, the
+  * scoping of Core.withConfs and Core.describe, and by source scans
+  * that engine code changes session settings, sets job descriptions
+  * and starts streams through nothing else. */
 class CoreSpec extends AnyFunSuite {
 
   private def freshDir(tag: String): String =
@@ -119,49 +120,30 @@ class CoreSpec extends AnyFunSuite {
     } finally cleanup(dir)
   }
 
-  test("persistKeyed evicts coldest-first past the declared cap and " +
-      "re-derives on next read (r20 verdict item 7)") {
+  test("persistKeyed reuses a hit without rebuilding and logs a first build once") {
     val spark = gps.TestSpark.spark
     import spark.implicits._
-    val capKey = "spark.graft.keyed.capBytes"
-    val prev = spark.conf.getOption(capKey)
+    ScratchCache.drainBuiltLog()
+    val a = ScratchCache.persistKeyed("corespec_keyed_a")(Seq(1, 2, 3).toDF("x"))
+    assert(a.count() == 3 && a.storageLevel.useMemory)
+    assert(ScratchCache.drainBuiltLog() == Seq("corespec_keyed_a"))
+    // a HIT never re-derives (the by-name builder must not run) and
+    // logs nothing
+    val a2 = ScratchCache.persistKeyed("corespec_keyed_a")(
+      sys.error("hit must not re-derive"))
+    assert(a2.count() == 3)
+    assert(ScratchCache.drainBuiltLog().isEmpty)
+  }
+
+  test("cleanupAtSessionStop adds at most one listener per session") {
+    val spark = gps.TestSpark.spark
+    val sc = spark.sparkContext
+    val dirs = (1 to 3).map(i => Files.createTempDirectory(s"graft_stop_$i").toFile)
     try {
-      // cap ABOVE any plausible test footprint first: both frames must
-      // coexist so the eviction below is attributable to the cap change
-      spark.conf.set(capKey, (64L << 30).toString)
-      ScratchCache.drainBuiltLog()
-      val a = ScratchCache.persistKeyed("corespec_lru_a")(
-        Seq(1, 2, 3).toDF("x"))
-      a.count() // materialize so the storage accounting sees its blocks
-      val b = ScratchCache.persistKeyed("corespec_lru_b")(
-        Seq(4, 5).toDF("x"))
-      b.count()
-      assert(ScratchCache.drainBuiltLog()
-        .count(_.startsWith("corespec_lru_")) == 2)
-      assert(a.storageLevel.useMemory && b.storageLevel.useMemory)
-      // a HIT never re-derives (the by-name builder must not run)
-      val b2 = ScratchCache.persistKeyed("corespec_lru_b")(
-        sys.error("hit must not re-derive"))
-      assert(b2.storageLevel.useMemory)
-      // 1-byte cap: the next INSERT must evict coldest-first — `a` then
-      // `b` (LRU order after the hit bump) go; the inserted key itself
-      // survives (the newest always does)
-      spark.conf.set(capKey, "1")
-      val c = ScratchCache.persistKeyed("corespec_lru_c")(
-        Seq(6).toDF("x"))
-      c.count()
-      assert(c.storageLevel.useMemory, "the newest entry must survive")
-      assert(!a.storageLevel.useMemory, "coldest entry must be evicted")
-      assert(!b.storageLevel.useMemory, "older entries evict before newest")
-      // an evicted key re-derives from its builder on the next read
-      spark.conf.set(capKey, (64L << 30).toString)
-      ScratchCache.drainBuiltLog()
-      ScratchCache.persistKeyed("corespec_lru_a")(Seq(9).toDF("x")): Unit
-      assert(ScratchCache.drainBuiltLog().contains("corespec_lru_a"))
-    } finally prev match {
-      case Some(v) => spark.conf.set(capKey, v)
-      case None => spark.conf.unset(capKey)
-    }
+      val before = org.apache.spark.graft.ListenerCount(sc)
+      dirs.foreach(Core.cleanupAtSessionStop(spark, _))
+      assert(org.apache.spark.graft.ListenerCount(sc) - before <= 1)
+    } finally dirs.foreach(Core.deleteRecursively)
   }
 
   test("boundedCollect returns within-bound rows and throws past the " +

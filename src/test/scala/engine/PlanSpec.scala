@@ -874,34 +874,42 @@ class PlanSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val allowed = Set(
       // corpus-derived signature/posting tables (id+hash scale)
       "eu", "srp16", "srpcls", "shingle60", "minhash_sig", "simhash_pairs8",
-      "rareposts", "rarecounts", "rarepairs", "chunkposts", "bm25posts",
+      "rarecounts", "rarepairs", "bm25posts",
       // tokenizer model artifacts (word-type / symbol-inventory scale)
       "bpewf", "bpefin", "bpevocab",
       // PQ code tables per operating point
-      "pqcodes_m", "pqrescodes_m",
+      "pqcodes_m",
       // kNN edge table + IVF ranked slice (consumer fan-out)
       "knng_edges_c", "ivfrank_np",
-      // ranked top-k / pair-table / funnel-input slices — ONE level
-      // below the declared serves: the declared
-      // single-op queries verifiably do not read these
-      "bm25top", "costop", "anngt", "evalexact", "evalscreen",
-      "urlkept", "deconids")
+      // ranked top-k slices — ONE level below the declared serves,
+      // each read by more than one op: the declared single-op queries
+      // verifiably do not read these
+      "bm25top", "costop")
     assert((prefixes ++ indirect) == allowed,
       s"keyed-frame set drifted:\n  new: ${(prefixes ++ indirect) -- allowed}" +
       s"\n  gone: ${allowed -- prefixes -- indirect}\n" +
       "update the allowlist ONLY with a boundary review (no declared " +
       "query may serve its own keyed output)")
-    // ---- index-build memos must also key on the source fingerprint
-    val memoFiles = Seq("llm/LlmQueries.scala", "llm/CurateQueries.scala",
-      "llm/SearchQueries.scala")
-    for (mf <- memoFiles) {
-      val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(
-        s"src/main/scala/engine/$mf"))
-      for (m <- "(\\w*[Ii]ndexCache)\\.computeIfAbsent\\(".r.findAllMatchIn(txt)) {
-        val w = txt.slice(m.start, math.min(txt.length, m.start + 300))
-        assert(w.contains("srcFingerprint") || w.contains("fpKey("),
-          s"$mf: ${m.group(1)} memo key lacks the source fingerprint:\n$w")
-      }
+    // ---- every driver-side memo must also key on the source
+    // fingerprint: in the key expression itself, or in a `val` the key
+    // interpolates (sphericalCellCache's `fp`)
+    val llmSrcs = srcs.filter(_.getPath.contains("/llm/"))
+    val memoSites = for {
+      f <- llmSrcs
+      txt = java.nio.file.Files.readString(f.toPath)
+      m <- "(\\w*Cache)\\.computeIfAbsent\\(".r.findAllMatchIn(txt)
+    } yield (f.getName, m.group(1), txt, m.end)
+    assert(memoSites.nonEmpty, "memo scan found no computeIfAbsent site")
+    memoSites.foreach { case (f, memo, txt, at) =>
+      val keyExpr = txt.slice(at, ",\\s*_ =>".r.findFirstMatchIn(txt.substring(at))
+        .fold(at)(at + _.start))
+      val before = txt.slice(math.max(0, at - 1500), at)
+      val fpVals = "\\$\\{?(\\w+)".r.findAllMatchIn(keyExpr).map(_.group(1))
+        .filter(v => s"val $v = [^\\n]*srcFingerprint".r
+          .findFirstIn(before).isDefined)
+      assert(keyExpr.contains("srcFingerprint") ||
+        keyExpr.contains("fpKey(") || fpVals.nonEmpty,
+        s"$f: $memo memo key lacks the source fingerprint:\n$keyExpr")
     }
     // ---- (b) dynamic: with the shared frames WARM (the risk case),
     // every boundary-adjacent declared query's plan still computes —
